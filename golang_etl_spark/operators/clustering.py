@@ -1014,10 +1014,12 @@ def kcore_peel(
 
     def restrict(e: DataFrame, surv: DataFrame) -> DataFrame:
         # survivor sets are vertex-sized (orders of magnitude below
-        # the edge list) — broadcast both semi-joins; the two
-        # identical broadcast subtrees share one exchange via
-        # ReusedExchange. On a billion-vertex graph pre-partition
-        # edges and survivors on the vertex instead.
+        # the edge list) — broadcast both semi-joins. The two
+        # broadcasts are NOT shared: the committed plan
+        # (plans/r18/graph_kcore_peel_after.txt) has two separate
+        # BroadcastExchanges, (4) and (7), each building the survivor
+        # set once. On a billion-vertex graph pre-partition edges and
+        # survivors on the vertex instead.
         return e.join(
             F.broadcast(surv), e.u == surv.vertex, "left_semi"
         ).join(F.broadcast(surv), F.col("v") == surv.vertex, "left_semi")
