@@ -1,1110 +1,74 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {core name: sec}, "sf": ...}.
+"""Canary over the driver contract: runs the CORE queries at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], each
+once to warm (plan compile, codegen) and once timed by ``df.count()``,
+then prints ONE JSON line as the last line on stdout:
 
-Each query is executed once to warm the JVM/code paths (plan compile,
-codegen) then timed over the best of 2 runs — we measure engine
-throughput, not first-call JIT.
+    {"metric": "core_query_wall_clock_total", "value": total_sec,
+     "unit": "sec", "sf": ..., "cpus": ..., "master": ...,
+     "queries": {core name: sec}}
 
-Output contract (round 6): the driver captures only a ~2 KB tail of
-stdout, and round 5's ~180-entry per-query line overflowed it — the
-head of the line (with the total) was cut off and the artifact parsed
-as null. Round-9 hardening on top of that: (a) per-query executor-
-state release (clearCache + unpersist of every persistent/
-localCheckpoint RDD; a residue at a query boundary is RECORDED in the
-detail artifact, never raised — the line must always print) so a
-long run cannot accumulate storage pressure that pollutes later
-timings, and (b) the metric line prints AFTER all streams and the
-session are stopped and the tracked temp roots are reaped (os._exit
-skips atexit, so the reap is explicit), followed by os._exit(0), so
-no teardown WARN chatter can land after it. So the printed line is now COMPACT: the
-all-queries total
-plus a fixed ~32-query CORE subset under stable names (present in
-every round's bench since r01, so cross-round per-query comparison
-survives registry growth) and, since round 12, a rotating `extras`
-map — EXTRAS_PER_ROUND non-headline queries per round, excluded from
-the headline total so it stays comparable. The full per-query map,
-per-family subtotals, the slowest-10 list, and (since round 13) each
-headline query's timed-run list are written to BENCH_DETAIL.json next
-to this file instead — since round 14 the rotating extras and the
-sweep artifact carry their run lists too (VERDICT r13 ask #2), so a
-non-headline outlier self-diagnoses the same way a headline one
-does. A byte guard trims the line (extras first) if
-it ever approaches the capture limit.
-
-NOTE on working-tree state after a driver round (VERDICT r13 ask #3):
-the driver's own bench run writes DETAIL_PATH unconditionally, and
-the driver does not set SPARK_GRAFT_BENCH_DETAIL_PATH — so after
-every driver round the committed BENCH_DETAIL.json snapshot sits
-modified in the working tree, holding exactly the run BENCH_r{N}.json
-summarizes. That dirtiness is EXPECTED, not an unsaved code change;
-local runs that should not touch the snapshot can point
-SPARK_GRAFT_BENCH_DETAIL_PATH elsewhere.
-
-Canonical-snapshot refresh policy (round 13, VERDICT r12 ask #4): the
-committed BENCH_DETAIL.json is refreshed AT MOST ONCE per round, from
-the FIRST full run at the round's final HEAD, regardless of where
-that run lands in the host's same-code band (~111-241s cumulatively as
-of r15; see BENCH_DETAIL_r*_local.json) — repeated best-of-band
-refreshes are a selection pressure on the snapshot even when each is
-honestly labeled. The band/variance story lives in the per-round
-`repeat_run_stats` and the BENCH_DETAIL_r*_local.json band notes, not
-in re-rolled canonical snapshots.
-
-Sweep mode (round 13, VERDICT r12 ask #6): ``python bench.py --sweep``
-times every registered query OUTSIDE the headline list (warm +
-best-of-2, same per-run executor-state release) and writes
-BENCH_DETAIL_r{N}_nonheadline.json, making the "every registered
-query has a perf sample at bench SF" property reproducible on demand
-instead of a hand-run artifact. Sweep numbers are one-off samples —
-NOT comparable to headline totals and NOT regression-tracked.
-
-Per-run timestamps (round 16, VERDICT r15 ask #2): r15's
-similarity_pq_fixed read [75.9, 21.2, 19.4] in the driver run vs ~2s
-local on byte-identical code — ALL timed runs slow, so best-of-N
-could not filter it, and the steal/GC gauges are per-run-total, so
-the stall could not be PLACED within the ~200s run. Every artifact
-(headline, extras, sweep) now carries `timed_run_spans`: per query,
-the [start, stop] offsets of each timed (post-warmup) execution on
-the loop's monotonic clock, index-aligned with `timed_runs`, plus a
-`run_t0_unix` wall-clock anchor for the whole loop — so a future
-all-runs-slow outlier can be aligned against the run timeline,
-neighboring queries, and externally-timestamped host logs. Cheap
-(two perf_counter reads the loop already takes) and detail-artifact
-only: the driver-visible line is unchanged.
+It shows that the contract's queries still build and run end to end.
+Its total is one sample per query with no spread, so it is not
+evidence of a performance change: perfbench/ is the benchmark of
+record.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import re
-import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Subprocess-test seam: run only these comma-separated query names
-# (tests/test_bench_harness.py exercises the full loop + exit path on
-# a 2-query subset without paying the 190-query wall).
-ONLY = {
-    n.strip()
-    for n in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-    if n.strip()
-}
-
-# Headline set: one-or-more entries per operator family (scan/ETL,
-# aggregation, join, window, top-k, set-op adjacent, every dedup
-# variant, similarity, text, as-of, sessionization, multimodal,
-# pandas-UDF, sketch, streaming) so the bench regression-guards the
-# whole surface, not just the relational core.
-HEADLINE = [
-    "agg_pricing_summary",
-    "join_revenue_by_segment",
-    "join_star_schema",
-    "window_running_sum",
-    "topk_orders_per_segment",
-    "agg_cube",
-    "etl_chunked_scan_reassembly",
-    "dedup_exact_text",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_cluster_cc",
-    "dedup_incremental_ingest",
-    "dedup_contamination_check",
-    "variant_json_agg",
-    "text_chunk_documents",
-    "sample_language_quota",
-    "range_join_bucketed",
-    "timeseries_gapfill",
-    "join_skew_salted",
-    "join_bucketed_colocated",
-    "array_funcs_per_order",
-    "text_tfidf_top_terms",
-    "sample_split_hash",
-    "similarity_topk_bruteforce",
-    "similarity_ann_lsh",
-    "similarity_ivf_topk",
-    "pipeline_corpus_curation",
-    "text_quality_stats",
-    "text_langid",
-    "asof_join_purchase_click",
-    "sessionize_events",
-    "multimodal_decode_features",
-    "applyinpandas_rank_orders",
-    "sketch_approx_distinct",
-    "streaming_tumbling_counts",
-    "sql_revenue_by_nation",
-    "sql_market_share",
-    "text_repetition_filter",
-    "text_pack_sequences",
-    "similarity_quantize_int8",
-    "sample_temperature_mix",
-    "etl_merge_upsert",
-    "similarity_pq_topk",
-    "map_funcs_per_customer",
-    "text_normalize",
-    "timeseries_anomaly_zscore",
-    "sql_waiting_suppliers",
-    "sql_custdist",
-    "similarity_pq_fixed",
-    "sketch_percentile_approx",
-    "text_pii_redact",
-    "etl_assign_sequential_ids",
-    "pipeline_training_export",
-    "sink_zorder_layout",
-    "sink_compact_small_files",
-    "similarity_matryoshka_topk",
-    # round 5: every registry tag family gets >= 1 headline entry so a
-    # plan regression in ANY family surfaces as a number, not just the
-    # families that happened to have headliners (VERDICT r04 item 4).
-    "filter_project",
-    "scalar_string_funcs",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "scalar_conditional",
-    "scalar_try_funcs",
-    "sort_limit_topn",
-    "profile_orders",
-    "udtf_word_positions",
-    "cogroup_order_reconciliation",
-    "join_semi",
-    "join_anti",
-    "join_cross",
-    "agg_distinct",
-    "agg_stats",
-    "agg_rollup",
-    "agg_grouping_sets",
-    "pivot_status_by_priority",
-    "unpivot_stack",
-    "subquery_scalar",
-    "setop_union_all",
-    "window_rank_dense_rank",
-    "window_lag_lead",
-    "window_distribution",
-    "window_range_frame",
-    "etl_seed_generator",
-    "etl_shard_union",
-    "streaming_session_window",
-    "streaming_stream_stream_join",
-    "sketch_exact_distinct",
-    "similarity_funnel_mrl_pq",
-    "window_global_rank",
-    "text_quality_bins",
-    "sink_range_sorted",
-    # round 5 additions
-    "dedup_exact_substring",
-    "dedup_semantic_prune",
-    "text_quality_gate_per_lang",
-    "curation_source_filter",
-    "text_bpe_pair_counts",
-    "pipeline_multimodal_curation",
-    "similarity_hard_negatives",
-    "sample_token_budget",
-    "dedup_fuzzy_keep_one",
-    "timeseries_rollup_hierarchy",
-    "etl_scd2_intervals",
-    "profile_orders_approx",
-    # round 5 additions: reconciliation diff, 5-table TPC-H profit
-    # shape, blocked edit-distance dedup, market-basket pair mining,
-    # deterministic per-group reservoir.
-    "etl_snapshot_diff",
-    "sql_product_profit",
-    "dedup_editdistance_blocked",
-    "agg_brand_cooccurrence",
-    "sample_reservoir_per_group",
-    "streaming_cdc_apply",
-    "sessionize_funnel_steps",
-    "timeseries_cohort_retention",
-    "etl_incremental_agg",
-    "sink_schema_evolution",
-    "etl_constraint_audit",
-    "text_boilerplate_ngrams",
-    "window_ratio_to_report",
-    "profile_histogram",
-    "sink_partition_backfill",
-    "window_gaps_islands",
-    "etl_deadletter_routing",
-    # round 5: persistent IVF index store (offline build + pruned search)
-    "similarity_index_build",
-    "similarity_index_search",
-    # round 5: robust stats, n-gram LM, graph kernel, arrow UDF tier
-    "profile_winsorized_stats",
-    "text_bigram_lm",
-    "graph_triangle_count",
-    "udf_arrow_scalar",
-    # round 5: DPP, pseudonymization, outer stream-stream join
-    "sink_dpp_join",
-    "etl_pseudonymize",
-    "streaming_stream_stream_left_outer",
-    "graph_pagerank_fixed",
-    "sample_epoch_repeat",
-    "profile_join_skew",
-    "sql_recursive_bfs",
-    "sql_lateral_topk",
-    "profile_psi_drift",
-    "sink_targeted_erasure",
-    "profile_quantile_normalize",
-    "similarity_index_incremental",
-    "dedup_crosslingual_pairs",
-    "timeseries_ewma",
-    "dedup_jaccard_prefix",
-    "json_nested_roundtrip",
-    "source_csv_corrupt_records",
-    "udtf_polymorphic_unpivot",
-    "sql_groupby_all",
-    "asof_join_nearest",
-    "window_first_last_nth",
-    # round 5: NAAJ, ordered listagg, deterministic mode+median,
-    # regr_* aggregates, linear interpolation, BPE merge training
-    "subquery_not_in_nullaware",
-    "agg_string_agg",
-    "agg_mode_median",
-    "profile_regression_per_flag",
-    "timeseries_interp_linear",
-    "text_bpe_train_merges",
-    "window_running_distinct",
-    "multimodal_shard_manifest",
-    "sink_observe_audit",
-    "agg_filter_clause",
-    "udf_map_in_arrow",
-    "sink_codec_matrix",
-    "join_null_safe_eq",
-    "etl_audit_columns",
-    "text_bpe_apply_stats",
-    "timeseries_rolling_slope",
-    "sample_weighted_reservoir",
-    "sessionize_native_window",
-    "profile_equidepth_bins",
-    "profile_leading_digit",
-    "graph_lpa_communities",
-    "pipeline_health_report",
-    "similarity_maxsim_topk",
-    "dedup_index_build",
-    "dedup_index_probe",
-    "text_perplexity_score",
-    "text_quality_classifier",
-    "sql_pipe_syntax",
-    "streaming_dedup_index_probe",
-    "etl_plan_balanced_ranges",
-    "window_time_range_frame",
-    "dedup_winnowing_fingerprints",
-    "agg_percentile_within_group",
-    "setop_intersect_all",
-    "setop_except_all",
-    "dedup_winnow_overlap",
-    "profile_corr_matrix",
-    "timeseries_seasonal_decompose",
-    "agg_bitwise",
-    # round 6: hash-gated fixed-rule BPE apply twin; mergeable HLL
-    # sketch store (build-once, merge-per-range) + its exact twin
-    "text_bpe_apply_fixed",
-    "sketch_hll_store_merge",
-    "sketch_hll_exact_twin",
-    # round 6: two-pass exact heavy hitters (partition-local
-    # Misra-Gries compression, targeted recount); custom Python
-    # DataSource (stride-chunked range scan as a pluggable source)
-    "text_heavy_hitters_twopass",
-    "source_python_datasource",
-    # round 7: asymmetric containment dedup (short-in-long pairs the
-    # symmetric Jaccard bar dilutes away); token-entropy quality signal
-    "dedup_containment_ngram",
-    "text_token_entropy",
-    # round 7: Gopher fixed-rule filter; head-domain caps; 2-criteria
-    # skyline (running-min rewrite); runtime bloom-filter join demo
-    "text_gopher_rules",
-    "curation_domain_caps",
-    "topk_pareto_frontier",
-    "join_bloom_runtime_filter",
-    # round 7: point-in-time SCD2 dimension join (as-of rewrite of the
-    # interval join); per-column entropy profiling
-    "join_point_in_time",
-    "profile_column_entropy",
-    # round 7: sliding COUNT DISTINCT via the explode-offsets rewrite
-    "timeseries_rolling_distinct_users",
-    # round 7: Spark 4 SQL scripting (WHILE/DECLARE sigma-clip script,
-    # unrolled-CTE oracle)
-    "sql_scripting_robust_mean",
-    # round 7: functional-dependency discovery (fused per-table
-    # multi-distinct profile)
-    "profile_functional_deps",
-    # round 7: Okapi BM25 top-K retrieval; exact two-sample KS drift
-    "text_bm25_topk",
-    "profile_ks_drift",
-    # round 7: fixed-round K-core peel (5th graph kernel)
-    "graph_kcore_peel",
-    # round 7: mergeable Count-Min frequency store + exact twin
-    "sketch_cms_store_freq",
-    "sketch_cms_exact_twin",
-    # round 7: hash-checked mergeable histogram store (range median)
-    "sketch_histogram_range_median",
-    # round 7: Markov transition matrix over user event journeys
-    "sessionize_markov_transitions",
-    # round 7: streaming CMS delta ingest (sketch store under arrival)
-    "streaming_cms_ingest",
-    # round 7: categorical mutual information; blocked record linkage
-    "profile_mutual_information",
-    "etl_record_linkage",
-    # round 7: SQL-defined functions; approx_top_k; mixture plan
-    "sql_udf_scalar",
-    "sql_udf_table",
-    "sketch_approx_topk",
-    "curation_mixture_plan",
-    # round 9: seeded-literal quantizer twins (hash gates for the
-    # trained IVF/PQ query paths); quality-aware cluster representative
-    # selection (keep-longest policy)
-    "similarity_ivf_seeded",
-    "similarity_pq_seeded",
-    "dedup_keep_longest",
-    # round 11: hash gate for the HLL profile pipeline (the bounded-
-    # column split that closed the profile_orders_approx conversion)
-    "profile_orders_approx_bounded",
-]
-
-
-# Total wall budget for the bench loop. The headline list has grown to
-# ~220 queries; at 4 executions each the loop alone is ~15 min at
-# sf0.1. Rather than risk an external timeout truncating the run to NO
-# output, the loop sheds repeat-runs as it burns budget: full
-# jitter-filtering (warm + best-of-3) while under half the budget,
-# warm + best-of-2 until DOUBLE the budget, and warm + single timed
-# run only in genuine overrun. The floor used to drop to a single
-# timed run at 85% — that made late-list queries carry residual
-# codegen warmup into their one measurement (r06 post-mortem: a query
-# measured 5.6s under the old floor and 2.8s warm), and the r09 run
-# showed the same single-run jitter on tail queries once the loop
-# passed 1x budget (join_bloom_runtime_filter 2.2x its best-of-2
-# level), so the best-of-2 band now extends to 2x budget (~200
-# sub-second tail queries cost ~1 extra minute — cheap against a
-# driver artifact that rates a row `weak` on one noisy sample). Every
-# query always gets >= 1 warm + 1 timed execution, so the JSON line
-# is always complete.
-BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
-
-# Stable CORE subset printed on the driver-visible line. These names
-# have been in the headline list (and thus in BENCH_r01..r04) since
-# the rounds they landed; do NOT rename or remove entries — the whole
-# point is a fixed cross-round comparison key set. New queries go in
-# HEADLINE (and hence BENCH_DETAIL.json), not here.
-CORE = [
-    "agg_pricing_summary",
-    "join_revenue_by_segment",
-    "join_star_schema",
-    "window_running_sum",
-    "topk_orders_per_segment",
-    "agg_cube",
-    "etl_chunked_scan_reassembly",
-    "dedup_exact_text",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_cluster_cc",
-    "text_tfidf_top_terms",
-    "similarity_topk_bruteforce",
-    "similarity_ann_lsh",
-    "similarity_ivf_topk",
-    "pipeline_corpus_curation",
-    "text_quality_stats",
-    "text_langid",
-    "asof_join_purchase_click",
-    "sessionize_events",
-    "multimodal_decode_features",
-    "applyinpandas_rank_orders",
-    "sketch_approx_distinct",
-    "streaming_tumbling_counts",
-    "sql_revenue_by_nation",
-    "sql_market_share",
-    "join_skew_salted",
-    "sample_split_hash",
-    "timeseries_gapfill",
-    "pipeline_training_export",
-]
-
-# Keep the printed line comfortably under the driver's stdout tail
-# capture (round 5 post-mortem: a longer line gets its HEAD cut,
-# which is where the total lives). The r11 capture demonstrably held
-# ~2.4 KB (the full 1.55 KB metric line plus ~850 B of WARN chatter
-# ahead of it), and that chatter is gone at source since r12, so a
-# 2000-byte ceiling keeps ~400 B of margin; the byte guard trims
-# extras entries before core entries (extras are rotating one-off
-# samples, the core map is the cross-round comparison key set).
-MAX_LINE_BYTES = 2000
-DETAIL_PATH = os.environ.get(
-    "SPARK_GRAFT_BENCH_DETAIL_PATH",
-    os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-)
-
-
-# Queries pinned to the full warm+best-of-3 policy regardless of where
-# the budget stands when the loop reaches them. Sub-second queries deep
-# in the HEADLINE list land in the best-of-2 band, where ONE noisy
-# sample becomes the recorded number (r09: window_gaps_islands 0.73s
-# driver vs 0.23s local — the round's only out-of-band row, on a plan
-# with nothing to blow up). The pin costs one extra sub-second run per
-# name; the list order itself stays frozen (cross-round comparison).
-ALWAYS_BEST_OF_3 = {"window_gaps_islands"}
-
-
-# Rotating extras slot (VERDICT r11 ask #3): the ~52 registered
-# queries outside HEADLINE are all hash-green for correctness but had
-# no timing row in any round's artifact. Each round times
-# EXTRAS_PER_ROUND of them — deterministic round-robin by round
-# number over the sorted non-headline set — in a separate `extras`
-# field, so every registered query gets a perf sample every ~5 rounds
-# while the headline `value` stays comparable across rounds (extras
-# are excluded from the total, the families map, slowest-10, and
-# repeat_run_stats).
-EXTRAS_PER_ROUND = 10
-
-
-def infer_round() -> int:
-    """Current round number, inferred from the BENCH_r{N}.json
-    artifacts the driver wrote for PRIOR rounds next to this file
-    (the driver writes round N's artifact after this process exits,
-    so max(N)+1 is the round being benched). Overridable for tests
-    and falls back to round 1 in a bare checkout."""
-    if "SPARK_GRAFT_BENCH_ROUND" in os.environ:
-        return int(os.environ["SPARK_GRAFT_BENCH_ROUND"])
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [0]
-    for fname in os.listdir(here):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
-def extras_for_round(round_no: int, non_headline: list[str]) -> list[str]:
-    """The deterministic extras slot for a round: EXTRAS_PER_ROUND
-    consecutive names from the sorted non-headline pool, starting at
-    a stride-by-round offset (wraparound), so consecutive rounds tile
-    the whole pool. Pure function so test_bench_contract can pin it."""
-    pool = sorted(non_headline)
-    if not pool:
-        return []
-    start = ((round_no - 1) * EXTRAS_PER_ROUND) % len(pool)
-    k = min(EXTRAS_PER_ROUND, len(pool))
-    return [pool[(start + i) % len(pool)] for i in range(k)]
-
-
-def n_runs_for(spent: float, name: str | None = None) -> int:
-    """Repeat-run policy by elapsed loop time: warm + best-of-3 while
-    under half the budget, warm + best-of-2 up to double the budget
-    (the whole tail in a normal full run — see BUDGET_S comment), and
-    warm + single timed run only in genuine overrun. Names in
-    ALWAYS_BEST_OF_3 keep the full policy at any elapsed time."""
-    if name in ALWAYS_BEST_OF_3 or spent <= 0.5 * BUDGET_S:
-        return 4
-    return 3 if spent <= 2 * BUDGET_S else 2
-
-
-def span_of(loop_start: float, t0: float, t1: float) -> list[float]:
-    """[start, stop] loop-clock offsets for one timed run. stop is
-    derived from the rounded start plus the measured duration — not
-    rounded independently — so `start < stop` holds by construction
-    even for a run shorter than the 1e-4 rounding quantum (ADVICE
-    r16); the max() floor overstates such a run's span by at most one
-    quantum, inside the span contract's 1e-3 width tolerance."""
-    start = round(t0 - loop_start, 4)
-    return [start, round(start + max(t1 - t0, 1e-4), 4)]
-
-
-def parse_proc_stat_cpu(text: str) -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from a /proc/stat aggregate
-    ``cpu `` line. steal is field 8 (0-indexed 7 after the label) —
-    CPU time the hypervisor ran someone else while this guest was
-    runnable. The total sums ONLY fields 0-7 (user..steal): the
-    kernel already folds ``guest``/``guest_nice`` (fields 8-9) into
-    ``user``/``nice``, so including them would double-count guest
-    time and understate steal% on hosts running nested VMs (ADVICE
-    r12). Pure so test_bench_contract can pin the field positions."""
-    for ln in text.splitlines():
-        if ln.startswith("cpu "):
-            fields = [int(x) for x in ln.split()[1:]]
-            steal = fields[7] if len(fields) > 7 else 0
-            return steal, sum(fields[:8])
-    return 0, 0
-
-
-def read_host_cpu_counters() -> tuple[int, int] | None:
-    """Best-effort /proc/stat read; None on non-Linux or locked /proc
-    (the gauge is diagnostic — it must never cost the run)."""
-    try:
-        with open("/proc/stat") as f:
-            return parse_proc_stat_cpu(f.read())
-    except Exception:
-        return None
-
-
-def steal_pct(before: tuple[int, int] | None, after: tuple[int, int] | None):
-    """Percent of host CPU capacity stolen by the hypervisor between
-    two counter snapshots, or None when unmeasurable. Round 12 found
-    same-HEAD bench totals split 124s vs 147-150s by day-part and
-    first suspected steal (a 32-way busy-loop probe read 8.9% — but
-    that was synthetic full-load, and this gauge's own in-run readings
-    came back 0.06-0.14% during both fast AND slow runs, ruling
-    sustained steal out). The gauge stays: it is exactly how that
-    hypothesis was settled with data, and a future driver-vs-local
-    delta that DOES arrive with elevated steal self-identifies as
-    environment, not code movement. Pure for tests."""
-    if not before or not after or after[1] <= before[1]:
-        return None
-    return round(100.0 * (after[0] - before[0]) / (after[1] - before[1]), 2)
-
-
-def jvm_gc_millis(spark):
-    """Cumulative stop-the-world GC time of the local JVM (driver ==
-    executor in local mode, so this is ALL GC the run pays), via the
-    management MXBeans. The companion gauge to host_steal_pct: round
-    12's same-HEAD total split (124s vs 147-150s) arrived with a 0.14%
-    in-run steal reading, which RULED OUT sustained hypervisor steal —
-    the slowdown signature was multi-second stalls on ~30 of 221
-    queries with the median query unchanged, which is what bursty full
-    GCs look like from the outside. Publishing the GC delta per run
-    decides that hypothesis with data instead of another post-mortem.
-    Best-effort: None when the MXBeans are unreachable."""
-    try:
-        beans = (
-            spark._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        total = 0
-        it = beans.iterator()
-        while it.hasNext():
-            t = it.next().getCollectionTime()
-            if t > 0:
-                total += t
-        return total
-    except Exception:
-        return None
-
-
-def gc_delta_sec(before, after):
-    """Seconds of stop-the-world GC between two jvm_gc_millis
-    snapshots, or None when either read failed. Pure for tests."""
-    if before is None or after is None or after < before:
-        return None
-    return round((after - before) / 1000.0, 2)
-
-
-def repeat_stats(timed_runs: dict[str, list[float]]) -> dict:
-    """Error bars for the round canary, computed from the repeat
-    executions the best-of-N loop already performs (VERDICT r10 ask
-    #5 made the hand-added r10 variance note a permanent output).
-    Per query the relative spread is (max-min)/min over the timed
-    (post-warmup) runs; the totals band [total_best, total_worst]
-    sums per-query best vs worst. A driver/local canary ratio inside
-    the band's implied ratio is single-host timing noise, not a
-    regression. Pure function so test_bench_contract.py can pin it."""
-    rel = {
-        n: round((max(r) - min(r)) / max(min(r), 1e-9), 4)
-        for n, r in timed_runs.items()
-        if len(r) >= 2
-    }
-    spreads = sorted(rel.values())
-
-    def pctl(q: float) -> float:
-        # standard nearest-rank: ceil(q*n)-1, clamped. The previous
-        # int(q*n) index was upper-biased (with two spreads the
-        # "median" was the max — ADVICE r11), slightly overstating
-        # typical jitter.
-        if not spreads:
-            return 0.0
-        return spreads[min(len(spreads) - 1, math.ceil(q * len(spreads)) - 1)]
-
-    total_best = round(sum(min(r) for r in timed_runs.values()), 4)
-    total_worst = round(sum(max(r) for r in timed_runs.values()), 4)
-    return {
-        "queries_with_repeats": len(rel),
-        "timed_runs_total": sum(len(r) for r in timed_runs.values()),
-        "total_best": total_best,
-        "total_worst": total_worst,
-        # unbiased denominator for the driver-vs-local canary ratio
-        # (VERDICT r11 ask #4): best-of-N systematically flatters the
-        # local side, so future rounds quote driver/total_mid.
-        "total_mid": round((total_best + total_worst) / 2, 4),
-        "rel_spread_median": pctl(0.5),
-        "rel_spread_p90": pctl(0.9),
-        "rel_spread_max": spreads[-1] if spreads else 0.0,
-        "widest": dict(sorted(rel.items(), key=lambda kv: -kv[1])[:5]),
-        "note": (
-            "within-run best-vs-worst of the timed (post-warmup) "
-            "executions per query; canary ratios inside "
-            "total_worst/total_best are host jitter, not regressions"
-        ),
-    }
-
-
-def compact_line(line_obj: dict) -> str:
-    """Serialize the driver-visible metric line, trimming map entries
-    if it would exceed MAX_LINE_BYTES — an over-long line gets its
-    HEAD cut by the driver's tail capture, which is where the total
-    lives (round-5 post-mortem). Shed order: the rotating `extras`
-    one-off samples first (they stay in BENCH_DETAIL.json), then from
-    the end of the cross-round core map. Mutates line_obj's maps.
-    Pure enough for test_bench_contract to pin the shed order."""
-    line = json.dumps(line_obj)
-    while len(line.encode()) > MAX_LINE_BYTES and line_obj.get("extras"):
-        line_obj["extras"].popitem()
-        line = json.dumps(line_obj)
-    while len(line.encode()) > MAX_LINE_BYTES and line_obj.get("queries"):
-        line_obj["queries"].popitem()
-        line = json.dumps(line_obj)
-    return line
-
-
-def release_executor_state(spark) -> None:
-    """Free EVERY block the previous run left in the executors: cached
-    tables AND persisted/localCheckpoint'd RDDs. clearCache() alone
-    only drops SQL-cache entries — the iterative kernels (k-core, CC
-    pointer-jumping) cut lineage with localCheckpoint(), whose blocks
-    live in getPersistentRDDs and survive clearCache. Across a
-    ~190-query single-JVM run those blocks accumulate into storage/GC
-    pressure that made an otherwise-unchanged query time 2-15x its
-    isolated cost, with a different victim set each run (r07/r08
-    post-mortems: similarity_ann_lsh 0.54s->8.00s under byte-identical
-    code). Called before every timed run; _assert_no_leaks() then
-    gates the query boundary."""
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    for jrdd in jsc.getPersistentRDDs().values():
-        jrdd.unpersist(True)  # blocking: blocks are gone before timing
-
-
-def leaked_rdd_count(spark) -> int:
-    """Persistent RDDs still registered after release_executor_state —
-    0 when per-query isolation holds. A nonzero count means later
-    timings may be polluted, but it must NOT abort the loop: a raise
-    mid-loop would lose the metric line entirely (the total-loss
-    failure mode the exit-path hardening exists to prevent). The
-    offending query names are recorded in BENCH_DETAIL.json instead
-    (``leaked_rdds``), where the round review picks them up."""
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def safe_boundary_release(spark, name, leaked_rdds, errors) -> None:
-    """Query-boundary executor-state release for the record-never-raise
-    zones (the extras slot and --sweep): a failed query can leave the
-    session/Py4J bridge broken, in which case the boundary release
-    itself raises — and an unguarded boundary call would abort the
-    whole loop with no artifact and no metric line (ADVICE r13). The
-    failure is recorded under ``<name>#boundary`` in the errors map;
-    the loop moves on and the line still prints."""
-    try:
-        release_executor_state(spark)
-        n_leaked = leaked_rdd_count(spark)
-        if n_leaked:
-            leaked_rdds[name] = n_leaked
-    except Exception as exc:  # noqa: BLE001 — record, never raise
-        errors[f"{name}#boundary"] = f"{type(exc).__name__}: {exc}"[:200]
-
-
-def purge_temp_artifacts() -> None:
-    """The exit contract below ends with os._exit(0), which skips
-    atexit — so the cleanup the streaming sinks and the layout store
-    registered (shutil.rmtree of their temp roots) never runs in a
-    bench process, leaking parquet-filled dirs per run. Reap them
-    explicitly from their inventories before printing the line."""
-    try:
-        from golang_etl_spark.streaming.jobs import reap_temp_roots
-
-        reap_temp_roots()
-    except Exception:
-        pass  # cleanup must never cost the metric line
-    try:
-        from golang_etl_spark.operators.layout import _reap_layout_artifacts
-
-        _reap_layout_artifacts()
-    except Exception:
-        pass
-
-
-# Loggers scoped to ERROR for the bench process ONLY (the test suite
-# still sees every Spark WARN). Two known benign repeat-run WARN
-# sources crowd the driver's ~2 KB stdout tail (VERDICT r11 nit #1):
-# - MapPartitionsRDD: release_executor_state deliberately unpersists
-#   the iterative kernels' localCheckpoint blocks at every query
-#   boundary (the frames are never re-read), and each unpersist WARNs
-#   that the truncated lineage cannot be recomputed.
-# - ResolveWriteToStream: every streaming query start re-notices that
-#   AQE is disabled for streaming — known, per-start, ~3 lines right
-#   before the metric line in a full run.
-_NOISY_BENCH_LOGGERS = (
-    "org.apache.spark.rdd.MapPartitionsRDD",
-    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
-)
-
-
-def silence_benign_bench_warns(spark) -> None:
-    """Scope-minimal log hygiene: the two known-benign WARN loggers
-    above to ERROR, bench process only. Best-effort: logging config
-    must never cost the run."""
-    try:
-        jvm = spark._jvm
-        for logger in _NOISY_BENCH_LOGGERS:
-            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                logger, jvm.org.apache.logging.log4j.Level.ERROR
-            )
-    except Exception:
-        pass
+# One or more queries per operator family: relational core, ETL, every
+# dedup variant, similarity, text, as-of, sessionization, multimodal,
+# pandas UDF, sketch, streaming and the curation pipelines.
+CORE = """
+    agg_pricing_summary join_revenue_by_segment join_star_schema
+    window_running_sum topk_orders_per_segment agg_cube
+    etl_chunked_scan_reassembly dedup_exact_text dedup_minhash_lsh
+    dedup_simhash dedup_ngram_jaccard dedup_embedding_cosine
+    dedup_cluster_cc text_tfidf_top_terms similarity_topk_bruteforce
+    similarity_ann_lsh similarity_ivf_topk pipeline_corpus_curation
+    text_quality_stats text_langid asof_join_purchase_click
+    sessionize_events multimodal_decode_features
+    applyinpandas_rank_orders sketch_approx_distinct
+    streaming_tumbling_counts sql_revenue_by_nation sql_market_share
+    join_skew_salted sample_split_hash timeseries_gapfill
+    pipeline_training_export
+""".split()
 
 
 def main() -> None:
-    from golang_etl_spark.registry import all_queries
+    from golang_etl_spark.registry import queries
     from golang_etl_spark.session import default_parallelism, get_spark
 
     spark = get_spark(app_name="golang_etl_spark_bench")
-    silence_benign_bench_warns(spark)
-    available = all_queries()
-    names = [n for n in HEADLINE if n in available]
-    if ONLY:
-        names = [n for n in names if n in ONLY]
-
+    contract = queries()
     timings: dict[str, float] = {}
-    timed_runs: dict[str, list[float]] = {}
-    timed_run_spans: dict[str, list[list[float]]] = {}
-    leaked_rdds: dict[str, int] = {}
-    cpu_counters_start = read_host_cpu_counters()
-    gc_millis_start = jvm_gc_millis(spark)
-    loop_start = time.perf_counter()
-    # wall-clock anchor for the monotonic span offsets below (VERDICT
-    # r15 ask #2): offset s on the loop clock == run_t0_unix + s in
-    # any externally-timestamped host log.
-    run_t0_unix = round(time.time(), 3)
-    for name in names:
-        fn = available[name].fn
-        runs = []
-        spans = []
-        # run 1 warms (JIT/codegen); best of the rest filters this
-        # host's multi-second scheduler jitter at local[32]. Executor
-        # state is released before every run: several operators
-        # persist() their self-join subtrees, and without the release
-        # a repeat run would time a cache read, not the query — and
-        # localCheckpoint blocks would accumulate across the loop.
-        n_runs = n_runs_for(time.perf_counter() - loop_start, name)
-        for _ in range(n_runs):
-            release_executor_state(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            n = df.count()
-            t1 = time.perf_counter()
-            runs.append(t1 - t0)
-            spans.append(span_of(loop_start, t0, t1))
-            assert n >= 0
-        timings[name] = round(min(runs[1:]), 4)
-        timed_runs[name] = [round(r, 4) for r in runs[1:]]
-        timed_run_spans[name] = spans[1:]
-        # query boundary: leave the JVM exactly as the next query
-        # expects it — empty SQL cache, empty persistent-RDD map.
-        # A leak is recorded, not raised: the line must still print.
-        release_executor_state(spark)
-        n_leaked = leaked_rdd_count(spark)
-        if n_leaked:
-            leaked_rdds[name] = n_leaked
-
-    # Rotating extras slot: after the headline loop, time this round's
-    # EXTRAS_PER_ROUND non-headline names (warm + best-of-2 — an
-    # occasional sample, not a regression-tracked number). Skipped
-    # under the ONLY test seam and in genuine budget overrun: the
-    # headline numbers and the metric line always come first.
-    extras: dict[str, float] = {}
-    extras_timed_runs: dict[str, list[float]] = {}
-    extras_timed_run_spans: dict[str, list[list[float]]] = {}
-    extras_errors: dict[str, str] = {}
-    round_no = infer_round()
-    if not ONLY:
-        pool = sorted(set(available) - set(HEADLINE))
-        for name in extras_for_round(round_no, pool):
-            if time.perf_counter() - loop_start > 2 * BUDGET_S:
-                break  # protect the line; missing extras are benign
-            # Unlike the headline list (proven at sf0.1 across many
-            # rounds), the rotating pool runs each name at bench SF
-            # for the first time — a failure is RECORDED, never
-            # raised: losing the metric line to an optional sample
-            # would be the round-5 total-loss failure mode again.
-            try:
-                fn = available[name].fn
-                runs = []
-                spans = []
-                for _ in range(3):
-                    release_executor_state(spark)
-                    t0 = time.perf_counter()
-                    df = fn(spark, SF_DIR)
-                    n = df.count()
-                    t1 = time.perf_counter()
-                    runs.append(t1 - t0)
-                    spans.append(span_of(loop_start, t0, t1))
-                    assert n >= 0
-                extras[name] = round(min(runs[1:]), 4)
-                extras_timed_runs[name] = [round(r, 4) for r in runs[1:]]
-                extras_timed_run_spans[name] = spans[1:]
-            except Exception as exc:  # noqa: BLE001 — see comment above
-                extras_errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-            safe_boundary_release(spark, name, leaked_rdds, extras_errors)
+    for name in CORE:
+        contract[name](spark, SF_DIR).count()  # warm
+        t0 = time.perf_counter()
+        contract[name](spark, SF_DIR).count()
+        timings[name] = round(time.perf_counter() - t0, 4)
+    master = spark.sparkContext.master
+    # Stop first so no teardown output lands after the metric line.
+    spark.stop()
 
     m = re.search(r"sf([\d.]+)", SF_DIR)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
-    total = round(sum(timings.values()), 4)
-
-    # Full artifact: every timing, per-family subtotals, slowest-10.
-    families: dict[str, float] = {}
-    for name, sec in timings.items():
-        spec = available.get(name)
-        fam = spec.tags[0] if spec and spec.tags else "untagged"
-        families[fam] = round(families.get(fam, 0.0) + sec, 4)
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
-    # Expensive-exact / cheap-approx twin pairs: the exact side exists
-    # to verify the approximate one, so its cost is deliberate — but a
-    # silent blow-up of the exact plan (e.g. an Expand regression on a
-    # Spark version bump) should surface as a NUMBER each round, not
-    # wait for a plan audit. Ratio = exact_sec / approx_sec.
-    twin_pairs = {
-        "profile_orders_exact_over_approx": (
-            "profile_orders", "profile_orders_approx"
-        ),
-        "hll_exact_twin_over_store_merge": (
-            "sketch_hll_exact_twin", "sketch_hll_store_merge"
-        ),
-    }
-    twin_ratios = {
-        label: round(timings[exact] / timings[approx], 2)
-        for label, (exact, approx) in twin_pairs.items()
-        if timings.get(exact) and timings.get(approx)
-    }
-    detail = {
-        "metric": "headline_query_wall_clock_total",
-        "value": total,
+    line = {
+        "metric": "core_query_wall_clock_total",
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "sf": sf,
-        # self-report the parallelism contract (VERDICT r17 item 2:
-        # the driver's scaling probe flagged suspect_cpus_ignored with
-        # nothing on the line to check against). cpus is the honored
-        # $SPARK_GRAFT_CPUS value, master the actual session master,
-        # default_parallelism the JVM's own view — three independent
-        # ways to verify the env var took effect. Note for the probe:
-        # at sf0.1 nearly every query is sub-second and dominated by
-        # fixed per-query driver/scheduling overhead, so wall time
-        # barely moves with core count (r17: a quiet 8-core run's
-        # TOTAL beat a noisy 32-core run's); core-ratios ~1 here are
-        # that fixed overhead, not an ignored setting.
+        "sf": float(m.group(1).rstrip(".")) if m else -1.0,
         "cpus": default_parallelism(),
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "n_queries": len(timings),
-        "budget_s": BUDGET_S,
-        "round": round_no,
+        "master": master,
         "queries": timings,
-        "families": dict(sorted(families.items())),
-        "twin_ratios": twin_ratios,
-        "slowest": slowest,
-        "extras": extras,
-        "extras_total": round(sum(extras.values()), 4),
-        # run lists for the rotating extras too (VERDICT r13 ask #2):
-        # a non-headline outlier self-diagnoses from its repeat
-        # pattern the same way a headline one does, instead of
-        # needing a judge-side re-run to adjudicate.
-        "extras_timed_runs": extras_timed_runs,
-        "extras_timed_run_spans": extras_timed_run_spans,
-        "extras_errors": extras_errors,
-        "leaked_rdds": leaked_rdds,
-        # hypervisor steal over the whole measurement window (see
-        # steal_pct docstring) — null when /proc/stat is unreadable
-        "host_steal_pct": steal_pct(cpu_counters_start, read_host_cpu_counters()),
-        # stop-the-world GC paid by the whole run (see jvm_gc_millis)
-        "jvm_gc_sec": gc_delta_sec(gc_millis_start, jvm_gc_millis(spark)),
-        "repeat_run_stats": repeat_stats(timed_runs),
-        # every timed (post-warmup) execution per query, in run order
-        # (VERDICT r12 ask #2): a driver-side outlier self-diagnoses
-        # from its repeat pattern — ALL runs slow = a stall window ate
-        # the query's whole warm+timed slot (environmental), ONE slow
-        # run with a normal best = single-sample jitter the best-of-N
-        # already filtered. r12's dedup_simhash 7.0s needed a judge
-        # re-run to adjudicate; this field makes that self-serve.
-        "timed_runs": timed_runs,
-        # [start, stop] loop-clock offsets per timed run, index-aligned
-        # with timed_runs, anchored by run_t0_unix (VERDICT r15 ask #2):
-        # places an all-runs-slow stall window like r15's
-        # similarity_pq_fixed ON the run timeline so it can be lined up
-        # against neighboring queries and host-side timestamps.
-        "run_t0_unix": run_t0_unix,
-        "timed_run_spans": timed_run_spans,
     }
-    with open(DETAIL_PATH, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=False)
-        f.write("\n")
-
-    # Compact driver-visible line: total + the stable CORE subset,
-    # plus the error-bar scalars (total under worst-case repeat
-    # timings and the p90 per-query relative spread) so the canary
-    # ratio ships with its noise band on the line itself.
-    rstats = detail["repeat_run_stats"]
-    core_timings = {n: timings[n] for n in CORE if n in timings}
-    line_obj = {
-        "metric": "headline_query_wall_clock_total",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "cpus": detail["cpus"],
-        "master": detail["master"],
-        "default_parallelism": detail["default_parallelism"],
-        "n_queries": len(timings),
-        "core_total": round(sum(core_timings.values()), 4),
-        "total_mid": rstats["total_mid"],
-        "total_worst": rstats["total_worst"],
-        "rel_spread_p90": rstats["rel_spread_p90"],
-        "host_steal_pct": detail["host_steal_pct"],
-        "jvm_gc_sec": detail["jvm_gc_sec"],
-        "queries": core_timings,
-        "extras": extras,
-        # actual artifact basename — honors SPARK_GRAFT_BENCH_DETAIL_PATH
-        # (the sweep line already reports its real path the same way)
-        "detail": os.path.basename(DETAIL_PATH),
-    }
-    line = compact_line(line_obj)
-
-    _print_line_and_exit(spark, line)
-
-
-def _print_line_and_exit(spark, line: str) -> None:
-    """Exit contract: the metric line must be the LAST thing on stdout.
-    Streaming queries leave StateStore maintenance threads and the
-    session teardown emits WARN chatter; both have previously landed
-    AFTER the metric line and cost rounds 5 and 7 their perf signal
-    (the driver keeps only a ~2 KB stdout tail). So: stop every
-    active stream, stop the session (all teardown noise prints now),
-    THEN print the line, flush, and hard-exit before any interpreter
-    shutdown hook can write another byte."""
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass  # a stream already winding down must not eat the line
-    # purge with the session still alive: the layout reaper's DROP
-    # TABLE half needs a working catalog (after spark.stop() it would
-    # silently no-op and leave metastore entries behind); the temp
-    # roots' only readers (streams, finished queries) are done.
-    purge_temp_artifacts()
-    try:
-        spark.stop()
-    except Exception:
-        pass
-    sys.stdout.write(line + "\n")
-    sys.stdout.flush()
-    os._exit(0)
-
-
-SWEEP_NOTE = (
-    "one-off sweep of every registered query outside the HEADLINE "
-    "list at the bench SF, using bench.py's measurement loop (warm + "
-    "best-of-2, executor state released between runs); recorded so "
-    "every registered query has a perf sample without waiting five "
-    "rounds of the rotating extras slot. NOT comparable to headline "
-    "totals and NOT regression-tracked."
-)
-
-
-def sweep() -> None:
-    """``--sweep`` mode (VERDICT r12 ask #6): time the whole
-    non-headline pool and write BENCH_DETAIL_r{N}_nonheadline.json,
-    reproducing the hand-run r12 artifact on demand. A per-query
-    failure is RECORDED, never raised (same total-loss-avoidance
-    stance as the extras slot); the SPARK_GRAFT_BENCH_ONLY seam
-    narrows the pool for the subprocess test."""
-    from golang_etl_spark.registry import all_queries
-    from golang_etl_spark.session import get_spark
-
-    available = all_queries()
-    pool = sorted(set(available) - set(HEADLINE))
-    if ONLY:
-        pool = [n for n in pool if n in ONLY]
-        if not pool:
-            # ONLY names only headline queries or misspellings: writing
-            # an empty artifact (n_queries 0, total 0, exit 0) would let
-            # a typo masquerade as a successful sweep (ADVICE r13).
-            sys.stderr.write(
-                "bench --sweep: SPARK_GRAFT_BENCH_ONLY matched no "
-                "non-headline query (headline-only names or a typo?); "
-                "refusing to write an empty sweep artifact\n"
-            )
-            sys.exit(2)
-
-    spark = get_spark(app_name="golang_etl_spark_bench_sweep")
-    silence_benign_bench_warns(spark)
-
-    timings: dict[str, float] = {}
-    timed_runs: dict[str, list[float]] = {}
-    timed_run_spans: dict[str, list[list[float]]] = {}
-    errors: dict[str, str] = {}
-    leaked_rdds: dict[str, int] = {}
-    loop_start = time.perf_counter()
-    run_t0_unix = round(time.time(), 3)  # wall anchor for the spans
-    for name in pool:
-        try:
-            fn = available[name].fn
-            runs = []
-            spans = []
-            for _ in range(3):
-                release_executor_state(spark)
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                n = df.count()
-                t1 = time.perf_counter()
-                runs.append(t1 - t0)
-                spans.append(span_of(loop_start, t0, t1))
-                assert n >= 0
-            timings[name] = round(min(runs[1:]), 4)
-            timed_runs[name] = [round(r, 4) for r in runs[1:]]
-            timed_run_spans[name] = spans[1:]
-        except Exception as exc:  # noqa: BLE001 — record, never raise
-            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        safe_boundary_release(spark, name, leaked_rdds, errors)
-
-    m = re.search(r"sf([\d.]+)", SF_DIR)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
-    detail = {
-        "metric": "nonheadline_query_wall_clock",
-        "note": SWEEP_NOTE,
-        "sf": sf,
-        "n_queries": len(timings),
-        "total": round(sum(timings.values()), 4),
-        "queries": timings,
-        # per-query timed (post-warmup) executions, same convention as
-        # the headline artifact (VERDICT r13 ask #2)
-        "timed_runs": timed_runs,
-        # per-run [start, stop] loop-clock offsets + wall anchor, same
-        # convention as the headline artifact (VERDICT r15 ask #2)
-        "run_t0_unix": run_t0_unix,
-        "timed_run_spans": timed_run_spans,
-        "errors": errors,
-        "leaked_rdds": leaked_rdds,
-    }
-    path = os.environ.get("SPARK_GRAFT_BENCH_SWEEP_PATH") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_DETAIL_r{infer_round()}_nonheadline.json",
-    )
-    with open(path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=False)
-        f.write("\n")
-    line = json.dumps(
-        {
-            "metric": "nonheadline_query_wall_clock",
-            "total": detail["total"],
-            "unit": "sec",
-            "sf": sf,
-            "n_queries": len(timings),
-            "n_errors": len(errors),
-            "detail": os.path.basename(path),
-        }
-    )
-    _print_line_and_exit(spark, line)
+    print(json.dumps(line), flush=True)
 
 
 if __name__ == "__main__":
-    sweep() if "--sweep" in sys.argv[1:] else main()
+    main()

@@ -2,7 +2,8 @@
 
 Every operator module registers its runnable queries here; the repo's
 ``__spark_entry__.py`` re-exports the registry as ``queries()`` /
-``oracle_sql()``. One place to see SURVEY.md §2 coverage.
+``oracle_sql()``, both in registration order. One place to see
+SURVEY.md §2 coverage.
 
 A query is a callable ``(spark, sf_dir) -> DataFrame`` plus (when the
 semantics are ANSI-SQL-expressible) an equivalent DuckDB SQL string
@@ -57,108 +58,6 @@ def all_queries() -> dict[str, QuerySpec]:
     return dict(_REGISTRY)
 
 
-def _driver_history() -> dict[str, tuple[int, bool]]:
-    """Per query name: (latest round checked, latest row green?).
-
-    The driver samples a 50-query subset per round and records results
-    in CORRECTNESS_r{N}.json. Parsing the round number from the
-    filename lets the rotation prioritise (a) names whose LATEST row
-    is non-green (a fix landed but is unproven until re-sampled),
-    (b) names never checked, (c) the stalest green names — instead
-    of degrading to insertion order once every name has one row.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    history: dict[str, tuple[int, bool]] = {}
-    root = Path(__file__).resolve().parent.parent
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                green = False
-            elif row.get("err") == "no_oracle":
-                # Rows-only query: can never hash-green, so a completed
-                # run (spark_rows recorded) is as good as it gets —
-                # re-prioritising it would soak sample slots forever.
-                green = row.get("spark_rows") is not None
-            else:
-                green = bool(
-                    row.get("rows_match")
-                    and row.get("schema_match")
-                    and row.get("hash_match")
-                    and not row.get("err")
-                )
-            prev = history.get(name)
-            if prev is None or rnd >= prev[0]:
-                history[name] = (rnd, green)
-    return history
-
-
-# Queries whose SEMANTICS (result values, schema, or oracle status)
-# changed in a given round: any driver row from an earlier round
-# proves nothing about the current code, so rotation treats such a
-# name as unverified until a row from >= that round lands. Entries
-# expire on their own — once the driver samples the name again, its
-# history round catches up and the normal rotation takes over.
-_SEMANTICS_CHANGED_ROUND = {
-    # round 9: CMS Carter-Wegman hash + full oracle; HLL exact-regime
-    # conversion; part-substrate triangle count; hash-gated funnel.
-    "sketch_cms_store_freq": 9,
-    "streaming_cms_ingest": 9,
-    "sketch_approx_distinct": 9,
-    "graph_triangle_count": 9,
-    # round 10: exact-regime oracle conversions — new columns/values
-    # AND new hash-checked status (old rows-only rows prove nothing).
-    "sketch_percentile_approx": 10,
-    "sketch_hll_store_merge": 10,
-    # round 10: pre-cut score rounding in the PQ/funnel pipelines
-    # (near-tie cut membership can legitimately differ from r09 rows).
-    "similarity_pq_seeded": 10,
-    "similarity_pq_topk": 10,
-    "similarity_funnel_mrl_pq": 10,
-    # round 10: BPE trainer/apply-stats converted to unrolled hash-
-    # checked oracles (apply-stats rounding convention also changed).
-    "text_bpe_train_merges": 10,
-    "text_bpe_apply_stats": 10,
-}
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    """Registry ordered for driver-sample priority (stable within ties):
-
-    1. latest row non-green OR stale (the query's semantics changed
-       after its last driver row — re-verify landed fixes; a fix that
-       never gets re-sampled stays unproven forever, while a new
-       query merely waits a round for its first row),
-    2. never driver-checked (new queries need their first row),
-    3. everything else, oldest-checked round first.
-    """
-    specs = all_queries()
-    history = _driver_history()
-    insertion = {n: i for i, n in enumerate(specs)}
-
-    def key(name: str) -> tuple[int, int, int]:
-        if name not in history:
-            return (1, 0, insertion[name])
-        rnd, green = history[name]
-        if rnd < _SEMANTICS_CHANGED_ROUND.get(name, 0):
-            green = False  # stale row: the code it checked is gone
-        return (0 if not green else 2, rnd, insertion[name])
-
-    return {n: specs[n] for n in sorted(specs, key=key)}
-
-
 def _fresh_cache(fn: QueryFn) -> QueryFn:
     """Driver-surface wrapper: drop cached blocks left by the PREVIOUS
     query before running this one.
@@ -181,13 +80,13 @@ def _fresh_cache(fn: QueryFn) -> QueryFn:
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: _fresh_cache(spec.fn) for name, spec in _ordered().items()}
+    return {name: _fresh_cache(spec.fn) for name, spec in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
-        for name, spec in _ordered().items()
+        for name, spec in all_queries().items()
         if spec.oracle is not None
     }
 
@@ -203,14 +102,22 @@ def _load_all() -> None:
     # imports are side-effectful (decorators run at import time)
     from golang_etl_spark import etl  # noqa: F401
     from golang_etl_spark.operators import (  # noqa: F401
+        active_users,
         arrays,
         asof,
         clustering,
+        colprofile,
         dedup,
+        fdeps,
+        freqitems,
+        frontier,
         layout,
+        linkage,
         multimodal,
+        pit_join,
         profiling,
         pyfuncs,
+        quality_rules,
         relational,
         sampling,
         sessionize,
@@ -219,25 +126,14 @@ def _load_all() -> None:
         skew,
         sketches,
         sql_api,
+        sql_scripting,
         text,
         timeseries,
         topk,
         vector_index,
         windows,
     )
-    from golang_etl_spark.sources import sinks  # noqa: F401
+    from golang_etl_spark.sources import pydatasource, sinks  # noqa: F401
     from golang_etl_spark.streaming import jobs  # noqa: F401
-
-    # imported LAST deliberately: rotation orders never-driver-checked
-    # queries by insertion index, so late additions must not displace
-    # the existing backlog from the driver's 50-query sample
-    from golang_etl_spark.operators import freqitems  # noqa: F401
-    from golang_etl_spark.sources import pydatasource  # noqa: F401
-    # round 7 additions — after the round-6 backlog modules
-    from golang_etl_spark.operators import frontier, quality_rules  # noqa: F401
-    from golang_etl_spark.operators import colprofile, pit_join  # noqa: F401
-    from golang_etl_spark.operators import active_users, sql_scripting  # noqa: F401
-    from golang_etl_spark.operators import fdeps  # noqa: F401
-    from golang_etl_spark.operators import linkage  # noqa: F401
 
     _LOADED = True

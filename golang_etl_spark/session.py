@@ -77,7 +77,7 @@ def get_spark(
         # 1.94/1.55s) with no measured winner elsewhere — the sorts it
         # skips are tiny at these key cardinalities while the hint
         # suppresses later broadcast re-planning. Measured and
-        # rejected; see OPTIMIZATION_r18.md.
+        # rejected.
         # deterministic timestamps vs the DuckDB oracle
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for every pandas-UDF / toPandas boundary

@@ -37,13 +37,6 @@ from golang_etl_spark.registry import register
 
 _COUNTER = itertools.count()
 
-# Temp roots created by the streaming sinks below, inventoried so a
-# harness that must hard-exit (bench.py ends with os._exit(0) to keep
-# its metric line the last stdout byte — atexit never runs there) can
-# reap them explicitly. Normal interpreter exits (pytest, the driver)
-# still get the atexit cleanup.
-_TEMP_ROOTS: list[str] = []
-
 
 def _tracked_tmpdir(prefix: str) -> str:
     import atexit
@@ -51,18 +44,9 @@ def _tracked_tmpdir(prefix: str) -> str:
     import tempfile
 
     root = tempfile.mkdtemp(prefix=prefix)
-    _TEMP_ROOTS.append(root)
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
 
-
-def reap_temp_roots() -> None:
-    """Remove every temp root this module created in this process.
-    Idempotent; safe to call with streams already stopped."""
-    import shutil
-
-    while _TEMP_ROOTS:
-        shutil.rmtree(_TEMP_ROOTS.pop(), ignore_errors=True)
 
 # ts declared per the actual fixture vintage (see _events_ts_kind):
 # INT64 TIMESTAMP(NANOS) drops read as LONG under nanosAsLong; current

@@ -1,77 +1,16 @@
-"""Driver-contract behavior of the registry itself: the
-never-checked-first ordering that converges the driver's 50-query
-rotation, and the per-query cache clearing that bounds a long
-session's memory."""
+"""Driver-contract behavior of the registry itself: registration order
+on the public surface, and the per-query cache clearing that bounds a
+long session's memory."""
 
 from golang_etl_spark import registry
 
 
-def test_rotation_priority_order():
-    history = registry._driver_history()
-    assert history, "CORRECTNESS_r*.json fixtures missing from repo root"
-    names = list(registry.queries())
-
-    def group(n):
-        if n not in history:
-            return 1  # never checked: after landed-but-unproven fixes
-        rnd, green = history[n]
-        if rnd < registry._SEMANTICS_CHANGED_ROUND.get(n, 0):
-            green = False  # stale: semantics changed after the row
-        return 0 if not green else 2
-
-    groups = [group(n) for n in names]
-    assert groups == sorted(groups), (
-        "rotation must order non-green-latest, then never-checked, "
-        "then green (stalest first)"
-    )
-    # within the green group, ordered oldest-checked-round first
-    green_rounds = [history[n][0] for n in names if group(n) == 2]
-    assert green_rounds == sorted(green_rounds)
-
-
-def test_crashed_row_reprioritized_over_green():
-    """sketch_percentile_approx crashed in r03 (canonicalizer) and has
-    not been re-sampled; it must sort before every green-latest name
-    so the driver's next 50-sample re-verifies the fix."""
-    history = registry._driver_history()
-    if "sketch_percentile_approx" not in history:
-        return
-    rnd, green = history["sketch_percentile_approx"]
-    if green:  # a clean driver row has landed since; nothing to assert
-        return
-    names = list(registry.queries())
-    pos = names.index("sketch_percentile_approx")
-    assert pos < 50, "non-green-latest query outside the driver's 50-sample"
-
-
-def test_bench_headline_covers_every_tag_family():
-    """Every registry tag must have >= 1 bench headline entry so a plan
-    regression in ANY operator family shows up in BENCH_r{N}.json."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", __file__.rsplit("/tests/", 1)[0] + "/bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    head = set(bench.HEADLINE)
+def test_public_surface_is_in_registration_order():
     specs = registry.all_queries()
-    assert head <= set(specs), f"stale headline names: {head - set(specs)}"
-    tag_to_names: dict = {}
-    for n, s in specs.items():
-        for t in s.tags:
-            tag_to_names.setdefault(t, set()).add(n)
-    uncovered = sorted(t for t, ns in tag_to_names.items() if not ns & head)
-    assert not uncovered, f"tag families missing from bench: {uncovered}"
-
-
-def test_successful_rows_only_not_reprioritized():
-    """no_oracle rows that completed (spark_rows recorded) can never
-    hash-green; re-prioritizing them would soak sample slots forever."""
-    history = registry._driver_history()
-    for name in ("similarity_ivf_kmeans", "similarity_pq_topk"):
-        if name in history:
-            assert history[name][1], f"{name} completed no_oracle row must count green"
+    assert list(registry.queries()) == list(specs)
+    assert list(registry.oracle_sql()) == [
+        n for n, s in specs.items() if s.oracle is not None
+    ]
 
 
 def test_ordering_preserves_full_registry():
@@ -99,8 +38,8 @@ def test_queries_wrapper_clears_cache(spark, sf_dir):
 
 
 def test_unwrapped_fn_identity_for_bench():
-    # bench times all_queries()[name].fn directly — the wrapper must
-    # not leak into the raw registry entries
+    # perfbench times all_queries()[name].fn directly — the wrapper
+    # must not leak into the raw registry entries
     spec = registry.all_queries()["filter_project"]
     assert spec.fn.__name__ == "filter_project"
 
@@ -137,31 +76,6 @@ def test_no_query_emits_complex_typed_columns(spark, sf_dir):
     finally:
         spark.catalog.clearCache()
     assert not offenders, f"complex-typed result columns: {offenders}"
-
-
-def test_semantics_changed_round_literal_has_unique_keys():
-    """A duplicate key in the _SEMANTICS_CHANGED_ROUND dict literal is
-    silently last-wins in Python; if the EARLIER entry were the intended
-    one, rotation priority would weaken without any visible failure
-    (VERDICT r10 nit #2). Parse the module AST and assert every key in
-    the literal is unique."""
-    import ast
-    import inspect
-
-    src = inspect.getsource(registry)
-    tree = ast.parse(src)
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "_SEMANTICS_CHANGED_ROUND"
-            for t in node.targets
-        ):
-            assert isinstance(node.value, ast.Dict)
-            keys = [ast.literal_eval(k) for k in node.value.keys]
-            dupes = {k for k in keys if keys.count(k) > 1}
-            assert not dupes, f"duplicate keys in _SEMANTICS_CHANGED_ROUND: {dupes}"
-            break
-    else:
-        raise AssertionError("_SEMANTICS_CHANGED_ROUND assignment not found")
 
 
 def test_no_oracle_set_is_frozen_to_the_sanctioned_trio():
