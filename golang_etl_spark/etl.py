@@ -7,16 +7,20 @@ chunks (:270-287) -> concurrent fetch over pooled connections (:41-112)
 (:114-193).
 
 Spark restatement: ``spark.read.jdbc(..., partitionColumn=pk,
-lowerBound, upperBound, numPartitions)`` generates the identical
-``pk >= ? AND pk < ?`` stride predicates server-side; the write is
+lowerBound, upperBound, numPartitions)`` generates the
+``pk >= ? AND pk < ?`` range predicates server-side; the write is
 ``df.write.option('maxRecordsPerFile', 100000).parquet(out)``. The
 channel, semaphores, row pool, and JSON round-trip disappear — Spark's
 task scheduler, Tungsten memory, and native parquet writer replace
 them. Unlike the reference (which silently drops rows on scan error,
 extractor.go:88-91), failures here fail the job.
 
-Pure planning helpers (stride math, JDBC options) are separated from
-execution so they unit-test without a live database.
+Partitions = min(stride chunks, ``fetch_concurrency``, session cores):
+each is one statement against the source (a full scan where the key
+has no index), and chunks beyond the cores buy no parallelism.
+
+Pure planning helpers (stride math, JDBC options, predicates) are
+separated from execution so they unit-test without a live database.
 """
 
 from __future__ import annotations
@@ -53,16 +57,16 @@ def plan_range_partitions(
 
     Spark's JDBC reader computes strides from (lower, upper,
     numPartitions); feeding upper = max_key + 1 and numPartitions =
-    ceil(span/stride) reproduces the reference's chunks. max_partitions
-    caps task-set size for huge key spans (at 100 TB you want fewer,
-    bigger partitions than key-stride math would give)."""
+    ceil(span/stride) reproduces the reference's chunks. Above
+    max_partitions the stride widens until the chunks fit;
+    num_partitions always counts the chunks."""
     if min_key > max_key:
         raise ValueError(f"empty key range: [{min_key}, {max_key}]")
     span = max_key - min_key + 1
     n = max(1, math.ceil(span / stride))
     if n > max_partitions:
-        n = max_partitions
-        stride = math.ceil(span / n)
+        stride = math.ceil(span / max_partitions)
+        n = math.ceil(span / stride)
     return RangePartitionPlan(
         lower_bound=min_key, upper_bound=max_key + 1, num_partitions=n, stride=stride
     )
@@ -74,7 +78,8 @@ def jdbc_scan_options(
     """Options dict for a partitioned JDBC read — the declarative
     equivalent of the reference's fetch goroutines + semaphore
     (extractor.go:41-112, :267). numPartitions both parallelizes and
-    caps concurrent connections (the semaphore's role)."""
+    caps concurrent connections (the semaphore's role); plan_jdbc_read
+    also caps it at the session's cores."""
     return {
         "url": url,
         "dbtable": table,
@@ -84,6 +89,27 @@ def jdbc_scan_options(
         "numPartitions": str(min(plan.num_partitions, fetch_concurrency)),
         "fetchsize": "10000",
     }
+
+
+def predicates_for_plan(qpk: str, plan: RangePartitionPlan) -> list[str]:
+    """The reference's stride loop rendered literally: one WHERE
+    clause per chunk (`pk >= lo AND pk < hi`), for Spark's
+    predicates-list JDBC API. Unlike partitionColumn bounds (numeric/
+    date columns only, uniform stride), an explicit predicate list
+    partitions on ANYTHING the database can evaluate — hash buckets of
+    a string key, tenant lists, the balanced ranges
+    etl_plan_balanced_ranges computes — which is the API to reach for
+    when the reference's integer-PK assumption breaks. `qpk` is the
+    dialect-quoted key. The first predicate also takes NULL keys, as
+    partitionColumn reads do; otherwise those rows vanish silently."""
+    out = []
+    lo = plan.lower_bound
+    while lo < plan.upper_bound:
+        hi = min(lo + plan.stride, plan.upper_bound)
+        out.append(f"{qpk} >= {lo} AND {qpk} < {hi}")
+        lo = hi
+    out[0] += f" OR {qpk} IS NULL"
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -99,21 +125,18 @@ def key_bounds(df: DataFrame, pk: str) -> tuple[int, int]:
     return int(row["mn"]), int(row["mx"])
 
 
-def read_shard_table(
+def plan_jdbc_read(
     spark: SparkSession, spec: JobSpec, job: TableJob
-) -> DataFrame:
-    """Read one shard's table. JDBC shards get a partitioned range scan;
-    parquet/file shards read directly (Spark splits files natively)."""
+) -> tuple[str, RangePartitionPlan]:
+    """The dialect-quoted key and the range plan both JDBC readers
+    scan by: min(stride chunks, fetch_concurrency, session cores)
+    partitions over one pushed-down MIN/MAX query's bounds (read
+    positionally: the engine controls the alias case). Spark's JDBC
+    writer quotes identifiers at CREATE time, so case-folding databases
+    (Derby, Postgres) store the exact-case name; and a hardcoded '"'
+    would make MySQL (no ANSI_QUOTES) read '"id" >= lo' as a
+    constant-true string comparison, a full scan per predicate."""
     location = spec.shards[job.db]
-    if spec.source_format == "parquet":
-        return spark.read.parquet(f"{location}/{job.table}.parquet")
-    # JDBC path: bounds via a one-row pushdown query, then the
-    # partitioned scan (requires a JDBC driver jar on the classpath).
-    # The pk is quoted with the engine's own dialect rules: Spark's
-    # JDBC writer quotes column identifiers at CREATE time, so
-    # case-folding databases (Derby, Postgres) store the exact-case
-    # name and an unquoted reference would fold away from it. Bounds
-    # read positionally — the engine controls the result's alias case.
     dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(location)
     qpk = dialect.quoteIdentifier(job.primary_key)
     bounds = spark.read.format("jdbc").options(
@@ -125,11 +148,40 @@ def read_shard_table(
         raise ValueError(
             f"table {job.table!r} has no rows / null pk {job.primary_key!r}"
         )
-    plan = plan_range_partitions(int(bounds[0]), int(bounds[1]), spec.stride)
+    cap = min(spec.fetch_concurrency, spark.sparkContext.defaultParallelism)
+    return qpk, plan_range_partitions(int(bounds[0]), int(bounds[1]), spec.stride, cap)
+
+
+def read_shard_table(
+    spark: SparkSession, spec: JobSpec, job: TableJob
+) -> DataFrame:
+    """Read one shard's table. JDBC shards get a partitionColumn range
+    scan of min(stride chunks, fetch_concurrency, cores) partitions;
+    parquet/file shards read directly (Spark splits files natively)."""
+    location = spec.shards[job.db]
+    if spec.source_format == "parquet":
+        return spark.read.parquet(f"{location}/{job.table}.parquet")
+    _qpk, plan = plan_jdbc_read(spark, spec, job)
     opts = jdbc_scan_options(
         location, job.table, job.primary_key, plan, spec.fetch_concurrency
     )
     return spark.read.format("jdbc").options(**opts).load()
+
+
+def read_shard_table_predicates(
+    spark: SparkSession, spec: JobSpec, job: TableJob
+) -> DataFrame:
+    """read_shard_table's twin on the predicates-list JDBC API: the same
+    plan, min(stride chunks, fetch_concurrency, cores) partitions, each
+    an explicit WHERE clause (jdbc(url, table, predicates=[...])) — the
+    reference's one-goroutine-per-chunk loop (extractor.go:274-287)."""
+    qpk, plan = plan_jdbc_read(spark, spec, job)
+    return spark.read.jdbc(
+        url=spec.shards[job.db],
+        table=job.table,
+        predicates=predicates_for_plan(qpk, plan),
+        properties={"fetchsize": "10000"},
+    )
 
 
 def extract_table(
@@ -1169,59 +1221,4 @@ def etl_plan_balanced_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("k").alias("lo_key"),
         F.max("k").alias("hi_key"),
         F.count("*").alias("n_keys"),
-    )
-
-
-def predicates_for_plan(
-    pk: str, plan: RangePartitionPlan, quote: str = ""
-) -> list[str]:
-    """The reference's stride loop rendered literally: one WHERE
-    clause per chunk (`pk >= lo AND pk < hi`), for Spark's
-    predicates-list JDBC API. Unlike partitionColumn bounds (numeric/
-    date columns only, uniform stride), an explicit predicate list
-    partitions on ANYTHING the database can evaluate — hash buckets of
-    a string key, tenant lists, the balanced ranges
-    etl_plan_balanced_ranges computes — which is the API to reach for
-    when the reference's integer-PK assumption breaks."""
-    qpk = f"{quote}{pk}{quote}" if quote else pk
-    out = []
-    lo = plan.lower_bound
-    while lo < plan.upper_bound:
-        hi = min(lo + plan.stride, plan.upper_bound)
-        out.append(f"{qpk} >= {lo} AND {qpk} < {hi}")
-        lo = hi
-    return out
-
-
-def read_shard_table_predicates(
-    spark: SparkSession, spec: JobSpec, job: TableJob
-) -> DataFrame:
-    """read_shard_table's twin on the predicates-list JDBC API: same
-    bounds discovery, same chunking, but each partition is an explicit
-    WHERE clause (jdbc(url, table, predicates=[...])). One task per
-    predicate — the most literal Spark rendering of the reference's
-    one-goroutine-per-chunk loop (extractor.go:274-287)."""
-    location = spec.shards[job.db]
-    dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(location)
-    qpk = dialect.quoteIdentifier(job.primary_key)
-    bounds = spark.read.format("jdbc").options(
-        url=location,
-        query=f"SELECT MIN({qpk}) AS mn, MAX({qpk}) AS mx FROM {job.table}",
-    ).load().first()
-    if bounds is None or bounds[0] is None:
-        raise ValueError(
-            f"table {job.table!r} has no rows / null pk {job.primary_key!r}"
-        )
-    plan = plan_range_partitions(int(bounds[0]), int(bounds[1]), spec.stride)
-    # Reuse the DIALECT-quoted identifier for the predicates too: a
-    # hardcoded '"' would make MySQL (default sql_mode, no ANSI_QUOTES)
-    # read '"id" >= lo' as a constant-true string comparison, so every
-    # partition would scan the whole table and the union would return
-    # N-fold duplicates.
-    preds = predicates_for_plan(qpk, plan)
-    return spark.read.jdbc(
-        url=location,
-        table=job.table,
-        predicates=preds,
-        properties={"fetchsize": "10000"},
     )

@@ -163,7 +163,9 @@ class JobSpec:
     stride: int = 10_000  # extractor.go:270
     max_records_per_file: int = 100_000  # extractor.go:119
     compression: str = "snappy"  # extractor.go:290
-    fetch_concurrency: int = 20  # extractor.go:267 (JDBC numPartitions cap)
+    # extractor.go:267, the JDBC connection cap: a JDBC read scans
+    # min(stride chunks, fetch_concurrency, session cores) partitions
+    fetch_concurrency: int = 20
     source_format: str = "jdbc"  # or "parquet" for file-based shards
 
     @staticmethod

@@ -50,13 +50,13 @@ _cleanup = {"registered": False, "root": None, "tables": set()}
 
 
 def _reap_layout_artifacts() -> None:
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        for t in sorted(_cleanup["tables"]):
-            try:
+    try:
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
+            for t in sorted(_cleanup["tables"]):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:
-                pass  # JVM may already be down; files go with the root
+    except Exception:
+        pass  # JVM may already be down; the files go with the root
     if _cleanup["root"]:
         shutil.rmtree(_cleanup["root"], ignore_errors=True)
 

@@ -14,10 +14,18 @@ documented seam; what this proves is the partitioned-JDBC plumbing the
 reference implements by hand (/root/reference/extractor.go:41-112).
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
-from golang_etl_spark.etl import extract_table, read_shard_table
+from golang_etl_spark.etl import (
+    extract_table,
+    plan_jdbc_read,
+    predicates_for_plan,
+    read_shard_table,
+    read_shard_table_predicates,
+)
 from golang_etl_spark.jobspec import JobSpec, TableJob
 from golang_etl_spark.sources.sinks import seed_shard, seed_table
 
@@ -69,9 +77,10 @@ def test_jdbc_roundtrip_values_exact(spark, seeded):
 def test_jdbc_scan_is_partitioned_range(spark, seeded):
     spec, job = seeded
     got = read_shard_table(spark, spec, job)
-    # stride math: ceil(5000/1000) = 5 partitions, capped at
-    # fetch_concurrency=4 by jdbc_scan_options
-    assert 1 < got.rdd.getNumPartitions() <= 4
+    # stride math: ceil(5000/1000) = 5 chunks, capped at
+    # fetch_concurrency=4 and at the session's cores
+    cores = spark.sparkContext.defaultParallelism
+    assert got.rdd.getNumPartitions() == min(5, 4, cores)
     # every partition non-empty — the bounds really fed the stride
     sizes = got.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
     assert all(s > 0 for s in sizes), sizes
@@ -91,12 +100,6 @@ def test_jdbc_predicates_api_matches_bounds_api(spark, seeded):
     literal rendering of the reference's stride loop) must return the
     same rows as the partitionColumn bounds read, with one partition
     per predicate."""
-    from golang_etl_spark.etl import (
-        plan_range_partitions,
-        predicates_for_plan,
-        read_shard_table_predicates,
-    )
-
     spec, job = seeded
     via_bounds = read_shard_table(spark, spec, job)
     via_preds = read_shard_table_predicates(spark, spec, job)
@@ -104,7 +107,40 @@ def test_jdbc_predicates_api_matches_bounds_api(spark, seeded):
     a = sorted(tuple(r) for r in via_bounds.collect())
     b = sorted(tuple(r) for r in via_preds.collect())
     assert a == b and len(a) > 0
-    # chunk predicates tile the key range with no overlap
-    plan = plan_range_partitions(1, len(a), spec.stride)
-    preds = predicates_for_plan("ID", plan)
+    # one partition per predicate of the plan both readers share
+    preds = predicates_for_plan(*plan_jdbc_read(spark, spec, job))
     assert len(preds) == via_preds.rdd.getNumPartitions()
+
+
+def test_both_readers_cap_partitions_at_cores(spark, seeded):
+    """stride 100 over 5,000 keys is 50 chunks; with 20 connection
+    slots both readers scan min(chunks, slots, cores) partitions and
+    return the same rows."""
+    spec, job = seeded
+    spec = dataclasses.replace(spec, stride=100, fetch_concurrency=20)
+    want = min(50, 20, spark.sparkContext.defaultParallelism)
+    via_bounds = read_shard_table(spark, spec, job)
+    via_preds = read_shard_table_predicates(spark, spec, job)
+    assert via_bounds.rdd.getNumPartitions() == want
+    assert via_preds.rdd.getNumPartitions() == want
+    a = sorted(tuple(r) for r in via_bounds.collect())
+    assert a == sorted(tuple(r) for r in via_preds.collect())
+    assert len(a) == N_ROWS
+
+
+def test_null_key_row_read_exactly_once(spark, tmp_path):
+    """A NULL key matches no range predicate; both readers must still
+    return that row once (the first partition takes `pk IS NULL`)."""
+    rows = [(None, "null-key")] + [(i, f"row{i}") for i in range(1, 1_001)]
+    df = spark.createDataFrame(rows, "id long, data string")
+    df.write.jdbc(URL, "null_keys", mode="overwrite")
+    job = TableJob(
+        table="null_keys", output=str(tmp_path / "out"), primary_key="id", db="derby0"
+    )
+    spec = JobSpec(shards={"derby0": URL}, jobs=(job,), stride=100)
+    parts = min(10, spec.fetch_concurrency, spark.sparkContext.defaultParallelism)
+    for read in (read_shard_table, read_shard_table_predicates):
+        got = read(spark, spec, job)
+        assert got.rdd.getNumPartitions() == parts, read.__name__
+        assert got.count() == len(rows), read.__name__
+        assert got.filter(F.col("id").isNull()).count() == 1, read.__name__
