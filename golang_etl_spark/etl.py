@@ -115,16 +115,6 @@ def predicates_for_plan(qpk: str, plan: RangePartitionPlan) -> list[str]:
 # ---------------------------------------------------------------------------
 # Execution
 # ---------------------------------------------------------------------------
-def key_bounds(df: DataFrame, pk: str) -> tuple[int, int]:
-    """Bounds discovery — parity with getPrimaryKeyRange
-    (/root/reference/extractor.go:195-211). The only collect() in the
-    pipeline, and it moves exactly two scalars."""
-    row = df.agg(F.min(pk).alias("mn"), F.max(pk).alias("mx")).first()
-    if row is None or row["mn"] is None:
-        raise ValueError(f"table has no rows / null pk {pk!r}")
-    return int(row["mn"]), int(row["mx"])
-
-
 def plan_jdbc_read(
     spark: SparkSession, spec: JobSpec, job: TableJob
 ) -> tuple[str, RangePartitionPlan]:
@@ -144,7 +134,7 @@ def plan_jdbc_read(
         query=f"SELECT MIN({qpk}) AS mn, MAX({qpk}) AS mx FROM {job.table}",
     ).load().first()
     if bounds is None or bounds[0] is None:
-        # same contract as key_bounds() on the parquet path
+        # no rows, or only NULL keys: there is no key range to plan
         raise ValueError(
             f"table {job.table!r} has no rows / null pk {job.primary_key!r}"
         )

@@ -40,7 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from golang_etl_spark.operators.dedup import _simhash_oracle, simhash_pairs
+from golang_etl_spark.operators.dedup import (
+    _minhash_oracle,
+    _simhash_oracle,
+    dedup_minhash_lsh,
+    simhash_pairs,
+)
 from golang_etl_spark.registry import register
 from golang_etl_spark.sources.catalog import load_table
 
@@ -67,9 +72,15 @@ CC_LOCAL_EDGE_THRESHOLD = 5_000_000
 # Label reach grows ~(JUMPS+1)^round, so rounds ~ log_{JUMPS+1}(diam).
 CC_JUMPS_PER_ROUND = 2
 
-_CC_ORACLE = f"""
+
+def _closure_cte(pairs: str) -> str:
+    """DuckDB twin of ``connected_components`` over the pair query
+    ``pairs``: the pairs, edges, reach and labels CTEs, where a
+    recursive CTE takes each vertex's minimum reachable doc_id — the
+    min-label fixpoint."""
+    return f"""
 WITH RECURSIVE pairs AS (
-  {_simhash_oracle()}
+  {pairs}
 ),
 edges AS (
   SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
@@ -84,7 +95,10 @@ reach AS (
 ),
 labels AS (
   SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-),
+),"""
+
+
+_CC_ORACLE = _closure_cte(_simhash_oracle()) + """
 sizes AS (
   SELECT cluster_id, COUNT(*) AS n FROM labels GROUP BY cluster_id
 )
@@ -297,26 +311,7 @@ def _cc_label_propagation(edges: DataFrame) -> DataFrame:
 # near-dup rate), so the `removed` set broadcasts onto the corpus scan
 # — the corpus itself is never shuffled, and the final aggregate
 # carries |langs| partial rows.
-from golang_etl_spark.operators.dedup import _minhash_oracle, dedup_minhash_lsh  # noqa: E402
-
-_FUZZY_KEEP_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-),
-edges AS (
-  SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_id_b AS src, doc_id_a AS dst FROM pairs
-),
-reach AS (
-  SELECT DISTINCT src AS doc_id, src AS label FROM edges
-  UNION
-  SELECT e.dst AS doc_id, r.label
-  FROM reach r JOIN edges e ON e.src = r.doc_id
-),
-labels AS (
-  SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-),
+_FUZZY_KEEP_ORACLE = _closure_cte(_minhash_oracle()) + """
 removed AS (
   SELECT doc_id FROM labels WHERE doc_id <> cluster_id
 )
@@ -378,24 +373,7 @@ def dedup_fuzzy_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-cluster argmax is a struct-max that partial-aggregates map-side,
 # so the exchange carries one row per cluster member, and the corpus
 # itself is never shuffled.
-_KEEP_LONGEST_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {{minhash}}
-),
-edges AS (
-  SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_id_b AS src, doc_id_a AS dst FROM pairs
-),
-reach AS (
-  SELECT DISTINCT src AS doc_id, src AS label FROM edges
-  UNION
-  SELECT e.dst AS doc_id, r.label
-  FROM reach r JOIN edges e ON e.src = r.doc_id
-),
-labels AS (
-  SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-),
+_KEEP_LONGEST_ORACLE = _closure_cte(_minhash_oracle()) + """
 members AS (
   SELECT l.cluster_id, l.doc_id, d.n_chars
   FROM labels l JOIN documents d ON d.doc_id = l.doc_id
@@ -415,13 +393,9 @@ ORDER BY cluster_id
 """
 
 
-def _keep_longest_oracle() -> str:
-    return _KEEP_LONGEST_ORACLE.format(minhash=_minhash_oracle())
-
-
 @register(
     "dedup_keep_longest",
-    oracle=_keep_longest_oracle(),
+    oracle=_KEEP_LONGEST_ORACLE,
     tags=("dedup", "llm"),
 )
 def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,12 +17,35 @@ Scale notes (100 TB stance):
 - the self-joins shuffle on the bucket key; hot buckets (stop-shingle
   skew) are removed by the df-cap filter before the join, and AQE
   skew-join handles the rest.
+
+LSH core: each banded-LSH step has one implementation here, and every
+operator that takes the step calls it (similarity.py's ANN included):
+
+- signatures: ``minhash_bands`` (MinHash band rows from a shingle
+  posting), ``simhash_bands`` (SimHash fingerprint and band rows from
+  text), ``hyperplane_bucket`` and ``embedding_signature`` (random-
+  hyperplane bucket over a plane matrix the caller owns);
+- candidates: ``band_pairs`` (band self-join to distinct canonical
+  ``a < b`` pairs) and ``_cosine_bucket_pairs`` (bucket self-join with
+  the cosine filter);
+- verify: ``jaccard_verify`` (exact Jaccard on per-document shingle
+  arrays, built by ``_shingle_arrays``).
+
+Persisted frames: ``band_pairs`` persists its band rows and
+``_cosine_bucket_pairs`` its signature rows, because both sides of the
+self-join read them; ``minhash_candidates`` persists the shingle
+posting and ``dedup_minhash_lsh`` the verify arrays. Nothing in this
+module unpersists them: ``minhash_candidates`` hands ``posting`` and
+``bands`` to its caller, and the registry's ``_fresh_cache`` clears
+the session's cache before the next registered query runs. The
+signature builders and ``jaccard_verify`` persist nothing, so the
+index probe built on them stays cache-free.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -110,15 +133,77 @@ def _shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode_outer("shingles").alias("shingle"),
     )
 
-# Embedding LSH: fixed random hyperplanes (seed 7), 4 planes → 16
-# buckets. More planes = smaller buckets, lower recall; 4 suits the
-# fixture's cosine range (max ~0.48). COSINE_MIN is the near-dup bar.
-N_PLANES = 4
-EMBED_DIM = 64
-COSINE_MIN = 0.35
-_PLANES = np.round(
-    np.random.RandomState(7).standard_normal((N_PLANES, EMBED_DIM)), 4
-)
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Candidate pairs of an LSH band table: the distinct ``(doc_id_a,
+    *payload_a, doc_id_b, *payload_b)`` with ``doc_id_a < doc_id_b``
+    for every two rows of ``bands`` that share a ``(band_id,
+    band_key)``. ``bands`` holds ``doc_id``, ``band_id``, ``band_key``
+    and any payload columns, which ride to both sides of the pair.
+
+    Persists ``bands``: both sides of the self-join read it, and
+    without the cache each side re-runs the signature aggregation.
+    The caller, or the registry's per-query cache clear, releases it.
+    Items colliding in several bands give one pair (the distinct)."""
+    payload = [c for c in bands.columns if c not in ("doc_id", "band_id", "band_key")]
+    bands = bands.persist()
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            *[
+                F.col(f"{side}.{c}").alias(f"{c}_{side}")
+                for side in "ab"
+                for c in ("doc_id", *payload)
+            ]
+        )
+        .distinct()
+    )
+
+
+def _shingle_arrays(posting: DataFrame) -> DataFrame:
+    """(doc_id, shingle) posting → (doc_id, sh), each document's sorted
+    shingle array. Postings are distinct per document, so ``sh`` is
+    the shingle set."""
+    return posting.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("shingle")).alias("sh")
+    )
+
+
+def jaccard_verify(
+    cand: DataFrame, arrs_a: DataFrame, arrs_b: DataFrame
+) -> DataFrame:
+    """Verify candidate pairs by exact shingle Jaccard: ``cand`` has
+    two id columns (a, b), ``arrs_a`` and ``arrs_b`` are the
+    ``(doc_id, sh)`` shingle arrays of each side. Returns ``(a, b,
+    jaccard)`` for the pairs with Jaccard >= JACCARD_MIN, rounded to 6
+    places. Persists nothing.
+
+    Each candidate document's array rides to the pair and is
+    intersected JVM-side: one row per (pair, side), where verifying on
+    exploded postings ships one row per (pair, shingle) through a
+    (doc, shingle)-keyed exchange and a counting aggregation."""
+    a, b = cand.columns
+    inter = (
+        cand.join(arrs_a.selectExpr(f"doc_id AS {a}", "sh AS sh_a"), a)
+        .join(arrs_b.selectExpr(f"doc_id AS {b}", "sh AS sh_b"), b)
+        .select(
+            a,
+            b,
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("shared"),
+        )
+    )
+    jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
+    return inter.filter(jac >= JACCARD_MIN).select(
+        a, b, F.round(jac, 6).alias("jaccard")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -168,13 +253,6 @@ _MINHASH_HASH_SPARK = (
 _MINHASH_HASH_DUCK = "('0x' || substr(md5(s || '#{i}'), 1, 15))::BIGINT"
 
 
-def _minhash_cols_duck() -> str:
-    return ",\n    ".join(
-        f"list_min(list_transform(shingles, s -> {_MINHASH_HASH_DUCK.format(i=i)})) AS h{i}"
-        for i in range(MINHASH_K)
-    )
-
-
 def _band_exprs() -> list[str]:
     # Band key = '_'-joined signature slice. concat_ws renders BIGINTs
     # identically in both dialects; no hashing needed for an equi-join
@@ -186,19 +264,41 @@ def _band_exprs() -> list[str]:
     return out
 
 
-def _minhash_oracle() -> str:
+def minhash_bands(posting: DataFrame) -> DataFrame:
+    """(doc_id, shingle) posting → (doc_id, band_id, band_key) band
+    rows: the MINHASH_K min-hashes as grouped MIN aggregates, cut into
+    LSH_BANDS band keys. The band index stores exactly these rows.
+    Persists nothing."""
+    sig = posting.groupBy("doc_id").agg(
+        *[
+            F.min(F.expr(_MINHASH_HASH_SPARK.format(i=i))).alias(f"h{i}")
+            for i in range(MINHASH_K)
+        ]
+    )
+    stack_args = ", ".join(f"{b}, band_{b}" for b in range(LSH_BANDS))
+    return sig.selectExpr("doc_id", *_band_exprs()).selectExpr(
+        "doc_id", f"stack({LSH_BANDS}, {stack_args}) AS (band_id, band_key)"
+    )
+
+
+def _minhash_bands_duck(where: str) -> str:
+    """DuckDB twin of ``_shingle_posting`` + ``minhash_bands`` over
+    ``documents{where}``: the sh, sig0, sig and bands CTEs."""
+    mins = ",\n    ".join(
+        f"list_min(list_transform(shingles, s -> {_MINHASH_HASH_DUCK.format(i=i)})) AS h{i}"
+        for i in range(MINHASH_K)
+    )
     band_union = "\n    UNION ALL\n    ".join(
         f"SELECT doc_id, {b} AS band_id, band_{b} AS band_key FROM sig"
         for b in range(LSH_BANDS)
     )
-    return f"""
-WITH sh AS (
+    return f"""sh AS (
   SELECT doc_id, {_SHINGLES_DUCK} AS shingles
-  FROM (SELECT doc_id, {_WORDS_DUCK} AS w FROM documents)
+  FROM (SELECT doc_id, {_WORDS_DUCK} AS w FROM documents{where})
 ),
 sig0 AS (
   SELECT doc_id,
-    {_minhash_cols_duck()}
+    {mins}
   FROM sh
 ),
 sig AS (
@@ -206,7 +306,12 @@ sig AS (
 ),
 bands AS (
     {band_union}
-),
+)"""
+
+
+def _minhash_oracle() -> str:
+    return f"""
+WITH {_minhash_bands_duck("")},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
   FROM bands a JOIN bands b
@@ -232,39 +337,13 @@ def minhash_candidates(
     tests/test_dedup_scale.py can measure candidate volume directly —
     the quantity that must grow linearly with the duplicate count for
     the operator to survive 100 TB. Both ``posting`` and ``bands``
-    come back persisted (the self-join reads each twice); callers that
-    run many invocations in one session should unpersist both when
-    done."""
+    come back persisted: ``posting`` here (the signature aggregation
+    and the verify arrays both read it), ``bands`` by ``band_pairs``.
+    Callers that run many invocations in one session should unpersist
+    both when done."""
     posting = _shingle_posting(spark, sf_dir).persist()
-    sig = posting.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_MINHASH_HASH_SPARK.format(i=i))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ]
-    )
-    banded = sig.selectExpr("doc_id", *_band_exprs())
-    stack_args = ", ".join(f"{b}, band_{b}" for b in range(LSH_BANDS))
-    # persisted: both sides of the candidate self-join read this (4
-    # rows per doc); without the cache each side re-runs the signature
-    # aggregation from the posting table.
-    bands = banded.selectExpr(
-        "doc_id", f"stack({LSH_BANDS}, {stack_args}) AS (band_id, band_key)"
-    ).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .distinct()
-    )
-    return posting, bands, cand
+    bands = minhash_bands(posting)
+    return posting, bands, band_pairs(bands)
 
 
 @register("dedup_minhash_lsh", oracle=_minhash_oracle(), tags=("dedup", "llm"))
@@ -275,58 +354,24 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipeline: repartition the single-file scan on doc_id (the fixture
     is one parquet file — without this every downstream stage is one
     task), explode distinct shingles to postings ONCE and ``persist``
-    (the posting table feeds the signature agg AND both verify sides;
-    unpersisted, the aliased self-joins re-derive the whole
-    shingle subtree per reference — the round-1 bench showed it
-    computed 4x), take the 16 min-hashes as grouped MIN aggregates over
-    *numeric* 60-bit hashes (map-side partial min in HashAggregate —
-    string mins fall back to SortAggregate) → 4 band keys → self-join
-    on band key → Jaccard verify through the persisted posting table
-    (shared-shingle counts), so candidate volume stays O(near-dups),
-    never O(n²)."""
+    (the posting table feeds the signature agg AND the verify arrays;
+    unpersisted, each reference re-derives the whole shingle subtree —
+    the round-1 bench showed it computed 4x), take the 16 min-hashes
+    as grouped MIN aggregates over *numeric* 60-bit hashes (map-side
+    partial min in HashAggregate — string mins fall back to
+    SortAggregate) → 4 band keys → self-join on band key → Jaccard
+    verify on per-document shingle arrays, so candidate volume stays
+    O(near-dups), never O(n²)."""
     posting, _bands, cand = minhash_candidates(spark, sf_dir)
-    # Verification via per-doc shingle ARRAYS (r17, the documented
-    # PPJoin trade from dedup_jaccard_prefix): carry each candidate
-    # doc's sorted shingle array to the pair and intersect JVM-side.
-    # The former exploded-postings verify shipped one row per (pair,
-    # shingle) through a (doc_id_b, shingle)-keyed exchange and paid a
-    # counting aggregation; this ships one row per (pair, side) and
-    # drops that exchange. Same exact Jaccard — postings are distinct
-    # per doc, so |array_intersect| == the old shared count.
-    #
     # The array table is PERSISTED (r18, VERDICT r17 item 5): the
     # persisted posting is hash-partitioned on (doc_id, shingle) —
     # its distinct() key — which does NOT cluster by doc_id alone, so
     # each of the two verify joins re-aggregated its own copy behind
-    # a fresh hashpartitioning(doc_id) exchange (the r17 after-plan's
-    # Exchanges (31)/(40); the r17 claim that the build was
-    # exchange-free was wrong). Caching the doc-count-sized array
-    # table pays that exchange once, and both joins then read an
-    # InMemoryRelation already partitioned on doc_id.
-    arrs = posting.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("sh")
-    ).persist()
-    inter = (
-        cand.join(
-            arrs.selectExpr("doc_id AS doc_id_a", "sh AS sh_a"), "doc_id_a"
-        )
-        .join(
-            arrs.selectExpr("doc_id AS doc_id_b", "sh AS sh_b"), "doc_id_b"
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            # postings are distinct per doc, so the collected array IS
-            # the shingle set: |sh| == the posting's n column
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("shared"),
-        )
-    )
-    jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return inter.filter(jac >= JACCARD_MIN).select(
-        "doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard")
-    )
+    # a fresh hashpartitioning(doc_id) exchange. Caching the
+    # doc-count-sized array table pays that exchange once, and both
+    # joins then read an InMemoryRelation already partitioned on doc_id.
+    arrs = _shingle_arrays(posting).persist()
+    return jaccard_verify(cand, arrs, arrs)
 
 
 # ---------------------------------------------------------------------------
@@ -349,12 +394,6 @@ def _simhash_bit_sum_pairs(dialect: str) -> list[tuple[str, str]]:
     return out
 
 
-def _simhash_bit_sums(dialect: str) -> str:
-    return ",\n    ".join(
-        f"{e} AS {a}" for e, a in _simhash_bit_sum_pairs(dialect)
-    )
-
-
 def _simhash_fp() -> str:
     return " + ".join(
         f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)"
@@ -362,7 +401,7 @@ def _simhash_fp() -> str:
     )
 
 
-def _simhash_bands(dialect: str) -> list[str]:
+def _simhash_band_exprs(dialect: str) -> list[str]:
     out = []
     for j in range(SIMHASH_BITS // SIMHASH_BAND_BITS):
         shift = j * SIMHASH_BAND_BITS
@@ -374,31 +413,65 @@ def _simhash_bands(dialect: str) -> list[str]:
     return out
 
 
-def _simhash_oracle() -> str:
+def simhash_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, fp, band_id, band_key) band rows: the
+    60-bit SimHash fingerprint from frequency-weighted ±1 bit votes
+    over each token's md5 nibbles, cut into 15-bit band keys.
+
+    The bit votes are one grouped aggregation over exploded tokens
+    (map-side partial sums — all-integer, stays in HashAggregate).
+    ``explode_outer``, not ``explode``: a non-outer explode's inferred
+    filter would push the split below the caller's repartition
+    Exchange. Persists nothing."""
+    toks = docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w").select(
+        "doc_id", F.explode_outer("w").alias("tok")
+    ).selectExpr("doc_id", "md5(tok) AS h")
+    sums = toks.groupBy("doc_id").agg(
+        *[F.expr(e).alias(a) for e, a in _simhash_bit_sum_pairs("spark")]
+    )
     n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    stack_args = ", ".join(f"{j}, band_{j}" for j in range(n_bands))
+    return (
+        sums.selectExpr("doc_id", f"CAST({_simhash_fp()} AS BIGINT) AS fp")
+        .selectExpr("doc_id", "fp", *_simhash_band_exprs("spark"))
+        .selectExpr(
+            "doc_id", "fp",
+            f"stack({n_bands}, {stack_args}) AS (band_id, band_key)",
+        )
+    )
+
+
+def _simhash_bands_duck() -> str:
+    """DuckDB twin of ``simhash_bands`` over ``documents``: the toks,
+    sums, fps, banded and bands CTEs."""
+    sums = ",\n    ".join(f"{e} AS {a}" for e, a in _simhash_bit_sum_pairs("duck"))
     band_union = "\n    UNION ALL\n    ".join(
         f"SELECT doc_id, fp, {j} AS band_id, band_{j} AS band_val FROM banded"
-        for j in range(n_bands)
+        for j in range(SIMHASH_BITS // SIMHASH_BAND_BITS)
     )
-    return f"""
-WITH toks AS (
+    return f"""toks AS (
   SELECT doc_id, md5(tok) AS h
   FROM (SELECT doc_id, unnest({_WORDS_DUCK}) AS tok FROM documents)
 ),
 sums AS (
   SELECT doc_id,
-    {_simhash_bit_sums('duck')}
+    {sums}
   FROM toks GROUP BY doc_id
 ),
 fps AS (
   SELECT doc_id, CAST({_simhash_fp()} AS BIGINT) AS fp FROM sums
 ),
 banded AS (
-  SELECT doc_id, fp, {", ".join(_simhash_bands('duck'))} FROM fps
+  SELECT doc_id, fp, {", ".join(_simhash_band_exprs('duck'))} FROM fps
 ),
 bands AS (
     {band_union}
-),
+)"""
+
+
+def _simhash_oracle() -> str:
+    return f"""
+WITH {_simhash_bands_duck()},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_a, a.fp AS fp_a,
                   b.doc_id AS doc_id_b, b.fp AS fp_b
@@ -419,50 +492,18 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components clustering operator
     (``operators/clustering.py``) can consume the same edge set.
 
-    SimHash near-dup: 60-bit fingerprint from token md5 nibbles
-    (frequency-weighted ±1 bit votes), candidates from 15-bit band
-    collisions, verified by Hamming distance <= HAMMING_MAX (3).
-
-    The bit votes are one grouped aggregation over exploded tokens
-    (map-side partial sums — all-integer, stays in HashAggregate); the
-    band self-join is the only other shuffle. Same stage-shape care as
-    MinHash: pinned repartition (AQE would coalesce the tiny-bytes,
-    heavy-CPU token stage to one task), ``explode_outer`` (a non-outer
-    explode's inferred filter would push the split below the
-    Exchange), and the band table persisted so the candidate
-    self-join's two sides don't each re-run the 60-sum aggregation."""
+    SimHash near-dup: 60-bit fingerprint (``simhash_bands``),
+    candidates from 15-bit band collisions (``band_pairs``), verified
+    by Hamming distance <= HAMMING_MAX (3). The band self-join is the
+    only shuffle besides the bit-vote aggregation. Same stage-shape
+    care as MinHash: pinned repartition (AQE would coalesce the
+    tiny-bytes, heavy-CPU token stage to one task), and the band table
+    persisted (by ``band_pairs``) so the candidate self-join's two
+    sides don't each re-run the 60-sum aggregation."""
     docs = load_table(spark, sf_dir, "documents").repartition(
         _pin_partitions(spark), "doc_id"
     )
-    toks = docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w").select(
-        "doc_id", F.explode_outer("w").alias("tok")
-    ).selectExpr("doc_id", "md5(tok) AS h")
-    sums = toks.groupBy("doc_id").agg(
-        *[F.expr(e).alias(a) for e, a in _simhash_bit_sum_pairs("spark")]
-    )
-    fps = sums.selectExpr("doc_id", f"CAST({_simhash_fp()} AS BIGINT) AS fp")
-    banded = fps.selectExpr("doc_id", "fp", *_simhash_bands("spark"))
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    stack_args = ", ".join(f"{j}, band_{j}" for j in range(n_bands))
-    bands = banded.selectExpr(
-        "doc_id", "fp", f"stack({n_bands}, {stack_args}) AS (band_id, band_val)"
-    ).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
+    cand = band_pairs(simhash_bands(docs))
     hamming = F.expr("bit_count(fp_a ^ fp_b)")
     return (
         cand.filter(hamming <= HAMMING_MAX)
@@ -511,21 +552,21 @@ WHERE shared * 1.0 / (n_a + n_b - shared) >= {JACCARD_MIN}
 """
 
 
-@register("dedup_ngram_jaccard", oracle=_NGRAM_ORACLE, tags=("dedup", "llm"))
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard dedup via an inverted shingle index:
-    explode distinct shingles to postings, drop stop-shingles with
-    document frequency > DF_CAP (skew control — the scalable standard),
-    self-join postings on shingle, count shared per pair, keep pairs
-    with Jaccard >= 0.7. |candidates| = Σ_shingle df² over rare
-    shingles only — never O(n²)."""
-    # persisted: the posting feeds the document-frequency filter AND
-    # both sides of the shingle self-join (3 references).
+def _shared_shingle_pairs(
+    spark: SparkSession, sf_dir: str, df_cap: int
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, n_a, n_b, shared) for every pair of
+    documents (doc_id_a < doc_id_b) sharing a shingle that occurs in at
+    most ``df_cap`` documents — the inverted-index candidate count
+    behind ``dedup_ngram_jaccard`` and ``containment_pairs``. |pairs| =
+    Σ_shingle df² over rare shingles only — never O(n²). Persists the
+    posting: the document-frequency filter AND both sides of the
+    shingle self-join read it (3 references)."""
     posting = _shingle_posting(spark, sf_dir).persist()
     rare = (
         posting.groupBy("shingle")
         .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= DF_CAP)
+        .filter(F.col("df") <= df_cap)
         .select("shingle")
     )
     p = posting.join(rare, "shingle")
@@ -539,12 +580,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_id_b"),
         F.col("n").alias("n_b"),
     )
-    pairs = (
+    return (
         a.join(b, "shingle")
         .filter(F.col("doc_id_a") < F.col("doc_id_b"))
         .groupBy("doc_id_a", "doc_id_b", "n_a", "n_b")
         .agg(F.count("*").alias("shared"))
     )
+
+
+@register("dedup_ngram_jaccard", oracle=_NGRAM_ORACLE, tags=("dedup", "llm"))
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard dedup via an inverted shingle index:
+    explode distinct shingles to postings, drop stop-shingles with
+    document frequency > DF_CAP (skew control — the scalable standard),
+    self-join postings on shingle, count shared per pair, keep pairs
+    with Jaccard >= 0.7 (see ``_shared_shingle_pairs``)."""
+    pairs = _shared_shingle_pairs(spark, sf_dir, DF_CAP)
     jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
     return pairs.filter(jac >= JACCARD_MIN).select(
         "doc_id_a",
@@ -628,30 +679,7 @@ def containment_pairs(
     """Cap-parameterized core of dedup_containment_ngram (see its
     docstring); df_cap is the absolute stop-shingle document-frequency
     ceiling and must grow with corpus duplication."""
-    posting = _shingle_posting(spark, sf_dir).persist()
-    rare = (
-        posting.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= df_cap)
-        .select("shingle")
-    )
-    p = posting.join(rare, "shingle")
-    a = p.select(
-        F.col("shingle"),
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("n").alias("n_a"),
-    )
-    b = posting.select(
-        F.col("shingle"),
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("n").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .groupBy("doc_id_a", "doc_id_b", "n_a", "n_b")
-        .agg(F.count("*").alias("shared"))
-    )
+    pairs = _shared_shingle_pairs(spark, sf_dir, df_cap)
     contain = F.col("shared") / F.least("n_a", "n_b").cast("double")
     jac = F.col("shared") / (
         F.col("n_a") + F.col("n_b") - F.col("shared")
@@ -668,37 +696,110 @@ def containment_pairs(
 # ---------------------------------------------------------------------------
 # 5. Embedding-cosine near-dup via random-hyperplane LSH buckets.
 # ---------------------------------------------------------------------------
-def _plane_literal(p: np.ndarray) -> str:
-    return ", ".join(format(float(v), ".4f") for v in p)
+# Embedding LSH: fixed random hyperplanes (seed 7), 4 planes → 16
+# buckets. More planes = smaller buckets, lower recall; 4 suits the
+# fixture's cosine range (max ~0.48). COSINE_MIN is the near-dup bar.
+N_PLANES = 4
+EMBED_DIM = 64
+COSINE_MIN = 0.35
+
+_EMB_DOUBLE_SPARK = "transform(embedding, x -> cast(x AS double))"
 
 
-def _bucket_expr(dialect: str) -> str:
-    """LSH bucket id: sum of sign bits of <embedding, plane_i>."""
+def _dot_spark(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+    )
+
+
+def hyperplanes(n: int, seed: int) -> np.ndarray:
+    """``n`` fixed random hyperplanes over EMBED_DIM dimensions, rounded
+    to the 4 decimals both dialects render as literals."""
+    return np.round(
+        np.random.RandomState(seed).standard_normal((n, EMBED_DIM)), 4
+    )
+
+
+_PLANES = hyperplanes(N_PLANES, 7)
+
+
+def hyperplane_bucket(planes: np.ndarray, dialect: str) -> str:
+    """LSH bucket id of the ``emb`` column: bit i is the sign of
+    <emb, planes[i]>, so ``planes`` with n rows give 2^n buckets."""
     terms = []
-    for i in range(N_PLANES):
-        lit = _plane_literal(_PLANES[i])
+    for i, plane in enumerate(planes):
+        lit = ", ".join(format(float(v), ".4f") for v in plane)
         if dialect == "spark":
-            dot = (
-                f"aggregate(zip_with(emb, array({lit}), (x, y) -> x * y), "
-                f"0D, (acc, x) -> acc + x)"
-            )
+            dot = _dot_spark("emb", f"array({lit})")
         else:
             dot = f"list_dot_product(emb, [{lit}])"
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << i} ELSE 0 END)")
     return " + ".join(terms)
 
 
-_EMBED_ORACLE = f"""
-WITH v AS (
+def embedding_signature(emb: DataFrame, planes: np.ndarray) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, emb, bucket, nrm): the vector as
+    doubles, its ``hyperplane_bucket`` under ``planes`` and its L2
+    norm. Persists nothing."""
+    return emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
+        "vec_id",
+        "emb",
+        f"{hyperplane_bucket(planes, 'spark')} AS bucket",
+        f"sqrt({_dot_spark('emb', 'emb')}) AS nrm",
+    )
+
+
+def _embedding_signature_duck(planes: np.ndarray) -> str:
+    """DuckDB twin of ``embedding_signature``: the v and sig CTEs."""
+    return f"""WITH v AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb
   FROM embeddings
 ),
 sig AS (
   SELECT vec_id, emb,
-         {_bucket_expr('duck')} AS bucket,
+         {hyperplane_bucket(planes, 'duck')} AS bucket,
          sqrt(list_dot_product(emb, emb)) AS nrm
   FROM v
-)
+)"""
+
+
+def _embedding_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``embedding_signature`` of the pinned embeddings scan under this
+    module's planes (seed 7)."""
+    emb = load_table(spark, sf_dir, "embeddings").repartition(
+        _pin_partitions(spark), "vec_id"
+    )
+    return embedding_signature(emb, _PLANES)
+
+
+def _cosine_bucket_pairs(
+    sig: DataFrame, extra: Column | None = None
+) -> tuple[DataFrame, Column]:
+    """Self-join of signature rows within a bucket, ``a.vec_id <
+    b.vec_id`` (and ``extra``, a condition over the ``a``/``b``
+    aliases), kept where the cosine is >= COSINE_MIN. Returns the
+    joined frame and its cosine column.
+
+    Persists ``sig``: both sides of the self-join read it; unpersisted,
+    each side re-runs the interpreted hyperplane dot products, and the
+    join's inferred isnotnull(bucket) filter would push the same
+    lambdas into the single-task scan stage. The executed plan is a
+    BroadcastHashJoin over the cached partitions (audited r18), so a
+    co-partitioning repartition on bucket only adds an exchange the
+    join never uses (A/B-ed: a pure ~0.3 s loss)."""
+    sig = sig.persist()
+    a, b = sig.alias("a"), sig.alias("b")
+    cos = F.expr(_dot_spark("a.emb", "b.emb")) / (F.col("a.nrm") * F.col("b.nrm"))
+    on = (F.col("a.bucket") == F.col("b.bucket")) & (
+        F.col("a.vec_id") < F.col("b.vec_id")
+    )
+    if extra is not None:
+        on = on & extra
+    return a.join(b, on).filter(cos >= COSINE_MIN), cos
+
+
+_EMBED_ORACLE = f"""
+{_embedding_signature_duck(_PLANES)}
 SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
        ROUND(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm), 6) AS cosine
 FROM sig a JOIN sig b
@@ -718,47 +819,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The bucket self-join is the only shuffle; candidate volume is
     Σ_bucket |bucket|²/2, i.e. ~n²/buckets — scale planes with n."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        _pin_partitions(spark), "vec_id"
-    )
-    v = emb.selectExpr(
-        "vec_id", "transform(embedding, x -> cast(x AS double)) AS emb"
-    )
-    # persisted: both self-join sides read sig; unpersisted, each side
-    # re-runs the interpreted hyperplane dot products, and the join's
-    # inferred isnotnull(bucket) filter would push the same lambdas
-    # into the single-task scan stage. Shape audited r18 (VERDICT r17
-    # item 7): the executed plan is a BroadcastHashJoin over the
-    # cached partitions — there is NO post-exchange reduce stage for
-    # size-first AQE coalescing to shrink, so the verify already runs
-    # at the pinned cache parallelism; a co-partitioning repartition
-    # on bucket was A/B-ed (interleaved, one session) and was a pure
-    # ~0.3 s LOSS (the extra exchange buys nothing a broadcast join
-    # uses). The r17 driver's 0.74x reading was host noise, as its
-    # own quiet 8-core run (0.635 s < r16's 0.672 s) indicated.
-    sig = v.selectExpr(
-        "vec_id",
-        "emb",
-        f"{_bucket_expr('spark')} AS bucket",
-        "sqrt(aggregate(zip_with(emb, emb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)) AS nrm",
-    ).persist()
-    a, b = sig.alias("a"), sig.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.emb, b.emb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-    )
-    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= COSINE_MIN)
-        .select(
-            F.col("a.vec_id").alias("vec_id_a"),
-            F.col("b.vec_id").alias("vec_id_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
+    pairs, cos = _cosine_bucket_pairs(_embedding_sig(spark, sf_dir))
+    return pairs.select(
+        F.col("a.vec_id").alias("vec_id_a"),
+        F.col("b.vec_id").alias("vec_id_b"),
+        F.round(cos, 6).alias("cosine"),
     )
 
 
@@ -775,35 +840,13 @@ INGEST_SPLIT = 250
 
 
 def _ingest_oracle() -> str:
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    band_union = "\n    UNION ALL\n    ".join(
-        f"SELECT doc_id, fp, {j} AS band_id, band_{j} AS band_val FROM banded"
-        for j in range(n_bands)
-    )
     return f"""
 WITH norm AS (
   SELECT doc_id,
          md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
   FROM documents
 ),
-toks AS (
-  SELECT doc_id, md5(tok) AS h
-  FROM (SELECT doc_id, unnest({_WORDS_DUCK}) AS tok FROM documents)
-),
-sums AS (
-  SELECT doc_id,
-    {_simhash_bit_sums('duck')}
-  FROM toks GROUP BY doc_id
-),
-fps AS (
-  SELECT doc_id, CAST({_simhash_fp()} AS BIGINT) AS fp FROM sums
-),
-banded AS (
-  SELECT doc_id, fp, {", ".join(_simhash_bands('duck'))} FROM fps
-),
-bands AS (
-    {band_union}
-),
+{_simhash_bands_duck()},
 exact_dups AS (
   SELECT DISTINCT i.doc_id
   FROM norm i JOIN norm c
@@ -843,24 +886,7 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     hashes = docs.select("doc_id", F.md5(norm).alias("h")).persist()
-
-    toks = docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w").select(
-        "doc_id", F.explode_outer("w").alias("tok")
-    ).selectExpr("doc_id", "md5(tok) AS h")
-    sums = toks.groupBy("doc_id").agg(
-        *[F.expr(e).alias(a) for e, a in _simhash_bit_sum_pairs("spark")]
-    )
-    fps = sums.selectExpr("doc_id", f"CAST({_simhash_fp()} AS BIGINT) AS fp")
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    stack_args = ", ".join(f"{j}, band_{j}" for j in range(n_bands))
-    bands = (
-        fps.selectExpr("doc_id", "fp", *_simhash_bands("spark"))
-        .selectExpr(
-            "doc_id", "fp",
-            f"stack({n_bands}, {stack_args}) AS (band_id, band_val)",
-        )
-        .persist()
-    )
+    bands = simhash_bands(docs).persist()
 
     is_corpus = F.col("doc_id") < INGEST_SPLIT
     exact = (
@@ -875,16 +901,16 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_exact", F.lit(True))
     )
     inc_b = bands.filter(~is_corpus).selectExpr(
-        "doc_id", "fp", "band_id", "band_val"
+        "doc_id", "fp", "band_id", "band_key"
     )
     cor_b = bands.filter(is_corpus).selectExpr(
-        "fp AS c_fp", "band_id AS c_band_id", "band_val AS c_band_val"
+        "fp AS c_fp", "band_id AS c_band_id", "band_key AS c_band_key"
     )
     near = (
         inc_b.join(
             cor_b,
             (F.col("band_id") == F.col("c_band_id"))
-            & (F.col("band_val") == F.col("c_band_val")),
+            & (F.col("band_key") == F.col("c_band_key")),
         )
         .filter(F.expr(f"bit_count(fp ^ c_fp) <= {HAMMING_MAX}"))
         .select("doc_id")
@@ -1187,16 +1213,7 @@ SEMANTIC_PRUNE_MIN = 0.2  # drop bar: cosine-to-representative
 
 
 _SEMANTIC_PRUNE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb
-  FROM embeddings
-),
-sig AS (
-  SELECT vec_id, emb,
-         {_bucket_expr('duck')} AS bucket,
-         sqrt(list_dot_product(emb, emb)) AS nrm
-  FROM v
-),
+{_embedding_signature_duck(_PLANES)},
 rep AS (
   SELECT bucket, MIN(vec_id) AS rep_id FROM sig GROUP BY bucket
 ),
@@ -1232,22 +1249,7 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned once with no bucket-partitioned window (which would cap
     parallelism at bucket count). Scale plane count with corpus size,
     exactly like dedup_embedding_cosine."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        _pin_partitions(spark), "vec_id"
-    )
-    sig = (
-        emb.selectExpr(
-            "vec_id", "transform(embedding, x -> cast(x AS double)) AS emb"
-        )
-        .selectExpr(
-            "vec_id",
-            "emb",
-            f"{_bucket_expr('spark')} AS bucket",
-            "sqrt(aggregate(zip_with(emb, emb, (x, y) -> x * y), 0D, "
-            "(acc, x) -> acc + x)) AS nrm",
-        )
-        .persist()
-    )
+    sig = _embedding_sig(spark, sf_dir).persist()
     rep_ids = sig.groupBy("bucket").agg(F.min("vec_id").alias("rep_id"))
     # rename every repv column so the final sig-vs-repv self-join has
     # no shared attribute names (Spark's ambiguous-self-join check)
@@ -1267,12 +1269,8 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = sig.alias("s")
     rv = F.broadcast(repv).alias("rv")
-    cos = (
-        F.expr(
-            "aggregate(zip_with(s.emb, rv.rep_emb, (x, y) -> x * y), 0D, "
-            "(acc, x) -> acc + x)"
-        )
-        / (F.col("s.nrm") * F.col("rv.rep_nrm"))
+    cos = F.expr(_dot_spark("s.emb", "rv.rep_emb")) / (
+        F.col("s.nrm") * F.col("rv.rep_nrm")
     )
     return s.join(rv, F.col("s.bucket") == F.col("rv.rbucket")).select(
         F.col("s.vec_id").alias("vec_id"),
@@ -1319,7 +1317,7 @@ SELECT LEAST(lang_a, lang_b) AS lang_lo,
 FROM pairs
 GROUP BY LEAST(lang_a, lang_b), GREATEST(lang_a, lang_b)
 ORDER BY lang_lo, lang_hi
-""".format(bucket=_bucket_expr("duck"), thr=COSINE_MIN)
+""".format(bucket=hyperplane_bucket(_PLANES, "duck"), thr=COSINE_MIN)
 
 
 @register(
@@ -1341,48 +1339,15 @@ def dedup_crosslingual_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-bounded final aggregate. The lang inequality prunes the
     candidate set map-side — same-language pairs (the vast majority)
     never reach the cosine verify."""
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        _pin_partitions(spark), "vec_id"
-    )
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
-    v = emb.selectExpr(
-        "vec_id", "transform(embedding, x -> cast(x AS double)) AS emb"
-    )
-    # persisted; shape audited r18 like dedup_embedding_cosine above:
-    # the self-join executes as a BroadcastHashJoin over the cached
-    # partitions, so a bucket co-partitioning repartition would add an
-    # exchange a broadcast join never uses (A/B-ed there: pure loss).
-    sig = (
-        v.selectExpr(
-            "vec_id",
-            "emb",
-            f"{_bucket_expr('spark')} AS bucket",
-            "sqrt(aggregate(zip_with(emb, emb, (x, y) -> x * y), 0D, "
-            "(acc, x) -> acc + x)) AS nrm",
-        )
-        .join(docs, "vec_id")
-        .persist()
-    )
-    a, b = sig.alias("a"), sig.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.emb, b.emb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-    )
-    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id"))
-            & (F.col("a.lang") != F.col("b.lang")),
-        )
-        .filter(cos >= COSINE_MIN)
-        .select(
-            F.least(F.col("a.lang"), F.col("b.lang")).alias("lang_lo"),
-            F.greatest(F.col("a.lang"), F.col("b.lang")).alias("lang_hi"),
-            cos.alias("cos"),
-        )
+    sig = _embedding_sig(spark, sf_dir).join(docs, "vec_id")
+    joined, cos = _cosine_bucket_pairs(sig, F.col("a.lang") != F.col("b.lang"))
+    pairs = joined.select(
+        F.least(F.col("a.lang"), F.col("b.lang")).alias("lang_lo"),
+        F.greatest(F.col("a.lang"), F.col("b.lang")).alias("lang_hi"),
+        cos.alias("cos"),
     )
     return (
         pairs.groupBy("lang_lo", "lang_hi")
@@ -1625,25 +1590,21 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     posting = _shingle_posting(spark, sf_dir).filter(
         ~F.expr(_IS_BATCH_SQL)
     )
-    sig = posting.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_MINHASH_HASH_SPARK.format(i=i))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ]
-    )
-    stack_args = ", ".join(f"{b}, band_{b}" for b in range(LSH_BANDS))
-    bands = sig.selectExpr("doc_id", *_band_exprs()).selectExpr(
-        "doc_id", f"stack({LSH_BANDS}, {stack_args}) AS (band_id, band_key)"
-    )
+    _write_bands(minhash_bands(posting), root, "overwrite")
+    _MINHASH_INDEX_BUILT[sf_dir] = root
+    return root
+
+
+def _write_bands(bands: DataFrame, root: str, mode: str) -> None:
+    """Write band rows in the index layout: partitioned by band_id,
+    row groups sorted by band_key."""
     (
         bands.repartition("band_id")
         .sortWithinPartitions("band_key")
-        .write.mode("overwrite")
+        .write.mode(mode)
         .partitionBy("band_id")
         .parquet(root)
     )
-    _MINHASH_INDEX_BUILT[sf_dir] = root
-    return root
 
 
 _MINHASH_CORPUS_POSTING_BUILT: dict[str, str] = {}
@@ -1675,31 +1636,7 @@ def build_minhash_corpus_postings(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
-def _index_bands_duck(where: str) -> str:
-    band_union = "\n    UNION ALL\n    ".join(
-        f"SELECT doc_id, {b} AS band_id, band_{b} AS band_key FROM sig"
-        for b in range(LSH_BANDS)
-    )
-    return f"""
-sh AS (
-  SELECT doc_id, {_SHINGLES_DUCK} AS shingles
-  FROM (SELECT doc_id, {_WORDS_DUCK} AS w FROM documents {where})
-),
-sig0 AS (
-  SELECT doc_id,
-    {_minhash_cols_duck()}
-  FROM sh
-),
-sig AS (
-  SELECT doc_id, {", ".join(_band_exprs())} FROM sig0
-),
-bands AS (
-    {band_union}
-)"""
-
-
-_INDEX_BUILD_ORACLE = f"""
-WITH {_index_bands_duck(f"WHERE NOT {_IS_BATCH_SQL}")}
+_INDEX_BUILD_ORACLE = "\nWITH \n" + _minhash_bands_duck(f" WHERE NOT {_IS_BATCH_SQL}") + """
 SELECT CAST(band_id AS INT) AS band_id,
        CAST(COUNT(*) AS BIGINT) AS n_postings,
        CAST(COUNT(DISTINCT band_key) AS BIGINT) AS n_keys,
@@ -1728,8 +1665,9 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INDEX_PROBE_ORACLE = f"""
-WITH {_index_bands_duck("")},
+# The probe's sh CTE has always read "documents )"; the space is kept so
+# the rendered oracle stays byte-identical.
+_INDEX_PROBE_ORACLE = "\nWITH \n" + _minhash_bands_duck(" ") + f""",
 cand AS (
   SELECT DISTINCT a.doc_id AS batch_doc, b.doc_id AS corpus_doc
   FROM bands a JOIN bands b
@@ -1780,21 +1718,6 @@ def _posting_from_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bands_from_posting(posting: DataFrame) -> DataFrame:
-    """(doc_id, shingle) posting → (doc_id, band_id, band_key) band
-    rows, the store's native shape."""
-    sig = posting.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_MINHASH_HASH_SPARK.format(i=i))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ]
-    )
-    stack_args = ", ".join(f"{b}, band_{b}" for b in range(LSH_BANDS))
-    return sig.selectExpr("doc_id", *_band_exprs()).selectExpr(
-        "doc_id", f"stack({LSH_BANDS}, {stack_args}) AS (band_id, band_key)"
-    )
-
-
 def ingest_into_minhash_index(
     spark: SparkSession, new_docs: DataFrame, sf_dir: str
 ) -> int:
@@ -1834,14 +1757,7 @@ def ingest_into_minhash_index(
     _posting_from_docs(fresh_postings).select("doc_id", "shingle").write.mode(
         "append"
     ).parquet(posting_root)
-    bands = _bands_from_posting(_posting_from_docs(fresh_bands))
-    (
-        bands.repartition("band_id")
-        .sortWithinPartitions("band_key")
-        .write.mode("append")
-        .partitionBy("band_id")
-        .parquet(root)
-    )
+    _write_bands(minhash_bands(_posting_from_docs(fresh_bands)), root, "append")
     return n_new
 
 
@@ -1907,7 +1823,7 @@ def probe_minhash_index(
     root = build_minhash_index(spark, sf_dir)
     posting_root = build_minhash_corpus_postings(spark, sf_dir)
     batch_posting = _posting_from_docs(batch_docs)
-    batch_bands = _bands_from_posting(batch_posting).selectExpr(
+    batch_bands = minhash_bands(batch_posting).selectExpr(
         "doc_id AS batch_doc", "band_id", "band_key"
     )
     idx = spark.read.parquet(root).selectExpr(
@@ -1931,41 +1847,8 @@ def probe_minhash_index(
         .select("batch_doc", "corpus_doc")
         .distinct()
     )
-    sa = batch_posting.selectExpr("doc_id AS batch_doc", "shingle")
-    sb = corpus_posting.selectExpr("doc_id AS sb_doc", "shingle AS shingle_b")
-    inter = (
-        cand.join(sa, "batch_doc")
-        .join(
-            sb,
-            (F.col("corpus_doc") == F.col("sb_doc"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sizes_a = batch_posting.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sizes_b = corpus_posting.groupBy("doc_id").agg(
-        F.count("*").alias("n_sh")
-    )
-    jac = F.col("n_inter") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
-    # sizes_a (the batch) is broadcast-small; sizes_b is one row per
-    # CORPUS doc — at scale that's not a broadcast, and `inter` is
-    # already candidate-sized, so let AQE pick the corpus-side join.
-    return (
-        inter.join(
-            F.broadcast(
-                sizes_a.selectExpr("doc_id AS batch_doc", "n_sh AS na")
-            ),
-            "batch_doc",
-        )
-        .join(
-            sizes_b.selectExpr("doc_id AS corpus_doc", "n_sh AS nb"),
-            "corpus_doc",
-        )
-        .filter(jac >= JACCARD_MIN)
-        .select("batch_doc", "corpus_doc", F.round(jac, 6).alias("jaccard"))
+    return jaccard_verify(
+        cand, _shingle_arrays(batch_posting), _shingle_arrays(corpus_posting)
     )
 
 

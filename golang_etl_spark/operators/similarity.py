@@ -10,8 +10,10 @@ Scale notes (100 TB stance):
 - brute-force top-k broadcasts the (tiny) query set against the full
   vector table: one scan, no shuffle of the big side, per-partition
   partial top-k via the window only over |queries| x n rows.
-- the ANN variant buckets both sides with fixed random hyperplanes and
-  joins on bucket id — the big side shuffles once on a 16-value key at
+- the ANN variant buckets both sides with fixed random hyperplanes
+  (``dedup.embedding_signature``, the LSH core the embedding dedup
+  operators share, over this module's own planes) and joins on bucket
+  id — the big side shuffles once on a 16-value key at
   most (broadcast of queries avoids even that); recall tuned by plane
   count, which should grow with n.
 - centroid analytics: explode to (label, dim) and partial-aggregate —
@@ -30,6 +32,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from golang_etl_spark.functions import vector as V
+from golang_etl_spark.operators.dedup import (
+    _EMB_DOUBLE_SPARK,
+    EMBED_DIM,
+    _dot_spark,
+    _embedding_signature_duck,
+    embedding_signature,
+    hyperplanes,
+)
 from golang_etl_spark.registry import register
 from golang_etl_spark.sources.catalog import load_table
 
@@ -57,34 +67,7 @@ _SCORE_CUT_DECIMALS = 9
 
 # ANN hyperplanes (seed 11 — distinct from dedup's seed-7 planes).
 ANN_PLANES = 8
-EMBED_DIM = 64
-_PLANES = np.round(
-    np.random.RandomState(11).standard_normal((ANN_PLANES, EMBED_DIM)), 4
-)
-
-_EMB_DOUBLE_SPARK = "transform(embedding, x -> cast(x AS double))"
-
-
-def _dot_spark(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-    )
-
-
-def _plane_literal(p: np.ndarray) -> str:
-    return ", ".join(format(float(v), ".4f") for v in p)
-
-
-def _bucket_expr(dialect: str) -> str:
-    terms = []
-    for i in range(ANN_PLANES):
-        lit = _plane_literal(_PLANES[i])
-        if dialect == "spark":
-            dot = _dot_spark("emb", f"array({lit})")
-        else:
-            dot = f"list_dot_product(emb, [{lit}])"
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << i} ELSE 0 END)")
-    return " + ".join(terms)
+_PLANES = hyperplanes(ANN_PLANES, 11)
 
 
 # ---------------------------------------------------------------------------
@@ -158,16 +141,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2. LSH-bucketed ANN (the scale path).
 # ---------------------------------------------------------------------------
 _ANN_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb
-  FROM embeddings
-),
-sig AS (
-  SELECT vec_id, emb,
-         {_bucket_expr('duck')} AS bucket,
-         sqrt(list_dot_product(emb, emb)) AS nrm
-  FROM v
-),
+{_embedding_signature_duck(_PLANES)},
 scored AS (
   SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
          list_dot_product(q.emb, v.emb) / (q.nrm * v.nrm) AS cos
@@ -193,16 +167,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query only scores vectors in its own bucket. ~n/256 of the
     work of brute force per query; recall governed by plane count.
     Deterministic (fixed planes), so the oracle replays it exactly."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    sig = (
-        emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb")
-        .selectExpr(
-            "vec_id",
-            "emb",
-            f"{_bucket_expr('spark')} AS bucket",
-            f"sqrt({_dot_spark('emb', 'emb')}) AS nrm",
-        )
-    )
+    sig = embedding_signature(load_table(spark, sf_dir, "embeddings"), _PLANES)
     q = sig.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm", "bucket AS q_bucket"
     )

@@ -153,3 +153,66 @@ def test_containment_catches_short_in_long_that_jaccard_misses(spark, tmp_path):
     assert (1, 2) not in jacc_pairs, (
         "jaccard already catches this pair — containment adds nothing"
     )
+
+
+def test_band_pairs_one_canonical_pair_per_colliding_couple(spark):
+    from golang_etl_spark.operators.dedup import band_pairs
+
+    bands = spark.createDataFrame(
+        [
+            # 7 and 3 collide in bands 0, 1 and 2: still one pair
+            (7, 0, "k0"), (7, 1, "k1"), (7, 2, "k2"), (7, 3, "x7"),
+            (3, 0, "k0"), (3, 1, "k1"), (3, 2, "k2"), (3, 3, "k3"),
+            # 5 collides with 3 in band 3 only
+            (5, 0, "y5"), (5, 1, "z5"), (5, 2, "w5"), (5, 3, "k3"),
+            # 9 carries the key "k1" in band 0, not band 1: no collision
+            (9, 0, "k1"), (9, 1, "v9"), (9, 2, "u9"), (9, 3, "t9"),
+        ],
+        "doc_id long, band_id int, band_key string",
+    )
+    pairs = band_pairs(bands)
+    assert pairs.columns == ["doc_id_a", "doc_id_b"]
+    assert sorted(tuple(r) for r in pairs.collect()) == [(3, 5), (3, 7)]
+
+
+def test_band_pairs_carry_payload_to_both_sides(spark):
+    from golang_etl_spark.operators.dedup import band_pairs
+
+    bands = spark.createDataFrame(
+        [(4, 70, 0, 1), (4, 70, 1, 2), (2, 30, 0, 1), (2, 30, 1, 2), (8, 90, 0, 1)],
+        "doc_id long, fp long, band_id int, band_key long",
+    )
+    pairs = band_pairs(bands)
+    assert pairs.columns == ["doc_id_a", "fp_a", "doc_id_b", "fp_b"]
+    rows = sorted(tuple(r) for r in pairs.collect())
+    # canonical a < b, no item paired with itself, each payload on its own side
+    assert rows == [(2, 30, 4, 70), (2, 30, 8, 90), (4, 70, 8, 90)]
+
+
+def test_jaccard_verify_is_exact_set_jaccard(spark):
+    from golang_etl_spark.operators.dedup import JACCARD_MIN, jaccard_verify
+
+    left = {1: "abcd", 3: "abcdefg", 6: "abx"}
+    right = {2: "abcde", 4: "abcdefghij", 5: "pq"}
+    cands = [(1, 2), (3, 4), (1, 5), (6, 2)]
+    arrs_left = spark.createDataFrame(
+        [(k, list(v)) for k, v in left.items()], "doc_id long, sh array<string>"
+    )
+    arrs_right = spark.createDataFrame(
+        [(k, list(v)) for k, v in right.items()], "doc_id long, sh array<string>"
+    )
+    cand = spark.createDataFrame(cands, "batch_doc long, corpus_doc long")
+    got = {
+        (r["batch_doc"], r["corpus_doc"]): r["jaccard"]
+        for r in jaccard_verify(cand, arrs_left, arrs_right).collect()
+    }
+    want = {}
+    for a, b in cands:
+        sa, sb = set(left[a]), set(right[b])
+        jac = len(sa & sb) / len(sa | sb)
+        if jac >= JACCARD_MIN:
+            want[(a, b)] = round(jac, 6)
+    # 4/5 and 7/10 (exactly the bar) pass; 2/6 and the empty
+    # intersection (1, 5) do not
+    assert want == {(1, 2): 0.8, (3, 4): 0.7}
+    assert got == want

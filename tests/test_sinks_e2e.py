@@ -9,7 +9,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from golang_etl_spark.etl import extract_table, key_bounds
+from golang_etl_spark.etl import extract_table
 from golang_etl_spark.jobspec import JobSpec, TableJob
 from golang_etl_spark.sources.catalog import load_table
 from golang_etl_spark.sources.sinks import (
@@ -117,13 +117,6 @@ def test_seed_shard_parquet_roundtrip(spark, tmp_path):
     assert back.count() == 2500
     assert back.columns == ["id", "data"]
     assert back.exceptAll(seed_table(spark, n_rows=2500)).count() == 0
-
-
-def test_bounds_discovery(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    mn, mx = key_bounds(li, "l_orderkey")
-    real_mn, real_mx = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
-    assert (mn, mx) == (real_mn, real_mx)
 
 
 def test_compact_dir_preserves_rows_and_bounds_files(spark, sf_dir, tmp_path):
