@@ -43,7 +43,7 @@ CORE = """
 
 def main() -> None:
     from golang_etl_spark.registry import queries
-    from golang_etl_spark.session import default_parallelism, get_spark
+    from golang_etl_spark.session import get_spark
 
     spark = get_spark(app_name="golang_etl_spark_bench")
     contract = queries()
@@ -54,6 +54,7 @@ def main() -> None:
         contract[name](spark, SF_DIR).count()
         timings[name] = round(time.perf_counter() - t0, 4)
     master = spark.sparkContext.master
+    cpus = spark.sparkContext.defaultParallelism
     # Stop first so no teardown output lands after the metric line.
     spark.stop()
 
@@ -63,7 +64,7 @@ def main() -> None:
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "sf": float(m.group(1).rstrip(".")) if m else -1.0,
-        "cpus": default_parallelism(),
+        "cpus": cpus,
         "master": master,
         "queries": timings,
     }

@@ -839,7 +839,7 @@ def lpa_fixed_labels(und: DataFrame, iters: int = _LPA_ITERS) -> DataFrame:
     size."""
     edges = und.unionAll(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    )
     labels = edges.select("u").distinct().select(
         F.col("u").alias("vertex"), F.col("u").alias("label")
     )

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from golang_etl_spark.registry import register
-from golang_etl_spark.sources.catalog import load_table
+from golang_etl_spark.sources.catalog import built_from, load_table
 
 # ---------------------------------------------------------------------------
 # Shared text shingling (word 3-grams, distinct), in both dialects.
@@ -1572,18 +1572,15 @@ INGEST_BUCKETS = 10
 INGEST_BATCH_BUCKET = 7
 _IS_BATCH_SQL = f"(doc_id % {INGEST_BUCKETS}) = {INGEST_BATCH_BUCKET}"
 
-_MINHASH_INDEX_BUILT: dict[str, str] = {}
-
-
+@built_from("documents")
 def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     """Write the corpus (the non-batch doc_id buckets) band postings
-    to parquet. Idempotent per (process, sf_dir); returns the root.
+    to parquet once per SparkContext and ``documents`` listing
+    (``catalog.built_from``); returns the root.
 
     100 TB shape: one corpus scan -> signature agg -> 4 rows/doc to a
     partitioned sink. The pay-once cost every later probe amortizes —
     and the batch never touches corpus text until verification."""
-    if sf_dir in _MINHASH_INDEX_BUILT:
-        return _MINHASH_INDEX_BUILT[sf_dir]
     from golang_etl_spark.operators.layout import _layout_dir
 
     root = _layout_dir("minhash_index", sf_dir)
@@ -1591,7 +1588,6 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
         ~F.expr(_IS_BATCH_SQL)
     )
     _write_bands(minhash_bands(posting), root, "overwrite")
-    _MINHASH_INDEX_BUILT[sf_dir] = root
     return root
 
 
@@ -1607,12 +1603,11 @@ def _write_bands(bands: DataFrame, root: str, mode: str) -> None:
     )
 
 
-_MINHASH_CORPUS_POSTING_BUILT: dict[str, str] = {}
-
-
+@built_from("documents")
 def build_minhash_corpus_postings(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the CORPUS shingle posting (doc_id, shingle) to
-    parquet once per (process, sf_dir), alongside the band index.
+    parquet once per SparkContext and ``documents`` listing, alongside
+    the band index.
 
     The probe needs corpus shingles to exact-verify candidates; a
     per-probe ``persist()`` of that posting accumulates cached
@@ -1620,8 +1615,6 @@ def build_minhash_corpus_postings(spark: SparkSession, sf_dir: str) -> str:
     (one leak per micro-batch). Building it once as a file store makes
     every probe a plain parquet read — the same pay-once contract as
     the band index itself."""
-    if sf_dir in _MINHASH_CORPUS_POSTING_BUILT:
-        return _MINHASH_CORPUS_POSTING_BUILT[sf_dir]
     from golang_etl_spark.operators.layout import _layout_dir
 
     root = _layout_dir("minhash_corpus_postings", sf_dir)
@@ -1632,7 +1625,6 @@ def build_minhash_corpus_postings(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(root)
     )
-    _MINHASH_CORPUS_POSTING_BUILT[sf_dir] = root
     return root
 
 
@@ -1846,6 +1838,11 @@ def probe_minhash_index(
         )
         .select("batch_doc", "corpus_doc")
         .distinct()
+    )
+    # only the candidates' corpus documents are gathered into arrays,
+    # so a probe costs O(candidates), not O(corpus)
+    corpus_posting = corpus_posting.join(
+        cand.select(F.col("corpus_doc").alias("doc_id")), "doc_id", "left_semi"
     )
     return jaccard_verify(
         cand, _shingle_arrays(batch_posting), _shingle_arrays(corpus_posting)

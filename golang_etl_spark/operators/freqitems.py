@@ -100,9 +100,7 @@ def text_heavy_hitters_twopass(
     candidate compression (map-side, bounded memory, provable heavy-
     hitter superset), then an exact recount of candidates only."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.expr(_words_expr_spark())).alias("token")
-    ).persist()  # scanned twice: pass-1 compression + pass-2 recount
+    toks = docs.select(F.explode(F.expr(_words_expr_spark())).alias("token"))
 
     candidates = toks.mapInPandas(
         _misra_gries_partition, schema="token string"

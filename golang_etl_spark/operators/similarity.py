@@ -23,7 +23,6 @@ Scale notes (100 TB stance):
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -41,7 +40,7 @@ from golang_etl_spark.operators.dedup import (
     hyperplanes,
 )
 from golang_etl_spark.registry import register
-from golang_etl_spark.sources.catalog import load_table
+from golang_etl_spark.sources.catalog import built_from, load_table
 
 TOP_K = 10
 N_QUERIES = 5  # query set: vec_id < N_QUERIES
@@ -268,32 +267,40 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per vector, not 16); the probe join broadcasts |queries| x
     nprobe rows so the assigned table never shuffles. Work per query
     is ~nprobe/cells of brute force — the IVF recall/cost dial."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
+    return _ivf_topk(*_ivf_cells(spark, sf_dir))
+
+
+def _vectors(emb: DataFrame) -> DataFrame:
+    """``embeddings`` rows -> (vec_id, emb, nrm): each vector as
+    double[] with its L2 norm."""
+    return emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
         "vec_id", "emb", f"sqrt({_dot_spark('emb', 'emb')}) AS nrm"
     )
+
+
+def _ivf_cells(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(v, cent): the ``_vectors`` of the corpus, and its
+    IVF_CENTROID_IDS vectors as the centroid table ``(cell_id, c_emb,
+    c_nrm)`` — the fixed quantizer of the in-memory IVF and of the
+    persisted index (vector_index.py)."""
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
     cent = v.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS)).selectExpr(
         "vec_id AS cell_id", "emb AS c_emb", "nrm AS c_nrm"
     )
-    return _ivf_topk(v, cent)
+    return v, cent
 
 
-def _ivf_topk(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """Shared IVF query path: cell assignment + nprobe probing + in-cell
-    scoring over any centroid table ``(cell_id, c_emb, c_nrm)`` — the
-    fixed-corpus-vector quantizer (oracle-replayable) and the trained
-    k-means quantizer both run through this."""
-    # persisted: `assigned` and `probes` both consume this frame —
-    # unpersisted, each branch re-runs the embeddings scan + 16-cell
-    # dot-product cross join (the same dual-consumer recompute
-    # pathology the dedup self-joins fixed with persist())
+def _ivf_assign(v: DataFrame, cent: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(scored, assigned): the centroid cosine ``ccos`` of every
+    (vector, cell) pair, and each vector's nearest cell as
+    ``(vec_id, cell_id, emb, nrm)``."""
     scored = v.join(F.broadcast(cent)).selectExpr(
         "vec_id",
         "emb",
         "nrm",
         "cell_id",
         f"{_dot_spark('emb', 'c_emb')} / (nrm * c_nrm) AS ccos",
-    ).persist()
+    )
     # argmax via struct max: (ccos, -cell_id) picks highest centroid
     # cosine, lowest cell on ties — identical to the oracle's
     # ROW_NUMBER(ORDER BY ccos DESC, cell_id) = 1. emb/nrm ride along
@@ -324,6 +331,15 @@ def _ivf_topk(v: DataFrame, cent: DataFrame) -> DataFrame:
             F.col("s.nrm").alias("nrm"),
         )
     )
+    return scored, assigned
+
+
+def _ivf_topk(v: DataFrame, cent: DataFrame) -> DataFrame:
+    """Shared IVF query path: cell assignment + nprobe probing + in-cell
+    scoring over any centroid table ``(cell_id, c_emb, c_nrm)`` — the
+    fixed-corpus-vector quantizer (oracle-replayable) and the trained
+    k-means quantizer both run through this."""
+    scored, assigned = _ivf_assign(v, cent)
     wprobe = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("cell_id")
     )
@@ -384,103 +400,23 @@ def derive_sample_mod(n_rows: int, target: int = TRAIN_SAMPLE_TARGET) -> int:
     return max(1, math.ceil(n_rows / target))
 
 
-# derived mods memoized per fixture fingerprint so repeated quantizer
-# calls (driver rounds, recall tests) don't re-pay the count() job —
-# the trained-centroid caches below would otherwise hit AFTER an
-# unconditional count
-_SAMPLE_MOD_CACHE: dict[str, int] = {}
-
-
-def _resolve_sample_mod(
-    spark: SparkSession, sf_dir: str, sample_mod: int | None
-) -> int:
-    """An explicit mod wins; the default derives one from a count-only
-    scan (columnless parquet count — metadata-cheap even at scale),
-    memoized per fixture fingerprint."""
-    if sample_mod is not None:
-        return sample_mod
-    key = f"{sf_dir}|{_fixture_fingerprint(sf_dir)}"
-    if key not in _SAMPLE_MOD_CACHE:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _SAMPLE_MOD_CACHE[key] = derive_sample_mod(n)
-    return _SAMPLE_MOD_CACHE[key]
-
-
-_FP_MISS_COUNTER = 0
-
-
-def _fixture_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the embeddings fixture (size+mtime of its
-    file(s)) for the trained-quantizer cache keys: fixtures are
-    regenerated in place between driver rounds, so a path-only key
-    could serve codebooks trained on a previous corpus."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            parts = []
-            for name in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, name))
-                parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-            return "|".join(parts)
-        st = os.stat(path)
-        return f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        # unstatable layouts (object stores, nonstandard paths) must
-        # NOT collapse to a shared sentinel — that would quietly
-        # re-enable the stale-cache bug this fingerprint fixes. A
-        # unique value per call disables memoization (train each time:
-        # slower, never stale) — warn once so the per-call retraining
-        # cost cliff is visible, not silent.
-        token = os.environ.get("GOLANG_ETL_SPARK_CORPUS_VERSION")
-        if token:  # caller-supplied version restores memoization
-            return f"envtoken-{token}"
-        global _FP_MISS_COUNTER
-        _FP_MISS_COUNTER += 1
-        if _FP_MISS_COUNTER == 1:
-            import warnings
-
-            warnings.warn(
-                f"embeddings fixture at {path!r} is not statable; "
-                "quantizer-training memoization is disabled and every "
-                "query invocation will retrain (full corpus count + "
-                "driver-side k-means). On object-store layouts set "
-                "GOLANG_ETL_SPARK_CORPUS_VERSION to an explicit "
-                "corpus-version token to restore caching.",
-                stacklevel=2,
-            )
-        return f"unstatable-{_FP_MISS_COUNTER}"
-
-
-# memoized trained centroids, same rationale as _PQ_BOOK_CACHE below
-_IVF_CENT_CACHE: dict[str, np.ndarray] = {}
-
-
-def train_kmeans_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    sample_mod: int | None = None,
-) -> np.ndarray:
+@built_from("embeddings")
+def train_kmeans_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Spherical k-means on a deterministic hash sample of the corpus,
-    trained driver-side: the sample (bounded by TRAIN_SAMPLE_TARGET by
-    default — the derived mod, NOT corpus size, caps the collect)
-    collects once, Lloyd iterations run in numpy, and the k x dim
-    result broadcasts back as literals. This is the standard IVF
-    recipe — the quantizer trains on ~1e5 vectors even when the index
-    holds billions, so driver training is not a scale bottleneck.
-    Deterministic: hash-mod sample + first-k-by-vec_id init +
-    argmax/mean arithmetic, no RNG. Memoized per (fixture fingerprint,
-    k, iters, mod) — a real IVF index trains once at build time, like
-    the PQ codebooks."""
-    sample_mod = _resolve_sample_mod(spark, sf_dir, sample_mod)
-    key = f"{sf_dir}|{_fixture_fingerprint(sf_dir)}|{k}|{iters}|{sample_mod}"
-    if key in _IVF_CENT_CACHE:
-        return _IVF_CENT_CACHE[key]
-    X = _collect_normalized_sample(spark, sf_dir, sample_mod)
-    k = min(k, X.shape[0])  # small samples train a smaller quantizer
+    trained driver-side: the sample (bounded by TRAIN_SAMPLE_TARGET —
+    the derived mod, NOT corpus size, caps the collect) collects once,
+    Lloyd iterations run in numpy, and the k x dim result broadcasts
+    back as literals. This is the standard IVF recipe — the quantizer
+    trains on ~1e5 vectors even when the index holds billions, so
+    driver training is not a scale bottleneck. Deterministic:
+    hash-mod sample + first-k-by-vec_id init + argmax/mean arithmetic,
+    no RNG. Trained once per SparkContext and ``embeddings`` listing
+    (``catalog.built_from``) — a real IVF index trains once at build
+    time, like the PQ codebooks."""
+    X = _collect_normalized_sample(spark, sf_dir)
+    k = min(KMEANS_K, X.shape[0])  # small samples train a smaller quantizer
     cent = X[:k].copy()  # deterministic init: k lowest-vec_id vectors
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sims = X @ cent.T  # cosine == dot on unit vectors
         assign = np.argmax(sims, axis=1)
         for j in range(k):
@@ -488,9 +424,7 @@ def train_kmeans_centroids(
             if len(members):
                 m = members.mean(axis=0)
                 cent[j] = m / np.linalg.norm(m)
-    out = np.round(cent, 6)
-    _IVF_CENT_CACHE[key] = out
-    return out
+    return np.round(cent, 6)
 
 
 @register("similarity_ivf_kmeans", oracle=None, tags=("ann", "llm"))
@@ -504,22 +438,9 @@ def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact code path (literal centroid frame -> _ivf_topk) is
     hash-gated by similarity_ivf_seeded, and the fixed-ID IVF
     (similarity_ivf_topk) keeps the corpus-vector variant checked."""
-    cent_np = train_kmeans_centroids(spark, sf_dir)
-    rows = [
-        (int(i), [float(x) for x in cent_np[i]])
-        for i in range(cent_np.shape[0])
-    ]
-    cent = (
-        spark.createDataFrame(rows, "cell_id LONG, c_emb ARRAY<DOUBLE>")
-        .selectExpr(
-            "cell_id", "c_emb", f"sqrt({_dot_spark('c_emb', 'c_emb')}) AS c_nrm"
-        )
+    return ivf_literal_topk(
+        spark, sf_dir, train_kmeans_centroids(spark, sf_dir).tolist()
     )
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
-        "vec_id", "emb", f"sqrt({_dot_spark('emb', 'emb')}) AS nrm"
-    )
-    return _ivf_topk(v, cent)
 
 
 # ---------------------------------------------------------------------------
@@ -650,10 +571,7 @@ def ivf_literal_topk(
             "cell_id", "c_emb", f"sqrt({_dot_spark('c_emb', 'c_emb')}) AS c_nrm"
         )
     )
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
-        "vec_id", "emb", f"sqrt({_dot_spark('emb', 'emb')}) AS nrm"
-    )
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
     return _ivf_topk(v, cent)
 
 
@@ -809,23 +727,17 @@ PQ_ITERS = 8
 PQ_RERANK_C = 50   # ADC candidates per query refined with exact cosine
 
 
-# trained codebooks memoized per sf_dir: training is deterministic
-# (hash sample + fixed init), and a real PQ index trains ONCE at build
-# time — re-paying the k-means per query call would misstate the
-# operator's steady-state cost.
-_PQ_BOOK_CACHE: dict[str, np.ndarray] = {}
-
-
-def _collect_normalized_sample(
-    spark: SparkSession, sf_dir: str, sample_mod: int
-) -> np.ndarray:
+def _collect_normalized_sample(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Deterministic hash-mod sample of the embeddings, collected once
     and L2-normalized — the shared training input of the IVF and PQ
-    quantizers."""
+    quantizers. The mod comes from a count-only scan (columnless
+    parquet count — metadata-cheap even at scale), so the sample is
+    ~TRAIN_SAMPLE_TARGET vectors at most."""
     emb = load_table(spark, sf_dir, "embeddings")
+    sample_mod = derive_sample_mod(emb.count())
     sample = emb
     if sample_mod > 1:
-        sample = emb.filter(F.expr(f"pmod(hash(vec_id), {sample_mod}) = 0"))
+        sample = emb.filter(f"pmod(hash(vec_id), {sample_mod}) = 0")
     pdf = sample.select("vec_id", "embedding").orderBy("vec_id").toPandas()
     X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
     # norm floor matches the query path's guard (score() below): an
@@ -834,19 +746,16 @@ def _collect_normalized_sample(
     return X
 
 
-def train_pq_codebooks(
-    spark: SparkSession, sf_dir: str, sample_mod: int | None = None
-) -> np.ndarray:
+@built_from("embeddings")
+def train_pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """(PQ_M, PQ_K, dim/PQ_M) codebooks via per-subspace k-means on
-    the same deterministic hash sample the IVF quantizer trains on
-    (sample bounded by TRAIN_SAMPLE_TARGET by default, like the IVF
-    path). Vectors are L2-normalized first so ADC inner products
-    approximate cosine."""
-    sample_mod = _resolve_sample_mod(spark, sf_dir, sample_mod)
-    key = f"{sf_dir}|{_fixture_fingerprint(sf_dir)}|{sample_mod}"
-    if key in _PQ_BOOK_CACHE:
-        return _PQ_BOOK_CACHE[key]
-    X = _collect_normalized_sample(spark, sf_dir, sample_mod)
+    the same deterministic hash sample the IVF quantizer trains on.
+    Vectors are L2-normalized first so ADC inner products approximate
+    cosine. Trained once per SparkContext and ``embeddings`` listing:
+    training is deterministic, and a real PQ index trains ONCE at
+    build time — re-paying the k-means per query call would misstate
+    the operator's steady-state cost."""
+    X = _collect_normalized_sample(spark, sf_dir)
     d = X.shape[1]
     if d % PQ_M:
         # the query path's Q.reshape(len(Q), PQ_M, sub) requires the
@@ -876,9 +785,7 @@ def train_pq_codebooks(
                 if len(members):
                     cent[j] = members.mean(axis=0)
         books[m] = cent
-    out = np.round(books, 6)
-    _PQ_BOOK_CACHE[key] = out
-    return out
+    return np.round(books, 6)
 
 
 @register("similarity_pq_topk", oracle=None, tags=("ann", "llm"))
@@ -1008,9 +915,7 @@ def _pq_adc_topk(
     # exact rerank: candidates (|queries| x C rows) broadcast onto the
     # vector table to fetch neighbor embeddings; query vectors join as
     # a |queries|-row frame. All dot products JVM-side.
-    v = emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
-        "vec_id", "emb", f"sqrt({_dot_spark('emb', 'emb')}) AS nrm"
-    )
+    v = _vectors(emb)
     qv = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm"
     )

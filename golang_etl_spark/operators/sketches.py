@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from golang_etl_spark.registry import register
-from golang_etl_spark.sources.catalog import load_table
+from golang_etl_spark.sources.catalog import built_from, load_table
 
 
 _APPROX_DISTINCT_ORACLE = """
@@ -252,8 +252,7 @@ def applyinpandas_rank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # kilobyte sketches (hll_union_agg) instead of an O(rows) rescan —
 # the only way a 100 TB event history answers ad-hoc range distincts
 # interactively. Same store discipline as the IVF / MinHash index
-# families (build memoized per process + sf_dir).
-_HLL_STORE_BUILT: dict[str, str] = {}
+# families (build memoized by catalog.built_from).
 
 # the probe range: 3 months present at every fixture SF (orders span
 # 1995-01 .. 2001-08)
@@ -261,16 +260,15 @@ HLL_RANGE_MONTHS = ("1996-01", "1996-02", "1996-03")
 _HLL_RANGE_LABEL = "1996-01:1996-03"
 
 
+@built_from("orders")
 def build_hll_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize per-month DataSketches-HLL sketches of orders to
     parquet: ``sketch`` over o_custkey (the wide-domain production
     column) and ``sketch_prio`` over o_orderpriority (a 5-value probe
     column whose estimates are provably exact — see
-    sketch_hll_store_merge). Idempotent per (process, sf_dir); returns
-    the root. One scan of orders; the store is O(months) kilobyte
-    rows."""
-    if sf_dir in _HLL_STORE_BUILT:
-        return _HLL_STORE_BUILT[sf_dir]
+    sketch_hll_store_merge). Built once per SparkContext and
+    ``orders`` listing (``catalog.built_from``); returns the root. One
+    scan of orders; the store is O(months) kilobyte rows."""
     from golang_etl_spark.operators.layout import _layout_dir
 
     root = _layout_dir("hll_store", sf_dir)
@@ -286,7 +284,6 @@ def build_hll_store(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(root)
     )
-    _HLL_STORE_BUILT[sf_dir] = root
     return root
 
 
@@ -469,7 +466,6 @@ _CMS_WIDTH = 512
 _CMS_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 _CMS_A = (1_299_721, 7_919, 104_729, 15_485_863)
 _CMS_B = (104_395_301, 32_452_843, 49_979_687, 67_867_967)
-_CMS_STORE_BUILT: dict[str, str] = {}
 
 # probe the same 3-month range as the HLL store, and custkeys 1..10
 # (present at every fixture SF)
@@ -524,12 +520,12 @@ def _cms_cells(df: DataFrame, item: str) -> DataFrame:
     )
 
 
+@built_from("orders")
 def build_cms_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (ym, sparse CMS map over o_custkey) for every month
-    of orders to parquet. Idempotent per (process, sf_dir); one scan
-    of orders; each map holds <= D*W entries whatever the row count."""
-    if sf_dir in _CMS_STORE_BUILT:
-        return _CMS_STORE_BUILT[sf_dir]
+    of orders to parquet, once per SparkContext and ``orders``
+    listing (``catalog.built_from``); one scan of orders; each map
+    holds <= D*W entries whatever the row count."""
     from golang_etl_spark.operators.layout import _layout_dir
 
     root = _layout_dir("cms_store", sf_dir)
@@ -550,7 +546,6 @@ def build_cms_store(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(root)
     )
-    _CMS_STORE_BUILT[sf_dir] = root
     return root
 
 
@@ -698,14 +693,13 @@ _HIST_BINS = 64
 _HIST_LO = 0.0
 _HIST_HI = 600_000.0  # o_totalprice domain; top bin absorbs the tail
 _HIST_WIDTH = (_HIST_HI - _HIST_LO) / _HIST_BINS
-_HIST_STORE_BUILT: dict[str, str] = {}
 
 
+@built_from("orders")
 def build_hist_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (ym, bin, c) order-price histogram rows for every
-    month to parquet. Idempotent per (process, sf_dir); one scan."""
-    if sf_dir in _HIST_STORE_BUILT:
-        return _HIST_STORE_BUILT[sf_dir]
+    month to parquet, once per SparkContext and ``orders`` listing
+    (``catalog.built_from``); one scan."""
     from golang_etl_spark.operators.layout import _layout_dir
 
     root = _layout_dir("hist_store", sf_dir)
@@ -723,7 +717,6 @@ def build_hist_store(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(root)
     )
-    _HIST_STORE_BUILT[sf_dir] = root
     return root
 
 

@@ -200,25 +200,25 @@ def compare_query(
 
 
 def run_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Run every registered query against its oracle; yields results."""
-    from golang_etl_spark.registry import all_queries
+    """Run every registered query against its oracle, through the
+    functions of the driver surface (``registry.queries()``); yields
+    results."""
+    from golang_etl_spark.registry import all_queries, queries
 
+    fns = queries()
     con = duckdb_connection(sf_dir)
     try:
         for qname, spec in sorted(all_queries().items()):
             if names and qname not in names:
                 continue
-            # mirror the driver surface: registry.queries() clears the
-            # cache before each query so persisted subtrees from the
-            # previous one don't accumulate across a 100+-query session
-            spark.catalog.clearCache()
+            fn = fns[qname]
             if spec.oracle is None:
-                df = spec.fn(spark, sf_dir)
+                df = fn(spark, sf_dir)
                 n = df.count()
                 yield CompareResult(qname, True, n, -1, "(rows-only; no oracle)")
                 continue
             try:
-                yield compare_query(qname, spark, sf_dir, spec.fn, spec.oracle, con)
+                yield compare_query(qname, spark, sf_dir, fn, spec.oracle, con)
             except Exception as e:  # surface, keep going
                 yield CompareResult(qname, False, -1, -1, f"EXC {type(e).__name__}: {e}")
     finally:

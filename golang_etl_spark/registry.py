@@ -63,7 +63,7 @@ def _fresh_cache(fn: QueryFn) -> QueryFn:
     query before running this one.
 
     Several operators persist() self-join subtrees (minhash postings,
-    simhash bands, IVF scored tables, ...). The terminal action happens
+    simhash bands, shingle arrays, ...). The terminal action happens
     in the driver AFTER the query fn returns, so a fn cannot unpersist
     its own frames — clearing at the start of the next query instead
     caps a 113-query session's cache footprint at one query's working

@@ -8,13 +8,25 @@ each table's schema is inferred once per SparkSession and declared
 rewritten or replaced table is inferred again. Filters and
 projections applied downstream are pushed into these scans by Catalyst
 (verify with ``df.explain``: PushedFilters / ReadSchema).
+
+Artefacts built from the tables (trained quantizers, index and sketch
+stores) are memoized by ``built_from`` on the same file listings, but
+per SparkContext, not per session. A schema read depends on the
+session's conf, so a new session infers again; an artefact does not,
+and every ``foreachBatch`` micro-batch runs in a new session of the
+same context. Rebuilding per session would rewrite the MinHash index
+with ``overwrite`` on every micro-batch and lose what the earlier
+batches ingested into it.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
 import weakref
+from typing import Any, Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -49,42 +61,32 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 _TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+class _Context:
+    """One SparkContext's built artefacts, and the JVM handles a file
+    listing needs. The handles are resolved once here: each Py4J class
+    lookup is a round trip."""
+
+    def __init__(self, sc: SparkContext):
+        self.path_cls = sc._jvm.org.apache.hadoop.fs.Path
+        self.hadoop_conf = sc._jsc.hadoopConfiguration()
+        # (builder, sf_dir, args) -> (input listings, artefact)
+        self.built: dict[tuple, tuple[tuple, Any]] = {}
+        # one lock per key: builders write their store with
+        # ``overwrite``, so two threads building one store would race
+        self.building: dict[tuple, threading.Lock] = {}
+
+
 class _SessionSchemas:
     """One SparkSession's inferred table schemas, keyed on the path and
-    the file listing they were inferred from. The JVM handles for the
-    listing are resolved once here: each Py4J class lookup is a round
-    trip."""
+    the file listing they were inferred from."""
 
-    def __init__(self, spark: SparkSession):
-        self._path_cls = spark._jvm.org.apache.hadoop.fs.Path
-        self._hadoop_conf = spark._jsc.hadoopConfiguration()
+    def __init__(self) -> None:
         self._by_path: dict[str, tuple[tuple, StructType]] = {}
-
-    def _listing(self, path: str) -> tuple | None:
-        """(path, length, modification time) of every file under
-        ``path``, through the Hadoop FileSystem so any URI Spark reads
-        works; None when the path does not exist. ``listStatus``, not
-        ``listFiles``: the latter builds LocatedFileStatus objects,
-        which on the local FS shell out for permissions per file."""
-        jpath = self._path_cls(path)
-        fs = jpath.getFileSystem(self._hadoop_conf)
-        if not fs.exists(jpath):
-            return None
-        listing, pending = [], [jpath]
-        while pending:
-            for st in fs.listStatus(pending.pop()):
-                if st.isDirectory():
-                    pending.append(st.getPath())
-                else:
-                    listing.append(
-                        (st.getPath().toString(), st.getLen(), st.getModificationTime())
-                    )
-        return tuple(sorted(listing))
 
     def read_parquet(self, spark: SparkSession, path: str) -> DataFrame:
         """``spark.read.parquet(path)``, inferring the schema from the
         footers only on the session's first read of these exact files."""
-        listing = self._listing(path)
+        listing = _listing(spark, path)
         cached = self._by_path.get(path)
         if listing is not None and cached is not None and cached[0] == listing:
             return spark.read.schema(cached[1]).parquet(path)
@@ -95,20 +97,86 @@ class _SessionSchemas:
         return df
 
 
-# Keyed weakly on the session, so a new session (and its conf) infers
-# again and a dropped session's schemas go with it.
+# Keyed weakly, so a dropped session's schemas and a stopped context's
+# artefacts go with them.
+_CONTEXTS: weakref.WeakKeyDictionary[SparkContext, _Context] = (
+    weakref.WeakKeyDictionary()
+)
 _SCHEMAS: weakref.WeakKeyDictionary[SparkSession, _SessionSchemas] = (
     weakref.WeakKeyDictionary()
 )
-_SCHEMAS_LOCK = threading.Lock()
+_LOCK = threading.Lock()
+
+
+def _context(spark: SparkSession) -> _Context:
+    sc = spark.sparkContext
+    with _LOCK:
+        ctx = _CONTEXTS.get(sc)
+        if ctx is None:
+            ctx = _CONTEXTS[sc] = _Context(sc)
+        return ctx
 
 
 def _session_schemas(spark: SparkSession) -> _SessionSchemas:
-    with _SCHEMAS_LOCK:
+    with _LOCK:
         schemas = _SCHEMAS.get(spark)
         if schemas is None:
-            schemas = _SCHEMAS[spark] = _SessionSchemas(spark)
+            schemas = _SCHEMAS[spark] = _SessionSchemas()
         return schemas
+
+
+def _listing(spark: SparkSession, path: str) -> tuple | None:
+    """(path, length, modification time) of every file under ``path``,
+    through the Hadoop FileSystem so any URI Spark reads works; None
+    when the path does not exist. ``listStatus``, not ``listFiles``:
+    the latter builds LocatedFileStatus objects, which on the local FS
+    shell out for permissions per file."""
+    ctx = _context(spark)
+    jpath = ctx.path_cls(path)
+    fs = jpath.getFileSystem(ctx.hadoop_conf)
+    if not fs.exists(jpath):
+        return None
+    listing, pending = [], [jpath]
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            if st.isDirectory():
+                pending.append(st.getPath())
+            else:
+                listing.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+    return tuple(sorted(listing))
+
+
+def built_from(*tables: str) -> Callable:
+    """Memoize an artefact builder ``build(spark, sf_dir, *args)`` that
+    reads the fixture ``tables`` under ``sf_dir``: a trained quantizer,
+    or the root of an index or sketch store it wrote. The memo is held
+    per SparkContext and keyed on the builder, ``sf_dir`` and ``args``;
+    an entry serves only while the tables' file listings are the ones
+    it was built from, so a table rewritten in place is built from
+    again. A missing table is not cached: the builder runs and Spark
+    reports the path."""
+
+    def decorate(build: Callable) -> Callable:
+        @functools.wraps(build)
+        def memoized(spark: SparkSession, sf_dir: str, *args):
+            listings = tuple(_listing(spark, f"{sf_dir}/{t}.parquet") for t in tables)
+            if None in listings:
+                return build(spark, sf_dir, *args)
+            ctx = _context(spark)
+            key = (build, sf_dir, args)
+            with ctx.building.setdefault(key, threading.Lock()):
+                hit = ctx.built.get(key)
+                if hit is not None and hit[0] == listings:
+                    return hit[1]
+                out = build(spark, sf_dir, *args)
+                ctx.built[key] = (listings, out)
+                return out
+
+        return memoized
+
+    return decorate
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -822,6 +822,37 @@ def test_minhash_index_probe_reads_store_not_corpus_signatures(spark, sf_dir):
     assert "minhash_index" in plan, "probe does not read the persisted index"
 
 
+def _ancestors(plan: str, marker: str) -> list[str]:
+    """The lines of the plan nodes above the first line holding
+    ``marker``, nearest first (in the pre-order tree string a node's
+    parent is the nearest line above it that is indented less)."""
+    lines = plan.splitlines()
+    i = next(n for n, ln in enumerate(lines) if marker in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-|"))
+
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            out.append(ln)
+            d = depth(ln)
+    return out
+
+
+def test_minhash_index_probe_gathers_only_candidate_corpus_docs(spark, sf_dir):
+    """The probe gathers shingle arrays for the candidates' corpus
+    documents only: the corpus-posting store is semi-joined with the
+    candidates BELOW the collect_list aggregate, so a probe costs
+    O(candidates), not O(corpus)."""
+    plan = _plan(spark, sf_dir, "dedup_index_probe")
+    # the posting store's scan; its location may be cut short in the plan
+    up = _ancestors(plan, "ReadSchema: struct<doc_id:bigint,shingle:string>")
+    semi = next((n for n, ln in enumerate(up) if "LeftSemi" in ln), len(up))
+    agg = next(n for n, ln in enumerate(up) if "collect_list" in ln)
+    assert semi < agg, "corpus postings aggregated before meeting the candidates"
+
+
 def test_equidepth_bins_avoid_single_reducer_ntile(spark, sf_dir):
     """The decile cut must come from the range-partitioned
     global_row_number formulation — a plain ntile() window would plan

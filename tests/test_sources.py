@@ -12,8 +12,12 @@ microsecond values DuckDB reads — which is what keeps every ts-bearing
 oracle comparable. load_table infers a table's schema once per session
 and declares it on later reads of the same files; the cache tests pin
 that a rewrite is inferred again and that a repeat read starts no job.
+The artefact memo (``catalog.built_from``) is pinned the same way: a
+store or quantizer is built again after its input table is rewritten,
+and a repeat call, from any session of the context, starts no job.
 """
 
+import datetime as dt
 import sys
 
 import duckdb
@@ -205,3 +209,110 @@ def test_concurrent_loads_keep_every_schema(spark, sf_dir):
     assert all(len(df.columns) > 0 for df in schemas)
     cached = catalog._session_schemas(session)._by_path
     assert sorted(cached) == sorted(f"{sf_dir}/{t}.parquet" for t in TABLES)
+
+
+# -- per-context artefact memo -----------------------------------------------
+
+
+def _write_orders(sf_dir, days):
+    # one order per entry of ``days`` (January 1996), price bin 0
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderdate": pa.array(
+                    [dt.datetime(1996, 1, d) for d in days], pa.timestamp("us")
+                ),
+                "o_totalprice": [1.0] * len(days),
+            }
+        ),
+        str(sf_dir / "orders.parquet"),
+    )
+
+
+def _write_embeddings(sf_dir, vectors):
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": list(range(len(vectors))),
+                "embedding": pa.array(vectors, pa.list_(pa.float32())),
+            }
+        ),
+        str(sf_dir / "embeddings.parquet"),
+    )
+
+
+def _hist_counts(spark, root):
+    return {(r["ym"], r["bin"]): r["c"] for r in spark.read.parquet(root).collect()}
+
+
+def test_built_artefacts_follow_a_rewritten_table(spark, tmp_path):
+    from golang_etl_spark.operators.similarity import train_kmeans_centroids
+    from golang_etl_spark.operators.sketches import build_hist_store
+
+    sf_dir = str(tmp_path)
+    _write_orders(tmp_path, [1, 2])
+    _write_embeddings(tmp_path, [[1.0, 0.0], [0.0, 2.0]])
+    assert _hist_counts(spark, build_hist_store(spark, sf_dir)) == {("1996-01", 0): 2}
+    assert train_kmeans_centroids(spark, sf_dir).tolist() == [[1.0, 0.0], [0.0, 1.0]]
+
+    _write_orders(tmp_path, [3, 4, 5, 6, 7])
+    _write_embeddings(tmp_path, [[0.0, 3.0], [4.0, 0.0], [3.0, 4.0]])
+    assert _hist_counts(spark, build_hist_store(spark, sf_dir)) == {("1996-01", 0): 5}
+    assert train_kmeans_centroids(spark, sf_dir).tolist() == [
+        [0.0, 1.0],
+        [1.0, 0.0],
+        [0.6, 0.8],
+    ]
+
+
+def test_built_artefacts_are_reused_by_every_session_without_jobs(spark, tmp_path):
+    from golang_etl_spark.operators.similarity import train_kmeans_centroids
+    from golang_etl_spark.operators.sketches import build_hist_store
+
+    sf_dir = str(tmp_path)
+    _write_orders(tmp_path, [1, 2, 3])
+    _write_embeddings(tmp_path, [[1.0, 0.0], [0.0, 1.0]])
+
+    def build(session):
+        return build_hist_store(session, sf_dir), train_kmeans_centroids(session, sf_dir)
+
+    first = _jobs_started(spark, "artefact-memo-first", lambda: build(spark))
+    assert first, "the first call builds the store and trains the quantizer"
+    # a streaming micro-batch runs in a new session of the same context
+    other = spark.newSession()
+    for session, group in ((spark, "artefact-memo-again"), (other, "artefact-memo-other")):
+        assert _jobs_started(session, group, lambda: build(session)) == []
+
+
+def test_concurrent_calls_build_an_artefact_once(spark, tmp_path):
+    # more threads than cores, switching often: every caller gets the
+    # one artefact, and no two threads build (and overwrite) it at once
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from golang_etl_spark.sources.catalog import built_from
+
+    _write(tmp_path / "nation.parquet", n_nationkey=[0])
+    builds, running = [], threading.Semaphore(1)
+
+    @built_from("nation")
+    def build(spark, sf_dir):
+        assert running.acquire(blocking=False), "two builds at once"
+        try:
+            time.sleep(0.05)
+            builds.append(object())
+            return builds[-1]
+        finally:
+            running.release()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(build, spark, str(tmp_path)) for _ in range(16)]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert len(builds) == 1
+    assert all(g is builds[0] for g in got)

@@ -104,20 +104,32 @@ def test_derive_sample_mod_caps_sample_at_target():
 
 
 def test_resolve_sample_mod_derives_from_corpus_count(monkeypatch):
-    """Mocked-count check: at a 3.2M-vector corpus the default path
-    must choose mod 32 (a ~100k sample), and an explicit mod wins."""
+    """Mocked-count check: at a 3.2M-vector corpus the training sample
+    is drawn with mod 32 (a ~100k sample)."""
+    import pandas as pd
+
     from golang_etl_spark.operators import similarity as sim
+
+    filters = []
 
     class FakeDF:
         def count(self):
             return 3_200_000
 
+        def filter(self, cond):
+            filters.append(cond)
+            return self
+
+        def select(self, *cols):
+            return self
+
+        def orderBy(self, *cols):
+            return self
+
+        def toPandas(self):
+            return pd.DataFrame({"vec_id": [0], "embedding": [[3.0, 4.0]]})
+
     monkeypatch.setattr(sim, "load_table", lambda *a, **k: FakeDF())
-    # A non-statable fixture path disables quantizer memoization and
-    # warns ONCE (similarity.py _fixture_fingerprint); reset the
-    # once-guard so the warning is deterministic here, and assert it
-    # so the suite stays warning-clean under filterwarnings=error.
-    monkeypatch.setattr(sim, "_FP_MISS_COUNTER", 0)
-    with pytest.warns(UserWarning, match="not statable"):
-        assert sim._resolve_sample_mod(None, "/fake", None) == 32
-    assert sim._resolve_sample_mod(None, "/fake", 7) == 7
+    X = sim._collect_normalized_sample(None, "/fake")
+    assert filters == ["pmod(hash(vec_id), 32) = 0"]
+    assert X.tolist() == [[0.6, 0.8]]
