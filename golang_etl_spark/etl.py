@@ -120,26 +120,41 @@ def plan_jdbc_read(
 ) -> tuple[str, RangePartitionPlan]:
     """The dialect-quoted key and the range plan both JDBC readers
     scan by: min(stride chunks, fetch_concurrency, session cores)
-    partitions over one pushed-down MIN/MAX query's bounds (read
-    positionally: the engine controls the alias case). Spark's JDBC
-    writer quotes identifiers at CREATE time, so case-folding databases
+    partitions over the key's MIN/MAX bounds. Spark's JDBC writer
+    quotes identifiers at CREATE time, so case-folding databases
     (Derby, Postgres) store the exact-case name; and a hardcoded '"'
     would make MySQL (no ANSI_QUOTES) read '"id" >= lo' as a
-    constant-true string comparison, a full scan per predicate."""
+    constant-true string comparison, a full scan per predicate.
+
+    The bounds query is one statement on a driver-side connection from
+    the dialect's connection factory, the one the scan itself uses (so
+    driver registration behaves alike), and starts no Spark job: read
+    through ``spark.read.format("jdbc")`` it cost a schema probe, a
+    derived-table wrapper around the query and a job."""
     location = spec.shards[job.db]
-    dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(location)
+    jvm = spark._jvm
+    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(location)
     qpk = dialect.quoteIdentifier(job.primary_key)
-    bounds = spark.read.format("jdbc").options(
-        url=location,
-        query=f"SELECT MIN({qpk}) AS mn, MAX({qpk}) AS mx FROM {job.table}",
-    ).load().first()
-    if bounds is None or bounds[0] is None:
-        # no rows, or only NULL keys: there is no key range to plan
-        raise ValueError(
-            f"table {job.table!r} has no rows / null pk {job.primary_key!r}"
+    options = jvm.org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions(
+        location, job.table, jvm.org.apache.spark.api.python.PythonUtils.toScalaMap({})
+    )
+    conn = dialect.createConnectionFactory(options).apply(-1)
+    try:
+        rs = conn.createStatement().executeQuery(
+            f"SELECT MIN({qpk}), MAX({qpk}) FROM {job.table}"
         )
+        rs.next()
+        lo = rs.getLong(1)
+        if rs.wasNull():
+            # no rows, or only NULL keys: there is no key range to plan
+            raise ValueError(
+                f"table {job.table!r} has no rows / null pk {job.primary_key!r}"
+            )
+        hi = rs.getLong(2)
+    finally:
+        conn.close()
     cap = min(spec.fetch_concurrency, spark.sparkContext.defaultParallelism)
-    return qpk, plan_range_partitions(int(bounds[0]), int(bounds[1]), spec.stride, cap)
+    return qpk, plan_range_partitions(lo, hi, spec.stride, cap)
 
 
 def read_shard_table(

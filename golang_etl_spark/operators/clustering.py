@@ -16,6 +16,8 @@ so diameters are small); the loop is capped at MAX_CC_ITERS with a
 convergence check — an iterative *algorithm*, not a driver-side
 row loop: each round is one distributed join + aggregate, and only the
 scalar "how many labels changed" count comes back to the driver.
+Candidate-scale graphs (below ``CC_LOCAL_EDGE_THRESHOLD`` edges) skip
+the loop: their pairs are fetched once and union-found on the driver.
 
 Scale notes (100 TB stance):
 - state per round is one (doc_id, label) row per vertex in a pair —
@@ -29,7 +31,8 @@ Scale notes (100 TB stance):
   lineage so every round plans against a flat in-memory relation. On
   a real cluster you would use reliable ``checkpoint`` (HDFS) instead
   of ``localCheckpoint`` for fault tolerance.
-- the edge list is checkpointed once and reused every round.
+- the pair list is checkpointed once; every round reads its two
+  orientations as the edge list.
 
 The DuckDB oracle replays the same closure with a recursive CTE
 (min reachable doc_id per vertex == min-label fixpoint).
@@ -56,11 +59,12 @@ MAX_CC_ITERS = 20
 # asserts round growth is logarithmic in chain depth, not linear).
 LAST_CC_ROUNDS: int | None = None
 
-# Below this many (directed) edges the whole graph is union-found in a
-# single task instead of the iterative distributed loop: 5M edges is
-# ~80 MB of id pairs — one core chews through that in seconds with a
-# DSU, while the distributed loop would pay log(diameter) rounds of
-# shuffle + materialization latency for no benefit. Near-dup pair
+# Below this many (directed) edges the whole graph is union-found on
+# the driver instead of the iterative distributed loop: 5M edges is
+# 2.5M fetched pairs, ~40 MB of Arrow — one core chews through that
+# in seconds with a DSU, while the distributed loop would pay
+# log(diameter) rounds of shuffle + materialization latency for no
+# benefit. Near-dup pair
 # graphs are candidate-scale, not corpus-scale, so even at 100 TB most
 # runs take this path; the loop is the safety net for genuinely huge
 # pair sets.
@@ -133,7 +137,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def connected_components(
-    pairs: DataFrame, local_threshold: int = CC_LOCAL_EDGE_THRESHOLD
+    pairs: DataFrame, local_threshold: int | None = None
 ) -> DataFrame:
     """Connected components over an undirected pair list
     ``(doc_id_a, doc_id_b)`` — returns ``(doc_id, label)`` where label
@@ -142,14 +146,17 @@ def connected_components(
     (tests/test_clustering_unit.py) can drive it on synthetic graphs
     whose transitive closure is known.
 
-    Two execution paths, picked by a cheap edge count over the
-    already-materialized edge list:
+    The pairs are checkpointed once, then one bounded fetch of at most
+    ``local_threshold // 2 + 1`` of them (``local_threshold`` counts
+    directed edges, two per pair; ``CC_LOCAL_EDGE_THRESHOLD`` when
+    None) picks one of two execution paths:
 
-    - **small graph** (≤ ``local_threshold`` directed edges): one
-      ``mapInPandas`` task runs union-find over the whole edge list.
-      No rounds, no shuffles — a single core beats any distributed
-      loop at this size, and pair graphs are candidate-scale (bounded
-      by the near-dup rate), not corpus-scale.
+    - **small graph** (the fetch came back short): union-find runs on
+      the driver over the fetched pairs, and the labels return as a
+      local relation. No rounds, no shuffles and no further job — a
+      single core beats any distributed loop at this size, and pair
+      graphs are candidate-scale (bounded by the near-dup rate), not
+      corpus-scale.
     - **large graph**: iterative min-label propagation with pointer
       jumping. Each round takes the min label over neighbors, then
       ``CC_JUMPS_PER_ROUND`` times resolves ``label <- label(label)``
@@ -166,57 +173,51 @@ def connected_components(
     Pass ``local_threshold=0`` to force the distributed loop (used by
     the deep-chain tests) or a huge value to force union-find.
     """
-    edges = (
-        pairs.select(
-            F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-        )
-        .union(
-            pairs.select(
-                F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")
-            )
-        )
-        .localCheckpoint()
+    if local_threshold is None:
+        local_threshold = CC_LOCAL_EDGE_THRESHOLD
+    pairs = pairs.select("doc_id_a", "doc_id_b").localCheckpoint()
+    head = pairs.limit(local_threshold // 2 + 1).toArrow()
+    if 2 * head.num_rows <= local_threshold:
+        return _cc_union_find(pairs.sparkSession, head)
+    edges = pairs.select(
+        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
+    ).union(
+        pairs.select(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst"))
     )
-    if edges.count() <= local_threshold:
-        return _cc_union_find(edges)
     return _cc_label_propagation(edges)
 
 
-def _cc_union_find(edges: DataFrame) -> DataFrame:
-    """Single-task DSU over the materialized edge list. Union-by-min
-    (larger root attaches under smaller) makes every root the minimum
-    id of its component, so ``find`` directly yields the same label
-    the distributed loop converges to."""
+def _cc_union_find(spark: SparkSession, pairs) -> DataFrame:
+    """Driver-side DSU over the fetched pairs (an Arrow table).
+    Union-by-min (larger root attaches under smaller) makes every root
+    the minimum id of its component, so ``find`` directly yields the
+    same label the distributed loop converges to. The labels go back
+    as an Arrow-backed local relation, which no Python worker reads."""
+    import pyarrow as pa
 
-    def dsu(batches):
-        import pandas as pd
+    parent: dict = {}
 
-        parent: dict = {}
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
 
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for s, d in zip(
-                pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-            ):
-                s, d = int(s), int(d)
-                parent.setdefault(s, s)
-                parent.setdefault(d, d)
-                rs, rd = find(s), find(d)
-                if rs != rd:
-                    parent[max(rs, rd)] = min(rs, rd)
-        ids = sorted(parent)
-        yield pd.DataFrame(
-            {"doc_id": ids, "label": [find(x) for x in ids]}
+    for s, d in zip(*(c.to_pylist() for c in pairs.columns)):
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    ids = sorted(parent)
+    labels = [find(x) for x in ids]
+    return spark.createDataFrame(
+        pa.table(
+            {"doc_id": pa.array(ids, pa.int64()), "label": pa.array(labels, pa.int64())}
         )
-
-    return edges.coalesce(1).mapInPandas(dsu, "doc_id long, label long")
+    )
 
 
 def _cc_label_propagation(edges: DataFrame) -> DataFrame:

@@ -13,7 +13,8 @@ Scale notes (100 TB stance):
   shingle index with a document-frequency cap) and only verifies
   within buckets. That is the shape that survives 1000 executors.
 - all hashing is built-in JVM md5/transform/aggregate lambdas — no
-  Python UDFs in any hot path.
+  Python UDFs in any hot path. MinHash takes one md5 per shingle and
+  derives its 16 hash functions arithmetically from it.
 - the self-joins shuffle on the bucket key; hot buckets (stop-shingle
   skew) are removed by the df-cap filter before the join, and AQE
   skew-join handles the rest.
@@ -22,24 +23,25 @@ LSH core: each banded-LSH step has one implementation here, and every
 operator that takes the step calls it (similarity.py's ANN included):
 
 - signatures: ``minhash_bands`` (MinHash band rows from a shingle
-  posting), ``simhash_bands`` (SimHash fingerprint and band rows from
-  text), ``hyperplane_bucket`` and ``embedding_signature`` (random-
-  hyperplane bucket over a plane matrix the caller owns);
+  posting, one md5 per posting row), ``simhash_bands`` (SimHash
+  fingerprint and band rows from text), ``hyperplane_bucket`` and
+  ``embedding_signature`` (random-hyperplane bucket over a plane
+  matrix the caller owns);
 - candidates: ``band_pairs`` (band self-join to distinct canonical
   ``a < b`` pairs) and ``_cosine_bucket_pairs`` (bucket self-join with
   the cosine filter);
 - verify: ``jaccard_verify`` (exact Jaccard on per-document shingle
-  arrays, built by ``_shingle_arrays``).
+  arrays: ``dedup_minhash_lsh`` passes the row-local shingle sets its
+  posting was exploded from, the index probe regroups a posting with
+  ``_shingle_arrays``).
 
 Persisted frames: ``band_pairs`` persists its band rows and
 ``_cosine_bucket_pairs`` its signature rows, because both sides of the
-self-join read them; ``minhash_candidates`` persists the shingle
-posting and ``dedup_minhash_lsh`` the verify arrays. Nothing in this
-module unpersists them: ``minhash_candidates`` hands ``posting`` and
-``bands`` to its caller, and the registry's ``_fresh_cache`` clears
-the session's cache before the next registered query runs. The
-signature builders and ``jaccard_verify`` persist nothing, so the
-index probe built on them stays cache-free.
+self-join read them. Nothing in this module unpersists them:
+``minhash_candidates`` hands ``bands`` to its caller, and the
+registry's ``_fresh_cache`` clears the session's cache before the next
+registered query runs. The signature builders and ``jaccard_verify``
+persist nothing, so the index probe built on them stays cache-free.
 """
 
 from __future__ import annotations
@@ -107,11 +109,30 @@ def _pin_partitions(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism
 
 
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, shingles): each document's distinct
+    word 3-grams, computed row-locally."""
+    return docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w").selectExpr(
+        "doc_id", f"{_SHINGLES_SPARK} AS shingles"
+    )
+
+
+def _corpus_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_shingle_sets`` of the ``documents`` table, hash-partitioned on
+    doc_id at full parallelism (``_pin_partitions``)."""
+    return _shingle_sets(
+        load_table(spark, sf_dir, "documents").repartition(
+            _pin_partitions(spark), "doc_id"
+        )
+    )
+
+
 def _shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted shingle index: (doc_id, n_shingles, shingle), one row
-    per distinct shingle per doc. Shared by the MinHash and n-gram
-    Jaccard variants; call ``.persist()`` at the use site when the
-    posting feeds multiple plan branches.
+    per distinct shingle per doc. Shared by the n-gram Jaccard and
+    contamination variants and the MinHash index stores; call
+    ``.persist()`` at the use site when the posting feeds multiple
+    plan branches.
 
     ``explode_outer``, not ``explode``: a non-outer Generate makes
     Catalyst infer a ``size(shingles) > 0 AND isnotnull(shingles)``
@@ -121,12 +142,7 @@ def _shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE always yields >= 1 element), so outer semantics are identical
     and the inferred filter never exists.
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        _pin_partitions(spark), "doc_id"
-    )
-    sh = docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w").selectExpr(
-        "doc_id", f"{_SHINGLES_SPARK} AS shingles"
-    )
+    sh = _corpus_shingle_sets(spark, sf_dir)
     return sh.select(
         "doc_id",
         F.size("shingles").alias("n"),
@@ -240,17 +256,30 @@ def dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 2. MinHash + LSH near-dedup.
 # ---------------------------------------------------------------------------
-# Each of the K hash functions is the first 15 hex digits (60 bits) of
-# md5(shingle || '#i'), cast to BIGINT. Numeric (not string) on purpose:
-# Spark's MIN over a string falls back to SortAggregate (immutable agg
-# buffers — exchange + sort per aggregation), while MIN over a long
-# stays in HashAggregate with map-side partial min. DuckDB replays the
-# identical value via its hex-literal cast, so the oracle still matches
-# bit-for-bit.
-_MINHASH_HASH_SPARK = (
-    "cast(conv(substr(md5(concat(shingle, '#{i}')), 1, 15), 16, 10) as bigint)"
+# One md5 per shingle: its first 15 hex digits (60 bits) mod the
+# Mersenne prime p = 2^31 - 1 give the base hash x, and the K hash
+# functions are the universal family h_i(x) = (a_i·x + b_i) mod p —
+# the family Spark MLlib's MinHashLSH uses — with a_i in [1, p) and
+# b_i in [0, p) drawn once from a fixed seed. a_i, b_i and x are below
+# p, so every intermediate stays below 2^63 in both dialects. Numeric
+# (not string) on purpose: Spark's MIN over a string falls back to
+# SortAggregate (immutable agg buffers — exchange + sort per
+# aggregation), while MIN over a long stays in HashAggregate with
+# map-side partial min. DuckDB replays the identical value via its
+# hex-literal cast, so the oracle still matches bit-for-bit.
+MINHASH_PRIME = 2_147_483_647
+_MINHASH_A, _MINHASH_B = np.random.default_rng(7).integers(
+    (1, 0), MINHASH_PRIME, (MINHASH_K, 2)
+).T
+_MINHASH_BASE_SPARK = (
+    f"cast(conv(substr(md5(shingle), 1, 15), 16, 10) as bigint) % {MINHASH_PRIME}"
 )
-_MINHASH_HASH_DUCK = "('0x' || substr(md5(s || '#{i}'), 1, 15))::BIGINT"
+_MINHASH_BASE_DUCK = f"('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_PRIME}"
+
+
+def _minhash_fn(i: int) -> str:
+    """The i-th hash function of base hash ``x``, in either dialect."""
+    return f"({_MINHASH_A[i]} * x + {_MINHASH_B[i]}) % {MINHASH_PRIME}"
 
 
 def _band_exprs() -> list[str]:
@@ -266,14 +295,12 @@ def _band_exprs() -> list[str]:
 
 def minhash_bands(posting: DataFrame) -> DataFrame:
     """(doc_id, shingle) posting → (doc_id, band_id, band_key) band
-    rows: the MINHASH_K min-hashes as grouped MIN aggregates, cut into
-    LSH_BANDS band keys. The band index stores exactly these rows.
-    Persists nothing."""
-    sig = posting.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_MINHASH_HASH_SPARK.format(i=i))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ]
+    rows: one base hash per posting row, the MINHASH_K min-hashes as
+    grouped MIN aggregates over it, cut into LSH_BANDS band keys. The
+    band index stores exactly these rows. Persists nothing."""
+    base = posting.selectExpr("doc_id", f"{_MINHASH_BASE_SPARK} AS x")
+    sig = base.groupBy("doc_id").agg(
+        *[F.min(F.expr(_minhash_fn(i))).alias(f"h{i}") for i in range(MINHASH_K)]
     )
     stack_args = ", ".join(f"{b}, band_{b}" for b in range(LSH_BANDS))
     return sig.selectExpr("doc_id", *_band_exprs()).selectExpr(
@@ -285,7 +312,7 @@ def _minhash_bands_duck(where: str) -> str:
     """DuckDB twin of ``_shingle_posting`` + ``minhash_bands`` over
     ``documents{where}``: the sh, sig0, sig and bands CTEs."""
     mins = ",\n    ".join(
-        f"list_min(list_transform(shingles, s -> {_MINHASH_HASH_DUCK.format(i=i)})) AS h{i}"
+        f"list_min(list_transform(xs, x -> {_minhash_fn(i)})) AS h{i}"
         for i in range(MINHASH_K)
     )
     band_union = "\n    UNION ALL\n    ".join(
@@ -299,7 +326,7 @@ def _minhash_bands_duck(where: str) -> str:
 sig0 AS (
   SELECT doc_id,
     {mins}
-  FROM sh
+  FROM (SELECT doc_id, list_transform(shingles, s -> {_MINHASH_BASE_DUCK}) AS xs FROM sh)
 ),
 sig AS (
   SELECT doc_id, {", ".join(_band_exprs())} FROM sig0
@@ -332,18 +359,19 @@ WHERE len(list_intersect(sa.shingles, sb.shingles)) * 1.0
 def minhash_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(posting, bands, candidate-pairs) for MinHash LSH — candidates
-    are pre-verification. Split out of the query so
+    """(shingle sets, bands, candidate-pairs) for MinHash LSH —
+    candidates are pre-verification. Split out of the query so
     tests/test_dedup_scale.py can measure candidate volume directly —
     the quantity that must grow linearly with the duplicate count for
-    the operator to survive 100 TB. Both ``posting`` and ``bands``
-    come back persisted: ``posting`` here (the signature aggregation
-    and the verify arrays both read it), ``bands`` by ``band_pairs``.
-    Callers that run many invocations in one session should unpersist
-    both when done."""
-    posting = _shingle_posting(spark, sf_dir).persist()
+    the operator to survive 100 TB. The shingle sets ``(doc_id,
+    shingles)`` feed both the posting the signatures aggregate and the
+    verify arrays; they are not persisted. ``bands`` comes back
+    persisted by ``band_pairs``: callers that run many invocations in
+    one session should unpersist it when done."""
+    sets = _corpus_shingle_sets(spark, sf_dir)
+    posting = sets.select("doc_id", F.explode_outer("shingles").alias("shingle"))
     bands = minhash_bands(posting)
-    return posting, bands, band_pairs(bands)
+    return sets, bands, band_pairs(bands)
 
 
 @register("dedup_minhash_lsh", oracle=_minhash_oracle(), tags=("dedup", "llm"))
@@ -353,24 +381,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pipeline: repartition the single-file scan on doc_id (the fixture
     is one parquet file — without this every downstream stage is one
-    task), explode distinct shingles to postings ONCE and ``persist``
-    (the posting table feeds the signature agg AND the verify arrays;
-    unpersisted, each reference re-derives the whole shingle subtree —
-    the round-1 bench showed it computed 4x), take the 16 min-hashes
-    as grouped MIN aggregates over *numeric* 60-bit hashes (map-side
-    partial min in HashAggregate — string mins fall back to
-    SortAggregate) → 4 band keys → self-join on band key → Jaccard
-    verify on per-document shingle arrays, so candidate volume stays
-    O(near-dups), never O(n²)."""
-    posting, _bands, cand = minhash_candidates(spark, sf_dir)
-    # The array table is PERSISTED (r18, VERDICT r17 item 5): the
-    # persisted posting is hash-partitioned on (doc_id, shingle) —
-    # its distinct() key — which does NOT cluster by doc_id alone, so
-    # each of the two verify joins re-aggregated its own copy behind
-    # a fresh hashpartitioning(doc_id) exchange. Caching the
-    # doc-count-sized array table pays that exchange once, and both
-    # joins then read an InMemoryRelation already partitioned on doc_id.
-    arrs = _shingle_arrays(posting).persist()
+    task), shingle each document row-locally, explode the shingles to
+    postings, take one md5 base hash per posting and the 16 min-hashes
+    as grouped MIN aggregates over *numeric* hashes (the posting is
+    already partitioned on doc_id, so no exchange; map-side partial min
+    in HashAggregate — string mins fall back to SortAggregate) → 4 band
+    keys → self-join on band key → Jaccard verify on the same
+    per-document shingle arrays, so candidate volume stays
+    O(near-dups), never O(n²). Only the band rows are persisted (by
+    ``band_pairs``)."""
+    sets, _bands, cand = minhash_candidates(spark, sf_dir)
+    arrs = sets.withColumnRenamed("shingles", "sh")
     return jaccard_verify(cand, arrs, arrs)
 
 
@@ -1703,10 +1724,8 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _posting_from_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → exploded (doc_id, shingle) posting — shared by
     the index probe and the incremental ingest."""
-    return (
-        docs.selectExpr("doc_id", f"{_WORDS_SPARK} AS w")
-        .selectExpr("doc_id", f"{_SHINGLES_SPARK} AS shingles")
-        .select("doc_id", F.explode_outer("shingles").alias("shingle"))
+    return _shingle_sets(docs).select(
+        "doc_id", F.explode_outer("shingles").alias("shingle")
     )
 
 

@@ -62,8 +62,8 @@ def _fresh_cache(fn: QueryFn) -> QueryFn:
     """Driver-surface wrapper: drop cached blocks left by the PREVIOUS
     query before running this one.
 
-    Several operators persist() self-join subtrees (minhash postings,
-    simhash bands, shingle arrays, ...). The terminal action happens
+    Several operators persist() self-join subtrees (MinHash and SimHash
+    band rows, n-gram postings, ...). The terminal action happens
     in the driver AFTER the query fn returns, so a fn cannot unpersist
     its own frames — clearing at the start of the next query instead
     caps a 113-query session's cache footprint at one query's working

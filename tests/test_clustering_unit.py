@@ -78,6 +78,22 @@ def test_raises_instead_of_silently_splitting_when_cap_hit(spark, monkeypatch):
         connected_components(df, local_threshold=0).collect()
 
 
+def test_driver_union_find_matches_label_propagation(spark):
+    # the two execution paths of connected_components must agree: a
+    # chain bridged into a star, plus a separate pair, with edges given
+    # in both orientations and one repeated
+    pairs = [(i, i + 1) for i in range(1, 8)] + [(8, 50), (50, 51), (52, 50)]
+    pairs += [(50, 53), (99, 98), (2, 1)]
+    local = _clusters(spark, pairs)
+    assert local == _clusters(spark, pairs, local_threshold=0)
+    want = {i: 1 for i in [*range(1, 9), *range(50, 54)]}
+    assert local == {**want, 98: 98, 99: 98}
+
+
+def test_driver_union_find_on_an_empty_pair_list(spark):
+    assert _clusters(spark, []) == {}
+
+
 def test_pagerank_conserves_probability_mass(spark, sf_dir):
     """On a dangling-free graph every PageRank iteration redistributes
     the full rank mass: after any number of damped steps the ranks

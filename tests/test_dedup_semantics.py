@@ -216,3 +216,36 @@ def test_jaccard_verify_is_exact_set_jaccard(spark):
     # intersection (1, 5) do not
     assert want == {(1, 2): 0.8, (3, 4): 0.7}
     assert got == want
+
+
+def test_minhash_bands_match_duckdb_twin(spark):
+    # one md5 per shingle, then (a_i * x + b_i) mod p: Spark's grouped
+    # MIN aggregates and DuckDB's list_min(list_transform(...)) must
+    # give the same band rows, so the MinHash oracles stay exact
+    import duckdb
+    import pandas as pd
+
+    from golang_etl_spark.operators.dedup import (
+        LSH_BANDS,
+        _minhash_bands_duck,
+        _posting_from_docs,
+        minhash_bands,
+    )
+
+    docs = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "two words"),  # shorter than a shingle: one whole-text shingle
+        (4, "a b c a b c a b c"),  # repeated shingles count once
+        (5, "  padded   text with   irregular spacing here  "),
+    ]
+    posting = _posting_from_docs(
+        spark.createDataFrame(docs, "doc_id long, text string")
+    )
+    got = sorted(tuple(r) for r in minhash_bands(posting).collect())
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    bands = f"WITH {_minhash_bands_duck('')} SELECT doc_id, band_id, band_key FROM bands"
+    want = sorted(con.execute(bands).fetchall())
+    assert len(got) == len(docs) * LSH_BANDS
+    assert got == want

@@ -144,3 +144,68 @@ def test_null_key_row_read_exactly_once(spark, tmp_path):
         assert got.rdd.getNumPartitions() == parts, read.__name__
         assert got.count() == len(rows), read.__name__
         assert got.filter(F.col("id").isNull()).count() == 1, read.__name__
+
+
+def _bounds_via_spark_read(spark, spec, job, qpk):
+    """The range plan as the bounds query read through Spark's JDBC
+    source would give it (a derived-table wrapper and a job)."""
+    from golang_etl_spark.etl import plan_range_partitions
+
+    lo, hi = spark.read.format("jdbc").options(
+        url=spec.shards[job.db],
+        query=f"SELECT MIN({qpk}) AS mn, MAX({qpk}) AS mx FROM {job.table}",
+    ).load().first()
+    cap = min(spec.fetch_concurrency, spark.sparkContext.defaultParallelism)
+    return plan_range_partitions(int(lo), int(hi), spec.stride, cap)
+
+
+def _jobs_started(spark, fn):
+    sc = spark.sparkContext
+    group = "plan_jdbc_read_probe"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_jdbc_read_starts_no_spark_job(spark, seeded, tmp_path):
+    """The bounds query runs on a driver connection: no Spark job, and
+    the same plan as reading it through Spark's JDBC source, also for a
+    table with a NULL key."""
+    rows = [(None, "null-key")] + [(i, f"row{i}") for i in range(7, 2_001)]
+    spark.createDataFrame(rows, "id long, data string").write.jdbc(
+        URL, "bounds_null_keys", mode="overwrite"
+    )
+    spec, job = seeded
+    null_job = TableJob(
+        table="bounds_null_keys",
+        output=str(tmp_path / "out"),
+        primary_key="id",
+        db="derby0",
+    )
+    for s, j in ((spec, job), (dataclasses.replace(spec, stride=100), null_job)):
+        (qpk, plan), n_jobs = _jobs_started(
+            spark, lambda: plan_jdbc_read(spark, s, j)
+        )
+        assert n_jobs == 0, j.table
+        assert qpk == '"id"'
+        assert plan == _bounds_via_spark_read(spark, s, j, qpk), j.table
+    assert plan.lower_bound == 7 and plan.upper_bound == 2_001
+
+
+def test_plan_jdbc_read_rejects_tables_without_a_key_range(spark, tmp_path):
+    """An empty table and a table whose keys are all NULL have no range
+    to plan: both raise instead of planning a scan."""
+    tables = {"bounds_empty": [], "bounds_all_null": [(None, "a"), (None, "b")]}
+    for table, rows in tables.items():
+        spark.createDataFrame(rows, "id long, data string").write.jdbc(
+            URL, table, mode="overwrite"
+        )
+        job = TableJob(
+            table=table, output=str(tmp_path / table), primary_key="id", db="derby0"
+        )
+        spec = JobSpec(shards={"derby0": URL}, jobs=(job,), source_format="jdbc")
+        with pytest.raises(ValueError, match="no rows / null pk"):
+            plan_jdbc_read(spark, spec, job)

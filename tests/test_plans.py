@@ -192,15 +192,41 @@ def test_profile_exact_shape(spark, sf_dir):
     assert len(single_col) >= 5, schemas
 
 
-def test_cluster_cc_truncates_lineage(spark, sf_dir):
+def test_cluster_cc_truncates_lineage(spark, sf_dir, monkeypatch):
     # each propagation round localCheckpoints its labels: the final
     # plan must read flat checkpointed RDDs, not replay the SimHash
     # pair-generation + N-round join lineage (which grows ~3^rounds
-    # and once rendered a 2 GB plan string)
+    # and once rendered a 2 GB plan string). The fixture's pair graph
+    # is small enough for the driver union-find, so force the rounds.
+    from golang_etl_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "CC_LOCAL_EDGE_THRESHOLD", 0)
     plan = _plan(spark, sf_dir, "dedup_cluster_cc")
     assert "ExistingRDD" in plan, "labels not checkpointed"
     assert "md5" not in plan, "SimHash subtree leaked into final plan"
     assert len(plan) < 20_000, f"plan string blew up: {len(plan)} chars"
+
+
+def test_cluster_cc_driver_labels_carry_no_lineage(spark, sf_dir):
+    # the default path union-finds candidate-scale graphs on the
+    # driver: its labels are a local relation, with nothing of the
+    # SimHash pair generation left in the final plan
+    plan = _plan(spark, sf_dir, "dedup_cluster_cc")
+    assert "LocalTableScan" in plan
+    assert "md5" not in plan, "SimHash subtree leaked into final plan"
+    assert len(plan) < 20_000, f"plan string blew up: {len(plan)} chars"
+
+
+def test_minhash_hashes_each_shingle_once(spark, sf_dir):
+    # one md5 per shingle feeds all 16 min-hashes (it renders once per
+    # side of the band self-join, both the same cached subtree), and
+    # the verify arrays come from the per-document shingle sets, not
+    # from regrouping the exploded posting
+    import re
+
+    plan = _plan(spark, sf_dir, "dedup_minhash_lsh")
+    assert len(set(re.findall(r"md5\([^)]*\)", plan))) == 1, plan
+    assert "collect_list" not in plan, plan
 
 
 def test_partitioned_sink_prunes(spark, sf_dir):
