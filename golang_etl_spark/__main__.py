@@ -4,9 +4,10 @@
     python -m golang_etl_spark --jobspec jobs.yaml [--master local[8]]
 
 Loads the YAML job spec (shards, table jobs, tuning knobs), runs every
-extract job through the tuned session, and prints one JSON line of
-rows-written per job — the same lifecycle the reference hard-codes in
-main(), driven by config instead.
+extract job through the tuned session (up to four jobs at once, on
+driver threads), and prints one JSON line of rows-written per job —
+the same lifecycle the reference hard-codes in main(), driven by
+config instead.
 """
 
 from __future__ import annotations
@@ -25,30 +26,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--master", default=None, help="Spark master override (default: env)"
     )
-    def _thread_count(s: str) -> int:
-        # reject 0/negative explicitly — a silent fall-back to
-        # sequential would mask a typo like '--concurrent -2'
-        n = int(s)
-        if n < 1:
-            raise argparse.ArgumentTypeError(
-                f"--concurrent needs N >= 1, got {n}"
-            )
-        return n
-
-    p.add_argument(
-        "--concurrent",
-        type=_thread_count,
-        nargs="?",
-        const=4,
-        default=0,
-        metavar="N",
-        help="run table jobs on an N-thread pool (default sequential; "
-        "bare --concurrent uses 4) — the Python variant's concurrent "
-        "mode (py_extractor.py:96-105)",
-    )
     args = p.parse_args(argv)
 
-    from golang_etl_spark.etl import run_jobspec, run_jobspec_concurrent
+    from golang_etl_spark.etl import run_jobspec
     from golang_etl_spark.jobspec import JobSpec
     from golang_etl_spark.session import get_spark
 
@@ -58,10 +38,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     spark = get_spark(app_name="golang_etl_spark_cli", master=args.master)
     try:
-        if args.concurrent > 0:
-            counts = run_jobspec_concurrent(spark, spec, args.concurrent)
-        else:
-            counts = run_jobspec(spark, spec)
+        counts = run_jobspec(spark, spec)
     finally:
         spark.stop()
     print(json.dumps({"rows_written": counts}))

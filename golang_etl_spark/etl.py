@@ -6,10 +6,10 @@ chunks (:270-287) -> concurrent fetch over pooled connections (:41-112)
 -> bounded channel (:262) -> 100k-row batched snappy parquet files
 (:114-193).
 
-Spark restatement: ``spark.read.jdbc(..., partitionColumn=pk,
-lowerBound, upperBound, numPartitions)`` generates the
-``pk >= ? AND pk < ?`` range predicates server-side; the write is
-``df.write.option('maxRecordsPerFile', 100000).parquet(out)``. The
+Spark restatement: ``spark.read.jdbc(url, table, predicates=[...])``
+with one ``pk >= lo AND pk < hi`` WHERE clause per chunk, the first
+open below (and taking NULL keys) and the last open above; the write is
+``sinks.write_parquet`` (snappy, ``maxRecordsPerFile`` 100,000). The
 channel, semaphores, row pool, and JSON round-trip disappear — Spark's
 task scheduler, Tungsten memory, and native parquet writer replace
 them. Unlike the reference (which silently drops rows on scan error,
@@ -19,8 +19,8 @@ Partitions = min(stride chunks, ``fetch_concurrency``, session cores):
 each is one statement against the source (a full scan where the key
 has no index), and chunks beyond the cores buy no parallelism.
 
-Pure planning helpers (stride math, JDBC options, predicates) are
-separated from execution so they unit-test without a live database.
+Pure planning helpers (stride math, predicates) are separated from
+execution so they unit-test without a live database.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from golang_etl_spark.jobspec import JobSpec, TableJob
 from golang_etl_spark.registry import register
 from golang_etl_spark.sources.catalog import load_table
+from golang_etl_spark.sources.sinks import write_parquet
 
 
 # ---------------------------------------------------------------------------
@@ -55,11 +56,9 @@ def plan_range_partitions(
     chunks of `stride` keys, with the final chunk end bumped to
     max_key+1 so the max key is included.
 
-    Spark's JDBC reader computes strides from (lower, upper,
-    numPartitions); feeding upper = max_key + 1 and numPartitions =
-    ceil(span/stride) reproduces the reference's chunks. Above
-    max_partitions the stride widens until the chunks fit;
-    num_partitions always counts the chunks."""
+    Above max_partitions the stride widens until the chunks fit;
+    num_partitions always counts the chunks, one predicate each in
+    predicates_for_plan."""
     if min_key > max_key:
         raise ValueError(f"empty key range: [{min_key}, {max_key}]")
     span = max_key - min_key + 1
@@ -72,44 +71,24 @@ def plan_range_partitions(
     )
 
 
-def jdbc_scan_options(
-    url: str, table: str, pk: str, plan: RangePartitionPlan, fetch_concurrency: int = 20
-) -> dict[str, str]:
-    """Options dict for a partitioned JDBC read — the declarative
-    equivalent of the reference's fetch goroutines + semaphore
-    (extractor.go:41-112, :267). numPartitions both parallelizes and
-    caps concurrent connections (the semaphore's role); plan_jdbc_read
-    also caps it at the session's cores."""
-    return {
-        "url": url,
-        "dbtable": table,
-        "partitionColumn": pk,
-        "lowerBound": str(plan.lower_bound),
-        "upperBound": str(plan.upper_bound),
-        "numPartitions": str(min(plan.num_partitions, fetch_concurrency)),
-        "fetchsize": "10000",
-    }
-
-
 def predicates_for_plan(qpk: str, plan: RangePartitionPlan) -> list[str]:
-    """The reference's stride loop rendered literally: one WHERE
-    clause per chunk (`pk >= lo AND pk < hi`), for Spark's
-    predicates-list JDBC API. Unlike partitionColumn bounds (numeric/
-    date columns only, uniform stride), an explicit predicate list
-    partitions on ANYTHING the database can evaluate — hash buckets of
-    a string key, tenant lists, the balanced ranges
-    etl_plan_balanced_ranges computes — which is the API to reach for
-    when the reference's integer-PK assumption breaks. `qpk` is the
-    dialect-quoted key. The first predicate also takes NULL keys, as
-    partitionColumn reads do; otherwise those rows vanish silently."""
-    out = []
-    lo = plan.lower_bound
-    while lo < plan.upper_bound:
-        hi = min(lo + plan.stride, plan.upper_bound)
-        out.append(f"{qpk} >= {lo} AND {qpk} < {hi}")
-        lo = hi
-    out[0] += f" OR {qpk} IS NULL"
-    return out
+    """The reference's stride loop rendered as one WHERE clause per
+    chunk, for Spark's predicates-list JDBC API. The first clause is
+    open below and takes NULL keys, the last is open above, and a
+    one-chunk plan reads everything (``1 = 1``): a key written outside
+    [MIN, MAX] after the bounds query is still read, exactly once.
+    An explicit list partitions on anything the database can evaluate
+    (hash buckets of a string key, the balanced ranges
+    etl_plan_balanced_ranges computes), not only a uniform numeric
+    stride. `qpk` is the dialect-quoted key."""
+    cuts = range(plan.lower_bound + plan.stride, plan.upper_bound, plan.stride)
+    if not cuts:
+        return ["1 = 1"]
+    return (
+        [f"{qpk} < {cuts[0]} OR {qpk} IS NULL"]
+        + [f"{qpk} >= {lo} AND {qpk} < {hi}" for lo, hi in zip(cuts, cuts[1:])]
+        + [f"{qpk} >= {cuts[-1]}"]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -118,8 +97,8 @@ def predicates_for_plan(qpk: str, plan: RangePartitionPlan) -> list[str]:
 def plan_jdbc_read(
     spark: SparkSession, spec: JobSpec, job: TableJob
 ) -> tuple[str, RangePartitionPlan]:
-    """The dialect-quoted key and the range plan both JDBC readers
-    scan by: min(stride chunks, fetch_concurrency, session cores)
+    """The dialect-quoted key and the range plan the JDBC reader scans
+    by: min(stride chunks, fetch_concurrency, session cores)
     partitions over the key's MIN/MAX bounds. Spark's JDBC writer
     quotes identifiers at CREATE time, so case-folding databases
     (Derby, Postgres) store the exact-case name; and a hardcoded '"'
@@ -160,38 +139,24 @@ def plan_jdbc_read(
 def read_shard_table(
     spark: SparkSession, spec: JobSpec, job: TableJob
 ) -> DataFrame:
-    """Read one shard's table. JDBC shards get a partitionColumn range
-    scan of min(stride chunks, fetch_concurrency, cores) partitions;
-    parquet/file shards read directly (Spark splits files natively)."""
+    """Read one shard's table. JDBC shards read one partition per
+    predicate of the plan, min(stride chunks, fetch_concurrency, cores)
+    of them — the reference's one-goroutine-per-chunk loop
+    (extractor.go:274-287); parquet/file shards read directly (Spark
+    splits files natively)."""
     location = spec.shards[job.db]
     if spec.source_format == "parquet":
         return spark.read.parquet(f"{location}/{job.table}.parquet")
-    _qpk, plan = plan_jdbc_read(spark, spec, job)
-    opts = jdbc_scan_options(
-        location, job.table, job.primary_key, plan, spec.fetch_concurrency
-    )
-    return spark.read.format("jdbc").options(**opts).load()
-
-
-def read_shard_table_predicates(
-    spark: SparkSession, spec: JobSpec, job: TableJob
-) -> DataFrame:
-    """read_shard_table's twin on the predicates-list JDBC API: the same
-    plan, min(stride chunks, fetch_concurrency, cores) partitions, each
-    an explicit WHERE clause (jdbc(url, table, predicates=[...])) — the
-    reference's one-goroutine-per-chunk loop (extractor.go:274-287)."""
     qpk, plan = plan_jdbc_read(spark, spec, job)
     return spark.read.jdbc(
-        url=spec.shards[job.db],
+        url=location,
         table=job.table,
         predicates=predicates_for_plan(qpk, plan),
         properties={"fetchsize": "10000"},
     )
 
 
-def extract_table(
-    spark: SparkSession, spec: JobSpec, job: TableJob, mode: str = "overwrite"
-) -> int:
+def extract_table(spark: SparkSession, spec: JobSpec, job: TableJob) -> int:
     """One table job end-to-end (scan -> snappy parquet, ≤100k rows per
     file). Returns rows written. The write action IS the barrier the
     reference builds manually (extractor.go:292-296).
@@ -205,47 +170,39 @@ def extract_table(
     df = read_shard_table(spark, spec, job).observe(
         obs, F.count(F.lit(1)).alias("n")
     )
-    (
-        df.write.mode(mode)
-        .option("compression", spec.compression)
-        .option("maxRecordsPerFile", str(spec.max_records_per_file))
-        .parquet(job.output)
-    )
+    write_parquet(df, job.output, spec.compression, spec.max_records_per_file)
     return int(obs.get["n"])
 
 
+# Driver threads that submit table jobs. Each action already fans out
+# to every core, so this is an overlap dial, not a parallelism
+# multiplier.
+MAX_CONCURRENT_JOBS = 4
+
+
 def run_jobspec(spark: SparkSession, spec: JobSpec) -> dict[str, int]:
-    """All table jobs. The reference runs tables sequentially
-    (extractor.go:260) and its Python variant fully concurrently
-    (py_extractor.py:96-105); sequential actions are fine here since
-    each action already saturates the cluster."""
-    return {f"{j.db}.{j.table}": extract_table(spark, spec, j) for j in spec.jobs}
+    """All table jobs on a pool of min(jobs, MAX_CONCURRENT_JOBS)
+    driver threads — the Python variant's ``asyncio.gather`` over
+    shards x tables (python/py_extractor.py:96-105 in the reference),
+    where the Go main loop is sequential (extractor.go:260-297).
 
-
-def run_jobspec_concurrent(
-    spark: SparkSession, spec: JobSpec, max_workers: int = 4
-) -> dict[str, int]:
-    """All table jobs on a small driver thread pool — parity with the
-    Python variant's ``asyncio.gather`` over shards x tables
-    (/root/reference/python/py_extractor.py:96-105), where the Go main
-    loop is sequential (extractor.go:260-297).
-
-    Spark's scheduler interleaves actions submitted from multiple
-    driver threads across the same executors, so this helps exactly
-    when one job alone cannot saturate the cluster: many small tables,
-    a straggling final task, or source-side (JDBC) latency. The pool is
-    deliberately small — each action already fans out to every core,
-    so max_workers is an overlap dial, not a parallelism multiplier.
-    Any job failure propagates after all submitted jobs settle (no
+    Spark's scheduler interleaves actions submitted from several driver
+    threads across the same executors, which helps where one job alone
+    cannot saturate the cluster: many small tables, a straggling final
+    task, or source-side (JDBC) latency. It does not lift the
+    connection cap: the session runs at most `cores` tasks at once
+    across all jobs, and each task holds one connection. Every job
+    settles before the first failure, in spec order, is raised (no
     silent partial success — unlike the reference's silent row drops,
     extractor.go:88-91)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=max(1, max_workers)) as pool:
+    workers = max(1, min(len(spec.jobs), MAX_CONCURRENT_JOBS))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         # a LIST, not a dict: duplicate db.table keys (same table to two
         # outputs) must still have every future's result() consumed so
         # a shadowed job's failure propagates — the final dict then
-        # collapses last-wins, matching the sequential loop
+        # collapses last-wins
         futures = [
             (f"{j.db}.{j.table}", pool.submit(extract_table, spark, spec, j))
             for j in spec.jobs

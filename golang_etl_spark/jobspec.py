@@ -15,7 +15,7 @@ BYTE_ARRAY/UTF8 -> StringType, repetitiontype=REQUIRED -> nullable=False).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 import yaml
 from pyspark.sql import types as T
@@ -181,12 +181,11 @@ class JobSpec:
             )
             for j in doc.get("jobs", [])
         )
-        return JobSpec(
-            shards=dict(doc.get("shards", {})),
-            jobs=jobs,
-            stride=int(doc.get("stride", 10_000)),
-            max_records_per_file=int(doc.get("max_records_per_file", 100_000)),
-            compression=str(doc.get("compression", "snappy")),
-            fetch_concurrency=int(doc.get("fetch_concurrency", 20)),
-            source_format=str(doc.get("source_format", "jdbc")),
-        )
+        # only the knobs the file sets, cast to their default's type:
+        # the defaults live once, in the fields above
+        knobs = {
+            fld.name: type(fld.default)(doc[fld.name])
+            for fld in fields(JobSpec)
+            if fld.name in doc and fld.name not in ("shards", "jobs")
+        }
+        return JobSpec(shards=dict(doc.get("shards", {})), jobs=jobs, **knobs)

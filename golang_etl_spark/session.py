@@ -17,10 +17,6 @@ from pyspark.sql import SparkSession
 # batches (/root/reference/extractor.go:119).
 DEFAULT_MAX_RECORDS_PER_FILE = 100_000
 
-# Default key stride for partitioned range scans
-# (/root/reference/extractor.go:270).
-DEFAULT_RANGE_STRIDE = 10_000
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))

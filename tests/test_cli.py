@@ -54,10 +54,10 @@ def test_cli_rejects_empty_jobspec(tmp_path):
     assert "no jobs" in proc.stderr
 
 
-def test_cli_concurrent_jobs(tmp_path, sf_dir):
-    """--concurrent schedules table jobs on a thread pool (the Python
-    variant's mode, py_extractor.py:96-105): both outputs must land,
-    complete and correct."""
+def test_cli_runs_two_table_jobspec(tmp_path, sf_dir):
+    """Both jobs of a two-table spec (run on the runner's thread pool,
+    the Python variant's mode, py_extractor.py:96-105) land, complete
+    and correct."""
     spec = tmp_path / "jobs.yaml"
     out_region = tmp_path / "out" / "region"
     out_nation = tmp_path / "out" / "nation"
@@ -81,7 +81,7 @@ def test_cli_concurrent_jobs(tmp_path, sf_dir):
     )
     proc = subprocess.run(
         [sys.executable, "-m", "golang_etl_spark", "--jobspec", str(spec),
-         "--master", "local[4]", "--concurrent", "2"],
+         "--master", "local[4]"],
         capture_output=True,
         text=True,
         timeout=300,

@@ -2,19 +2,18 @@
 
 Covers SURVEY.md §5.3: partition-bounds math (including the
 reference's maxKey+1 half-open fixup, /root/reference/extractor.go:
-276-279), the YAML-schema -> StructType loader (replacing
-/root/reference/schema/read_schema.go), and JDBC option synthesis.
+276-279), the YAML-schema -> StructType loader (replacing the
+reference's schema/read_schema.go), and the JDBC predicates.
 """
 
+import duckdb
 import pytest
 import yaml
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from golang_etl_spark.etl import (
-    RangePartitionPlan,
-    jdbc_scan_options,
-    plan_range_partitions,
-)
+from golang_etl_spark.etl import plan_range_partitions, predicates_for_plan
 from golang_etl_spark.jobspec import (
     JobSpec,
     format_field,
@@ -58,15 +57,33 @@ class TestRangePartitioning:
         with pytest.raises(ValueError, match="empty key range"):
             plan_range_partitions(10, 5)
 
-    def test_jdbc_options_cap_concurrency(self):
-        # numPartitions is also the DB-connection cap — parity with the
-        # 20-slot fetch semaphore (extractor.go:267)
-        plan = RangePartitionPlan(1, 1_000_001, 100, 10_000)
-        opts = jdbc_scan_options("jdbc:mysql://h/db", "t", "id", plan, 20)
-        assert opts["numPartitions"] == "20"
-        assert opts["lowerBound"] == "1"
-        assert opts["upperBound"] == "1000001"
-        assert opts["partitionColumn"] == "id"
+
+@settings(max_examples=200, deadline=None)
+@given(
+    lo=st.integers(-10**6, 10**6),
+    span=st.integers(1, 50_000),
+    stride=st.integers(1, 20_000),
+    cap=st.integers(1, 40),
+)
+def test_predicates_cover_every_key_exactly_once(lo, span, stride, cap):
+    """Every key (below MIN, inside the plan, above MAX, and NULL)
+    matches exactly one predicate, evaluated by DuckDB: a key written
+    outside [MIN, MAX] after the bounds query is neither lost nor read
+    twice."""
+    hi = lo + span - 1
+    plan = plan_range_partitions(lo, hi, stride, cap)
+    preds = predicates_for_plan("k", plan)
+    assert len(preds) == plan.num_partitions <= cap
+    cuts = range(lo + plan.stride, hi + 1, plan.stride)
+    keys = {lo - 10**9, lo - plan.stride, lo - 1, lo, hi, hi + 1, hi + plan.stride, hi + 10**9}
+    keys |= {c + d for c in [*cuts[:3], *cuts[-3:]] for d in (-1, 0)}
+    hits = " + ".join(f"CASE WHEN {p} THEN 1 ELSE 0 END" for p in preds)
+    rows = duckdb.execute(
+        f"SELECT k, {hits} FROM (SELECT unnest(?::BIGINT[]) AS k)",
+        [sorted(keys) + [None]],
+    ).fetchall()
+    assert len(rows) == len(keys) + 1
+    assert [k for k, n in rows if n != 1] == []
 
 
 class TestSchemaLoader:
@@ -192,28 +209,32 @@ class TestJobSpec:
         assert spec.jobs[0].table == "big_table_1"
         assert spec.shards["jerry"] == "/data/jerry"
 
+    def test_from_yaml_casts_the_knobs_it_sets(self, tmp_path):
+        p = tmp_path / "job.yaml"
+        p.write_text('stride: "500"\nfetch_concurrency: 4.0\ncompression: zstd\n')
+        spec = JobSpec.from_yaml(str(p))
+        assert (spec.stride, spec.fetch_concurrency, spec.compression) == (500, 4, "zstd")
+        assert type(spec.stride) is int and type(spec.fetch_concurrency) is int
+        assert spec.max_records_per_file == 100_000 and spec.source_format == "jdbc"
+        assert spec.jobs == () and spec.shards == {}
 
-def test_run_jobspec_concurrent_matches_sequential(spark, sf_dir, tmp_path):
-    """Thread-pooled job execution writes the same results as the
-    sequential loop (and surfaces failures instead of dropping jobs)."""
-    from golang_etl_spark.etl import run_jobspec, run_jobspec_concurrent
+
+def test_run_jobspec_two_tables(spark, sf_dir, tmp_path):
+    """Both jobs of a two-table spec land, with their row counts."""
+    from golang_etl_spark.etl import run_jobspec
     from golang_etl_spark.jobspec import JobSpec, TableJob
 
-    def spec(sub):
-        return JobSpec(
-            shards={"shard0": sf_dir},
-            source_format="parquet",
-            jobs=(
-                TableJob("region", str(tmp_path / sub / "region"),
-                         "r_regionkey", "shard0"),
-                TableJob("nation", str(tmp_path / sub / "nation"),
-                         "n_nationkey", "shard0"),
-            ),
-        )
-
-    seq = run_jobspec(spark, spec("seq"))
-    con = run_jobspec_concurrent(spark, spec("con"), max_workers=2)
-    assert con == seq == {"shard0.region": 5, "shard0.nation": 25}
+    spec = JobSpec(
+        shards={"shard0": sf_dir},
+        source_format="parquet",
+        jobs=(
+            TableJob("region", str(tmp_path / "region"), "r_regionkey", "shard0"),
+            TableJob("nation", str(tmp_path / "nation"), "n_nationkey", "shard0"),
+        ),
+    )
+    assert run_jobspec(spark, spec) == {"shard0.region": 5, "shard0.nation": 25}
+    assert spark.read.parquet(str(tmp_path / "region")).count() == 5
+    assert spark.read.parquet(str(tmp_path / "nation")).count() == 25
 
 
 def test_mysql_predicates_use_dialect_quoting(spark):
@@ -222,8 +243,6 @@ def test_mysql_predicates_use_dialect_quoting(spark):
     defaults to a sql_mode without ANSI_QUOTES, so '"id" >= lo' is a
     constant-true STRING comparison — every partition would full-scan
     and the union would return N-fold duplicate rows."""
-    from golang_etl_spark.etl import predicates_for_plan
-
     dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(
         "jdbc:mysql://localhost:3307/jerry"
     )
@@ -231,5 +250,7 @@ def test_mysql_predicates_use_dialect_quoting(spark):
     assert qpk == "`id`"  # backticks, never ANSI double quotes
     plan = plan_range_partitions(0, 25_000, stride=10_000)
     preds = predicates_for_plan(qpk, plan)
-    assert preds and all(p.startswith("`id` >= ") for p in preds)
+    assert len(preds) == 3
+    # every clause names the key only in backticks
+    assert all("`id`" in p and "id" not in p.replace("`id`", "") for p in preds)
     assert not any('"' in p for p in preds)

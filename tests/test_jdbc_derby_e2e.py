@@ -1,7 +1,7 @@
 """Live JDBC end-to-end over embedded Derby.
 
 The JDBC seam (seed_shard batched write -> bounds discovery ->
-read_shard_table partitioned range scan -> extract_table parquet sink)
+read_shard_table predicates range scan -> extract_table parquet sink)
 was previously unit-tested only: no MySQL server or client jar in the
 sandbox. Derby DOES ship with the Spark distribution (it backs the
 Hive metastore), and its embedded driver runs inside the Spark JVM —
@@ -17,6 +17,7 @@ reference implements by hand (/root/reference/extractor.go:41-112).
 import dataclasses
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from golang_etl_spark.etl import (
@@ -24,7 +25,7 @@ from golang_etl_spark.etl import (
     plan_jdbc_read,
     predicates_for_plan,
     read_shard_table,
-    read_shard_table_predicates,
+    run_jobspec,
 )
 from golang_etl_spark.jobspec import JobSpec, TableJob
 from golang_etl_spark.sources.sinks import seed_shard, seed_table
@@ -95,41 +96,55 @@ def test_extract_table_lands_parquet(spark, seeded, tmp_path):
     assert back.select(F.countDistinct("id")).first()[0] == N_ROWS
 
 
+def _bounds_api_read(spark, spec, job):
+    """The table as Spark's partitionColumn reader returns it over the
+    same plan: the row reference for the predicates reader."""
+    _qpk, plan = plan_jdbc_read(spark, spec, job)
+    return spark.read.format("jdbc").options(
+        url=spec.shards[job.db],
+        dbtable=job.table,
+        partitionColumn=job.primary_key,
+        lowerBound=str(plan.lower_bound),
+        upperBound=str(plan.upper_bound),
+        numPartitions=str(plan.num_partitions),
+    ).load()
+
+
+def _assert_reads_like_bounds_api(spark, spec, job, want_parts):
+    """read_shard_table scans one partition per predicate of the plan,
+    want_parts of them, and returns the partitionColumn read's rows."""
+    got = read_shard_table(spark, spec, job)
+    preds = predicates_for_plan(*plan_jdbc_read(spark, spec, job))
+    assert got.rdd.getNumPartitions() == len(preds) == want_parts
+    a = sorted(tuple(r) for r in _bounds_api_read(spark, spec, job).collect())
+    assert a == sorted(tuple(r) for r in got.collect())
+    assert len(a) == N_ROWS
+
+
 def test_jdbc_predicates_api_matches_bounds_api(spark, seeded):
     """The predicates-list read (one explicit WHERE per chunk — the
-    literal rendering of the reference's stride loop) must return the
-    same rows as the partitionColumn bounds read, with one partition
-    per predicate."""
+    literal rendering of the reference's stride loop) returns the same
+    rows as a partitionColumn bounds read, with one partition per
+    predicate: ceil(5000/1000) = 5 chunks, 4 connection slots."""
     spec, job = seeded
-    via_bounds = read_shard_table(spark, spec, job)
-    via_preds = read_shard_table_predicates(spark, spec, job)
-    assert via_preds.rdd.getNumPartitions() >= 1
-    a = sorted(tuple(r) for r in via_bounds.collect())
-    b = sorted(tuple(r) for r in via_preds.collect())
-    assert a == b and len(a) > 0
-    # one partition per predicate of the plan both readers share
-    preds = predicates_for_plan(*plan_jdbc_read(spark, spec, job))
-    assert len(preds) == via_preds.rdd.getNumPartitions()
+    _assert_reads_like_bounds_api(
+        spark, spec, job, min(5, 4, spark.sparkContext.defaultParallelism)
+    )
 
 
 def test_both_readers_cap_partitions_at_cores(spark, seeded):
     """stride 100 over 5,000 keys is 50 chunks; with 20 connection
-    slots both readers scan min(chunks, slots, cores) partitions and
-    return the same rows."""
+    slots the reader scans min(chunks, slots, cores) partitions and
+    returns the partitionColumn read's rows."""
     spec, job = seeded
     spec = dataclasses.replace(spec, stride=100, fetch_concurrency=20)
-    want = min(50, 20, spark.sparkContext.defaultParallelism)
-    via_bounds = read_shard_table(spark, spec, job)
-    via_preds = read_shard_table_predicates(spark, spec, job)
-    assert via_bounds.rdd.getNumPartitions() == want
-    assert via_preds.rdd.getNumPartitions() == want
-    a = sorted(tuple(r) for r in via_bounds.collect())
-    assert a == sorted(tuple(r) for r in via_preds.collect())
-    assert len(a) == N_ROWS
+    _assert_reads_like_bounds_api(
+        spark, spec, job, min(50, 20, spark.sparkContext.defaultParallelism)
+    )
 
 
 def test_null_key_row_read_exactly_once(spark, tmp_path):
-    """A NULL key matches no range predicate; both readers must still
+    """A NULL key matches no range predicate; the reader must still
     return that row once (the first partition takes `pk IS NULL`)."""
     rows = [(None, "null-key")] + [(i, f"row{i}") for i in range(1, 1_001)]
     df = spark.createDataFrame(rows, "id long, data string")
@@ -138,12 +153,32 @@ def test_null_key_row_read_exactly_once(spark, tmp_path):
         table="null_keys", output=str(tmp_path / "out"), primary_key="id", db="derby0"
     )
     spec = JobSpec(shards={"derby0": URL}, jobs=(job,), stride=100)
+    got = read_shard_table(spark, spec, job)
     parts = min(10, spec.fetch_concurrency, spark.sparkContext.defaultParallelism)
-    for read in (read_shard_table, read_shard_table_predicates):
-        got = read(spark, spec, job)
-        assert got.rdd.getNumPartitions() == parts, read.__name__
-        assert got.count() == len(rows), read.__name__
-        assert got.filter(F.col("id").isNull()).count() == 1, read.__name__
+    assert got.rdd.getNumPartitions() == parts
+    assert got.count() == len(rows)
+    assert got.filter(F.col("id").isNull()).count() == 1
+
+
+def test_run_jobspec_settles_every_job_before_raising(spark, seeded, tmp_path):
+    """A table that vanished fails its job, but not the others: the
+    jobs on either side of it land complete, and run_jobspec raises."""
+    spec, job = seeded
+    tail = [(i, f"tail{i}") for i in range(10, 1_510)]
+    spark.createDataFrame(tail, "id long, data string").write.jdbc(
+        URL, "fault_tail", mode="overwrite"
+    )
+    jobs = tuple(
+        TableJob(table=t, output=str(tmp_path / t), primary_key="id", db="derby0")
+        for t in ("seed_data", "vanished", "fault_tail")
+    )
+    with pytest.raises(Py4JJavaError, match="'VANISHED' does not exist"):
+        run_jobspec(spark, dataclasses.replace(spec, jobs=jobs))
+    for out, n in ((jobs[0].output, N_ROWS), (jobs[2].output, len(tail))):
+        back = spark.read.parquet(out)
+        assert back.count() == n, out
+        assert back.select(F.countDistinct("id")).first()[0] == n, out
+    assert not (tmp_path / "vanished").exists()
 
 
 def _bounds_via_spark_read(spark, spec, job, qpk):

@@ -20,8 +20,8 @@ tests/test_jdbc_derby_e2e.py covers everything else):
    asked from ``JdbcDialects.get(url)``;
 3. the partitioned range scan (stride predicates, fetchsize) against a
    server that actually parses them — plus the ``useCursorFetch``
-   requirement for server-side cursors, asserted as an option
-   round-trip (Connector/J materializes each partition otherwise).
+   requirement for server-side cursors, set on the shard URL the
+   reader scans (Connector/J materializes each partition otherwise).
 """
 
 from __future__ import annotations
@@ -185,17 +185,14 @@ def test_mysql_reserved_word_identifiers_quoted(spark):
 def test_mysql_cursor_fetch_option_applied(spark, tmp_path):
     """Connector/J needs useCursorFetch=true for a server-side cursor;
     without it each partition's result set is materialized in the
-    executor. The option must survive the option-synthesis path and
-    the scan must still return exact results with it on."""
-    from golang_etl_spark.etl import jdbc_scan_options, plan_range_partitions
+    executor. The option rides the shard URL into the reader, and the
+    scan must still return exact results with it on."""
+    import dataclasses
 
+    from golang_etl_spark.etl import read_shard_table
+
+    spec, job = _spec(tmp_path)
     url = MYSQL_URL + ("&" if "?" in MYSQL_URL else "?") + "useCursorFetch=true"
-    plan = plan_range_partitions(1, N_ROWS, stride=1_000)
-    opts = jdbc_scan_options(url, "seed_data", "id", plan, fetch_concurrency=4)
-    assert "useCursorFetch=true" in opts["url"]
-    df = (
-        spark.read.format("jdbc")
-        .options(**{k: str(v) for k, v in opts.items()})
-        .load()
-    )
+    spec = dataclasses.replace(spec, shards={job.db: url})
+    df = read_shard_table(spark, spec, job)
     assert df.count() == N_ROWS
