@@ -3,20 +3,22 @@
 The reference discovers source schema at runtime from the result set
 (/root/reference/extractor.go:71-75); Spark's parquet reader does the
 same from file footers. That inference is a Spark job of its own, so
-each table's schema is inferred once per SparkSession and declared
-(``spark.read.schema``) on every later read of the same files; a
-rewritten or replaced table is inferred again. Filters and
-projections applied downstream are pushed into these scans by Catalyst
-(verify with ``df.explain``: PushedFilters / ReadSchema).
+each table's schema is inferred once per process and declared
+(``spark.read.schema``) on every later read of the same files, from
+any session or SparkContext. An entry serves only while the table's
+file listing and the session's parquet reader conf (``READER_CONFS``)
+are the ones it was inferred under: a rewritten table, or a session
+that reads parquet differently, infers again. Filters and projections
+applied downstream are pushed into these scans by Catalyst (verify
+with ``df.explain``: PushedFilters / ReadSchema).
 
 Artefacts built from the tables (trained quantizers, index and sketch
 stores) are memoized by ``built_from`` on the same file listings, but
-per SparkContext, not per session. A schema read depends on the
-session's conf, so a new session infers again; an artefact does not,
-and every ``foreachBatch`` micro-batch runs in a new session of the
-same context. Rebuilding per session would rewrite the MinHash index
-with ``overwrite`` on every micro-batch and lose what the earlier
-batches ingested into it.
+per SparkContext. A store can be appended to after it is built: every
+``foreachBatch`` micro-batch runs in a new session of the same context,
+and rebuilding per session would rewrite the MinHash index with
+``overwrite`` on every micro-batch and lose what the earlier batches
+ingested into it.
 """
 
 from __future__ import annotations
@@ -76,33 +78,46 @@ class _Context:
         self.building: dict[tuple, threading.Lock] = {}
 
 
-class _SessionSchemas:
-    """One SparkSession's inferred table schemas, keyed on the path and
-    the file listing they were inferred from."""
-
-    def __init__(self) -> None:
-        self._by_path: dict[str, tuple[tuple, StructType]] = {}
-
-    def read_parquet(self, spark: SparkSession, path: str) -> DataFrame:
-        """``spark.read.parquet(path)``, inferring the schema from the
-        footers only on the session's first read of these exact files."""
-        listing = _listing(spark, path)
-        cached = self._by_path.get(path)
-        if listing is not None and cached is not None and cached[0] == listing:
-            return spark.read.schema(cached[1]).parquet(path)
-        df = spark.read.parquet(path)
-        if listing is not None:
-            # threads racing on one path both infer; either entry is right
-            self._by_path[path] = (listing, df.schema)
-        return df
-
-
-# Keyed weakly, so a dropped session's schemas and a stopped context's
-# artefacts go with them.
-_CONTEXTS: weakref.WeakKeyDictionary[SparkContext, _Context] = (
-    weakref.WeakKeyDictionary()
+# The session confs Spark 4.1's parquet schema inference reads
+# (ParquetFileFormat.mergeSchemasInParallel, ParquetUtils.inferSchema,
+# ParquetOptions); not ``conf.getAll``, whose app id differs per context.
+READER_CONFS = (
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.respectSummaryFiles", "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.files.ignoreCorruptFiles",
 )
-_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, _SessionSchemas] = (
+
+# path -> ((file listing, READER_CONFS values), schema), process-wide
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema_key(conf, listing: tuple) -> tuple:
+    """What a schema inferred from the files of ``listing`` under the
+    session conf ``conf`` (``spark.conf``) depends on."""
+    return listing, tuple(conf.get(k) for k in READER_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema from the
+    footers only on the process's first read of these exact files under
+    this reader conf."""
+    listing = _listing(spark, path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = _schema_key(spark.conf, listing)
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # threads racing on one path both infer; either entry is right
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
+# Keyed weakly, so a stopped context's artefacts go with it.
+_CONTEXTS: weakref.WeakKeyDictionary[SparkContext, _Context] = (
     weakref.WeakKeyDictionary()
 )
 _LOCK = threading.Lock()
@@ -115,14 +130,6 @@ def _context(spark: SparkSession) -> _Context:
         if ctx is None:
             ctx = _CONTEXTS[sc] = _Context(sc)
         return ctx
-
-
-def _session_schemas(spark: SparkSession) -> _SessionSchemas:
-    with _LOCK:
-        schemas = _SCHEMAS.get(spark)
-        if schemas is None:
-            schemas = _SCHEMAS[spark] = _SessionSchemas()
-        return schemas
 
 
 def _listing(spark: SparkSession, path: str) -> tuple | None:
@@ -185,7 +192,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the raw read schema is cached, before the normalization below, so
     # both timestamp vintages keep loading identically
-    df = _session_schemas(spark).read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _TS_COLUMNS.get(name, ()):
         dt = df.schema[col].dataType.typeName()
         if dt == "long":
@@ -210,12 +217,12 @@ def register_views(
 
     ``tables`` narrows registration to the views a query actually
     references. Every read lists the table's files on the driver, and
-    a session's first read of a table is also an EAGER footer read (a
-    Spark job inferring the schema; later reads declare it), so
-    registering all 10 tables costs ~10 driver round-trips per query
-    invocation; the ~30 SQL passthrough queries each touch 1-6 tables
-    (guide §1.2: don't compute things you throw away — here,
-    driver-side). Default stays all-tables for callers that want the
+    the process's first read of a table under a reader conf is also an
+    EAGER footer read (a Spark job inferring the schema; later reads,
+    from any session, declare it), so registering all 10 tables costs
+    ~10 driver round-trips per query invocation; the ~30 SQL
+    passthrough queries each touch 1-6 tables (guide §1.2: don't
+    compute things you throw away — here, driver-side). Default stays all-tables for callers that want the
     full catalog (tests, ad-hoc sessions)."""
     for name in tables if tables is not None else TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,5 +1,5 @@
 """Source-catalog tests: the events.ts normalization path and the
-per-session schema cache.
+process-wide schema memo.
 
 The fixture ``events.ts`` physical type has varied across driver
 drops: INT64 TIMESTAMP(NANOS) (read as raw long under
@@ -9,9 +9,11 @@ mantissa and corrupt the microsecond) and TIMESTAMP(MICROS) (read as
 TIMESTAMP_NTZ, cast to the session-UTC TIMESTAMP). load_table inspects
 the actual schema; these tests prove both vintages land on exactly the
 microsecond values DuckDB reads — which is what keeps every ts-bearing
-oracle comparable. load_table infers a table's schema once per session
-and declares it on later reads of the same files; the cache tests pin
-that a rewrite is inferred again and that a repeat read starts no job.
+oracle comparable. load_table infers a table's schema once per process
+and reader conf and declares it on later reads of the same files, from
+any session; the memo tests pin that a rewrite, or a session that reads
+parquet differently, is inferred again, and that a repeat read, from the
+same or a new session, starts no job.
 The artefact memo (``catalog.built_from``) is pinned the same way: a
 store or quantizer is built again after its input table is rewritten,
 and a repeat call, from any session of the context, starts no job.
@@ -95,7 +97,7 @@ def test_catalog_covers_all_fixture_tables(spark, sf_dir):
         assert len(df.columns) > 0
 
 
-# -- per-session schema cache -----------------------------------------------
+# -- process-wide schema memo ------------------------------------------------
 
 
 def _jobs_started(spark, group, fn):
@@ -172,14 +174,70 @@ def test_second_load_of_unchanged_table_starts_no_job(spark, tmp_path):
     assert load_table(spark, sf_dir, "nation").count() == 3
 
 
-def test_schema_cache_is_per_session(spark, tmp_path):
+def test_new_session_with_the_same_reader_conf_starts_no_job(spark, tmp_path):
     _write(tmp_path / "part.parquet", p_partkey=[1, 2])
-    load_table(spark, str(tmp_path), "part")
-    other = spark.newSession()
+    first = load_table(spark, str(tmp_path), "part")
+    other, got = spark.newSession(), []
     jobs = _jobs_started(
-        other, "schema-cache-new-session", lambda: load_table(other, str(tmp_path), "part")
+        other,
+        "schema-memo-new-session",
+        lambda: got.append(load_table(other, str(tmp_path), "part")),
     )
-    assert jobs, "a new session infers again"
+    assert jobs == []
+    assert got[0].schema == first.schema
+
+
+def test_session_with_another_reader_conf_infers_again(spark, tmp_path):
+    sf_dir = str(tmp_path)
+    _write(
+        tmp_path / "customer.parquet",
+        c_custkey=[1],
+        c_name=pa.array([b"x"], pa.binary()),
+    )
+    assert load_table(spark, sf_dir, "customer").schema["c_name"].dataType == T.BinaryType()
+    other, got = spark.newSession(), []
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    jobs = _jobs_started(
+        other,
+        "schema-memo-binary-as-string",
+        lambda: got.append(load_table(other, sf_dir, "customer")),
+    )
+    assert jobs, "a session that reads binary as string infers again"
+    assert got[0].schema["c_name"].dataType == T.StringType()
+    assert got[0].collect()[0]["c_name"] == "x"
+    assert load_table(spark, sf_dir, "customer").schema["c_name"].dataType == T.BinaryType()
+
+
+def test_every_reader_conf_is_in_the_schema_memo_key():
+    import pyspark
+
+    from golang_etl_spark.sources.catalog import READER_CONFS, _schema_key
+
+    assert pyspark.__version__.startswith("4.1."), (
+        f"pyspark {pyspark.__version__}: catalog.READER_CONFS lists the confs "
+        "Spark 4.1's parquet schema inference reads. Re-derive it from "
+        "ParquetFileFormat.mergeSchemasInParallel, ParquetUtils.inferSchema "
+        "and ParquetOptions before changing the Spark version."
+    )
+    listing = (("file:/t/part.parquet/part-0.parquet", 10, 1),)
+    base = {k: "false" for k in READER_CONFS}
+    for k in READER_CONFS:
+        assert _schema_key({**base, k: "true"}, listing) != _schema_key(base, listing), k
+    # a conf inference does not read leaves the key, and so reuse, alone
+    unrelated = {**base, "spark.sql.shuffle.partitions": "8"}
+    assert _schema_key(unrelated, listing) == _schema_key(base, listing)
+
+
+def test_isolated_session_query_builds_without_jobs(spark, sf_dir):
+    # join_bloom_runtime_filter loads its tables in a spark.newSession()
+    from golang_etl_spark.operators.frontier import join_bloom_runtime_filter
+
+    for t in ("lineitem", "orders"):
+        load_table(spark, sf_dir, t)
+    jobs = _jobs_started(
+        spark, "schema-memo-bloom", lambda: join_bloom_runtime_filter(spark, sf_dir)
+    )
+    assert jobs == []
 
 
 def test_missing_table_raises_sparks_error(spark, tmp_path):
@@ -195,6 +253,9 @@ def test_concurrent_loads_keep_every_schema(spark, sf_dir):
 
     from golang_etl_spark.sources import catalog
 
+    paths = {f"{sf_dir}/{t}.parquet" for t in TABLES}
+    for path in paths:
+        catalog._SCHEMAS.pop(path, None)
     session = spark.newSession()
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -207,8 +268,8 @@ def test_concurrent_loads_keep_every_schema(spark, sf_dir):
     finally:
         sys.setswitchinterval(old)
     assert all(len(df.columns) > 0 for df in schemas)
-    cached = catalog._session_schemas(session)._by_path
-    assert sorted(cached) == sorted(f"{sf_dir}/{t}.parquet" for t in TABLES)
+    # the memo is process-wide, so other tests' paths may be in it too
+    assert paths <= set(catalog._SCHEMAS)
 
 
 # -- per-context artefact memo -----------------------------------------------
