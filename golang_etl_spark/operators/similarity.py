@@ -1,10 +1,34 @@
 """Similarity search over the ``embeddings`` table (array<float>
-column): brute-force cosine top-k, LSH-bucketed ANN, and label
-centroid analytics.
+column): brute-force cosine top-k, LSH-bucketed and IVF ANN, product
+quantization, prefix (Matryoshka) and multi-vector (MaxSim) retrieval,
+and label centroid analytics.
 
 No reference counterpart (SURVEY.md §2.5) — LLM-pipeline extension.
-All vector math is built-in JVM lambdas (zip_with/aggregate), no
-Python UDFs; the DuckDB oracle replays the identical arithmetic.
+All vector math is built-in JVM lambdas (zip_with/aggregate); the PQ
+encode and ADC scoring are numpy in Arrow batches. The DuckDB oracle
+replays the identical arithmetic.
+
+Vector-search core: each step has one implementation, and every
+operator here, in vector_index.py and in dedup's embedding path that
+takes the step calls it:
+
+- loading: ``dedup._vectors`` ((emb, nrm) as doubles; all-zero
+  vectors dropped) and its DuckDB twin ``dedup._VECTORS_DUCK``;
+  ``_prefix_vectors`` adds the MRL_DIM prefix; ``_queries`` is the
+  ``vec_id < N_QUERIES`` query set, columns renamed ``query_id`` and
+  ``q_*``;
+- arithmetic: ``dedup._dot_spark`` (the one dot product) and
+  ``dedup._EMB_DOUBLE_SPARK`` (the one float -> double upcast);
+- the per-query cut: ``_topk`` (row_number <= k over (score DESC,
+  tie-break id), ``rank`` as long — Spark plans it as a partial
+  per-partition WindowGroupLimit) and its DuckDB twin
+  ``_ranked_duck``; ``_cosine_topk`` and ``_cosine_topk_duck`` rank
+  (query, candidate) rows by exact cosine;
+- IVF: ``_ivf_assign`` (cell assignment), ``_ivf_probes`` (each
+  query's nprobe cells), ``_ivf_search`` (in-cell scoring) and one
+  oracle generator ``_ivf_oracle_sql``;
+- PQ: ``_pq_encode`` (query-side encode of unit-scaled vectors against
+  any codebook).
 
 Scale notes (100 TB stance):
 - brute-force top-k broadcasts the (tiny) query set against the full
@@ -30,12 +54,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from golang_etl_spark.functions import vector as V
 from golang_etl_spark.operators.dedup import (
     _EMB_DOUBLE_SPARK,
+    _VECTORS_DUCK,
     EMBED_DIM,
     _dot_spark,
     _embedding_signature_duck,
+    _vectors,
     embedding_signature,
     hyperplanes,
 )
@@ -46,15 +71,15 @@ TOP_K = 10
 N_QUERIES = 5  # query set: vec_id < N_QUERIES
 
 # Decimal places every numpy-computed score is rounded to BEFORE any
-# rank/argmin cut whose oracle twin recomputes the score in DuckDB
-# (ADVICE r09): numpy's BLAS matmul / norm reassociate summation, so
+# rank/argmin cut whose oracle twin recomputes the score in DuckDB.
+# numpy's BLAS matmul / norm reassociate summation, so
 # the two engines can differ in the last ulp — harmless on the
 # rounded OUTPUT columns (ROUND(...,6)) but enough to flip a cut at a
 # near-tie, failing the hash gate with no semantic bug. Rounding both
 # sides at 1e-9 (values are O(1); ulp noise is ~1e-16) turns almost
 # every unstable comparison into an exact tie that the deterministic
 # secondary keys (codeword k / neighbor_id) resolve identically.
-# Residual risk (ADVICE r10): the two engines round with different
+# Residual risk: the two engines round with different
 # conventions (numpy half-to-even vs DuckDB half-away-from-zero), so
 # a score within ~1 ulp of a 0.5e-9 grid midpoint can still land on
 # different grid points — rounding shrinks the unstable region ~1e6x,
@@ -70,30 +95,84 @@ _PLANES = hyperplanes(ANN_PLANES, 11)
 
 
 # ---------------------------------------------------------------------------
+# 0. The vector-search core.
+# ---------------------------------------------------------------------------
+def _queries(v: DataFrame) -> DataFrame:
+    """The query set of a per-vector frame: its ``vec_id < N_QUERIES``
+    rows, ``vec_id`` renamed ``query_id`` and every other column
+    prefixed ``q_``."""
+    return v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS query_id", *(f"{c} AS q_{c}" for c in v.columns if c != "vec_id")
+    )
+
+
+def _topk(df: DataFrame, score: str, k: int, tie: str = "neighbor_id") -> DataFrame:
+    """Each query's top ``k`` rows: ``rank`` = row_number per
+    ``query_id`` over (``score`` DESC, ``tie``), kept where rank <= k,
+    then cast to long. The filter reads the window's own int column,
+    so Spark plans the cut as a WindowGroupLimit that also runs
+    partially in every partition before the exchange (gated in
+    tests/test_plans.py::test_topk_cut_runs_partially_per_partition)."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(tie))
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("rank", F.col("rank").cast("long"))
+    )
+
+
+def _ranked_duck(
+    name: str, src: str, score: str, k: int, tie: str = "neighbor_id"
+) -> str:
+    """DuckDB twin of ``_topk``: the CTE ``name`` over the rows of
+    ``src``. ``src`` must not have a ``rank`` column."""
+    return f"""{name} AS (
+  SELECT * FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY {score} DESC, {tie}) AS rank
+    FROM {src}
+  ) WHERE rank <= {k}
+)"""
+
+
+def _cosine_topk(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine): each query's TOP_K
+    candidates by exact cosine, over joined (query, candidate) rows
+    that carry the query's ``q_emb``/``q_nrm`` and the candidate's
+    ``vec_id``/``emb``/``nrm``; ties break on neighbor_id."""
+    scored = pairs.selectExpr(
+        "query_id",
+        "vec_id AS neighbor_id",
+        f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
+    )
+    return _topk(scored, "cos", TOP_K).select(
+        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cosine")
+    )
+
+
+def _cosine_topk_duck(src: str) -> str:
+    """DuckDB twin of ``_cosine_topk`` over the CTE ``src``
+    (query_id, neighbor_id, cos): the ranked CTE and the final
+    SELECT."""
+    return f"""{_ranked_duck("ranked", src, "cos", TOP_K)}
+SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
+       ROUND(cos, 6) AS cosine
+FROM ranked
+"""
+
+
+# ---------------------------------------------------------------------------
 # 1. Brute-force cosine top-k (the exact baseline).
 # ---------------------------------------------------------------------------
 _BRUTE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
+WITH {_VECTORS_DUCK},
 scored AS (
   SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
          list_dot_product(q.emb, v.emb) / (q.nrm * v.nrm) AS cos
   FROM v q JOIN v ON v.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_cosine_topk_duck("scored")}"""
 
 
 @register(
@@ -104,35 +183,9 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_QUERIES) against every vector, rank per query. The big side is
     scanned once with no shuffle; ties break on neighbor_id so the
     ranking is deterministic."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).select("vec_id", "emb", V.l2_norm("emb").alias("nrm"))
-    q = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm"
-    )
-    scored = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (V.dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _cosine_topk(
+        v.join(F.broadcast(_queries(v)), F.col("vec_id") != F.col("query_id"))
     )
 
 
@@ -148,16 +201,7 @@ scored AS (
     ON q.bucket = v.bucket AND v.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_cosine_topk_duck("scored")}"""
 
 
 @register("similarity_ann_lsh", oracle=_ANN_ORACLE, tags=("ann", "llm"))
@@ -167,32 +211,11 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     work of brute force per query; recall governed by plane count.
     Deterministic (fixed planes), so the oracle replays it exactly."""
     sig = embedding_signature(load_table(spark, sf_dir, "embeddings"), _PLANES)
-    q = sig.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm", "bucket AS q_bucket"
-    )
-    scored = (
+    return _cosine_topk(
         sig.join(
-            F.broadcast(q),
+            F.broadcast(_queries(sig)),
             (F.col("bucket") == F.col("q_bucket"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .selectExpr(
-            "query_id",
-            "vec_id AS neighbor_id",
-            f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
         )
     )
 
@@ -209,16 +232,39 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_CENTROID_IDS = tuple(range(100, 260, 10))  # 16 cells
 IVF_NPROBE = 2
 
-_IVF_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
-cent AS (
+# The centroid CTE body of the fixed quantizer, over the v CTE.
+_IVF_FIXED_CENT = f"""
   SELECT vec_id AS cell_id, emb AS c_emb, nrm AS c_nrm
   FROM v WHERE vec_id IN ({", ".join(map(str, IVF_CENTROID_IDS))})
+"""
+
+# The IVF top-k after assignment: each query's nprobe cells, then its
+# TOP_K by exact cosine within them.
+_IVF_TOPK_TAIL = f""",
+qscored AS (
+  SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm,
+         cell_id AS q_cell_id, ccos AS q_ccos
+  FROM scored WHERE vec_id < {N_QUERIES}
 ),
+{_ranked_duck("probes", "qscored", "q_ccos", IVF_NPROBE, tie="q_cell_id")},
+cand AS (
+  SELECT p.query_id, a.vec_id AS neighbor_id,
+         list_dot_product(p.q_emb, a.emb) / (p.q_nrm * a.nrm) AS cos
+  FROM probes p JOIN assigned a
+    ON a.cell_id = p.q_cell_id AND a.vec_id <> p.query_id
+),
+{_cosine_topk_duck("cand")}"""
+
+
+def _ivf_oracle_sql(cent: str, tail: str) -> str:
+    """The IVF oracle generator: the v CTE, the centroid table ``cent``
+    (a query body yielding cell_id, c_emb, c_nrm), the centroid cosine
+    ``ccos`` of every (vector, cell) pair (``scored``) and each
+    vector's nearest cell (``assigned``, lowest cell_id on ties), then
+    ``tail`` — the top-k or the index inventory."""
+    return f"""
+WITH {_VECTORS_DUCK},
+cent AS ({cent}),
 scored AS (
   SELECT v.vec_id, v.emb, v.nrm, c.cell_id,
          list_dot_product(v.emb, c.c_emb) / (v.nrm * c.c_nrm) AS ccos
@@ -230,30 +276,10 @@ assigned AS (
                                  ORDER BY ccos DESC, cell_id) AS rn
     FROM scored
   ) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm, cell_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cell_id) AS rn
-    FROM scored WHERE vec_id < {N_QUERIES}
-  ) WHERE rn <= {IVF_NPROBE}
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         list_dot_product(p.q_emb, a.emb) / (p.q_nrm * a.nrm) AS cos
-  FROM probes p JOIN assigned a
-    ON a.cell_id = p.cell_id AND a.vec_id <> p.query_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM cand
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+){tail}"""
+
+
+_IVF_ORACLE = _ivf_oracle_sql(_IVF_FIXED_CENT, _IVF_TOPK_TAIL)
 
 
 @register("similarity_ivf_topk", oracle=_IVF_ORACLE, tags=("ann", "llm"))
@@ -268,14 +294,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe rows so the assigned table never shuffles. Work per query
     is ~nprobe/cells of brute force — the IVF recall/cost dial."""
     return _ivf_topk(*_ivf_cells(spark, sf_dir))
-
-
-def _vectors(emb: DataFrame) -> DataFrame:
-    """``embeddings`` rows -> (vec_id, emb, nrm): each vector as
-    double[] with its L2 norm."""
-    return emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS emb").selectExpr(
-        "vec_id", "emb", f"sqrt({_dot_spark('emb', 'emb')}) AS nrm"
-    )
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -334,46 +352,32 @@ def _ivf_assign(v: DataFrame, cent: DataFrame) -> tuple[DataFrame, DataFrame]:
     return scored, assigned
 
 
+def _ivf_probes(scored: DataFrame) -> DataFrame:
+    """Each query's IVF_NPROBE nearest cells from ``_ivf_assign``'s
+    ``scored``: ``_queries`` rows with the probe cell as ``q_cell_id``
+    (lowest cell_id on ties)."""
+    return _topk(_queries(scored), "q_ccos", IVF_NPROBE, tie="q_cell_id")
+
+
+def _ivf_search(assigned: DataFrame, probes: DataFrame) -> DataFrame:
+    """Each query's TOP_K by exact cosine among the ``assigned``
+    vectors of its broadcast ``probes`` cells."""
+    return _cosine_topk(
+        assigned.join(
+            F.broadcast(probes),
+            (F.col("cell_id") == F.col("q_cell_id"))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
+    )
+
+
 def _ivf_topk(v: DataFrame, cent: DataFrame) -> DataFrame:
     """Shared IVF query path: cell assignment + nprobe probing + in-cell
     scoring over any centroid table ``(cell_id, c_emb, c_nrm)`` — the
     fixed-corpus-vector quantizer (oracle-replayable) and the trained
     k-means quantizer both run through this."""
     scored, assigned = _ivf_assign(v, cent)
-    wprobe = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cell_id")
-    )
-    probes = (
-        scored.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(wprobe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .selectExpr(
-            "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm",
-            "cell_id AS probe_cell",
-        )
-    )
-    cand = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell_id") == F.col("probe_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).selectExpr(
-        "query_id",
-        "vec_id AS neighbor_id",
-        f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
-    )
+    return _ivf_search(assigned, _ivf_probes(scored))
 
 
 # ---------------------------------------------------------------------------
@@ -444,8 +448,8 @@ def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 3c. SEEDED-literal quantizer twins (round 9) — hash gates for the
-# trained paths' query-side arithmetic.
+# 3c. SEEDED-literal quantizer twins — hash gates for the trained
+# paths' query-side arithmetic.
 # ---------------------------------------------------------------------------
 # The trained quantizers (3b above, 6 below) are rows-only by nature:
 # iterative k-means is not oracle-SQL-expressible. What IS checkable
@@ -485,61 +489,20 @@ _IVF_SEED_CENTROIDS = _seeded_matrix(IVF_SEED_K, EMBED_DIM, seed=9001)
 
 
 def _ivf_seed_oracle_sql(centroids: list[list[float]]) -> str:
-    """Oracle generator for the seeded-IVF query path over ANY
-    centroid table — bound to _IVF_SEED_CENTROIDS for the registered
-    query; regenerated per random centroid set by
-    tests/test_sketch_store_fuzz.py so assignment/probe/score parity
-    holds across quantizer space."""
+    """The seeded-IVF oracle over ANY centroid table — bound to
+    _IVF_SEED_CENTROIDS for the registered query; regenerated per
+    random centroid set by tests/test_sketch_store_fuzz.py so
+    assignment/probe/score parity holds across quantizer space."""
     cent_sql = ", ".join(
-        f"({i}, {_sql_double_list(centroids[i])})"
-        for i in range(len(centroids))
+        f"({i}, {_sql_double_list(c)})" for i, c in enumerate(centroids)
     )
-    return f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
-cent AS (
-  SELECT t.cell_id, t.c_emb,
-         sqrt(list_dot_product(t.c_emb, t.c_emb)) AS c_nrm
+    return _ivf_oracle_sql(
+        f"""
+  SELECT t.cell_id, t.c_emb, sqrt(list_dot_product(t.c_emb, t.c_emb)) AS c_nrm
   FROM (VALUES {cent_sql}) AS t(cell_id, c_emb)
-),
-scored AS (
-  SELECT v.vec_id, v.emb, v.nrm, c.cell_id,
-         list_dot_product(v.emb, c.c_emb) / (v.nrm * c.c_nrm) AS ccos
-  FROM v CROSS JOIN cent c
-),
-assigned AS (
-  SELECT vec_id, emb, nrm, cell_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cell_id) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, emb AS q_emb, nrm AS q_nrm, cell_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cell_id) AS rn
-    FROM scored WHERE vec_id < {N_QUERIES}
-  ) WHERE rn <= {IVF_NPROBE}
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         list_dot_product(p.q_emb, a.emb) / (p.q_nrm * a.nrm) AS cos
-  FROM probes p JOIN assigned a
-    ON a.cell_id = p.cell_id AND a.vec_id <> p.query_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM cand
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+""",
+        _IVF_TOPK_TAIL,
+    )
 
 
 _IVF_SEED_ORACLE = _ivf_seed_oracle_sql(_IVF_SEED_CENTROIDS)
@@ -564,15 +527,12 @@ def ivf_literal_topk(
     """The literal-centroid IVF query path over ANY centroid table
     (split out so tests/test_sketch_store_fuzz.py can replay random
     centroid sets against _ivf_seed_oracle_sql)."""
-    rows = [(i, centroids[i]) for i in range(len(centroids))]
-    cent = (
-        spark.createDataFrame(rows, "cell_id LONG, c_emb ARRAY<DOUBLE>")
-        .selectExpr(
-            "cell_id", "c_emb", f"sqrt({_dot_spark('c_emb', 'c_emb')}) AS c_nrm"
-        )
+    cent = spark.createDataFrame(
+        list(enumerate(centroids)), "cell_id LONG, c_emb ARRAY<DOUBLE>"
+    ).selectExpr(
+        "cell_id", "c_emb", f"sqrt({_dot_spark('c_emb', 'c_emb')}) AS c_nrm"
     )
-    v = _vectors(load_table(spark, sf_dir, "embeddings"))
-    return _ivf_topk(v, cent)
+    return _ivf_topk(_vectors(load_table(spark, sf_dir, "embeddings")), cent)
 
 
 # ---------------------------------------------------------------------------
@@ -739,11 +699,40 @@ def _collect_normalized_sample(spark: SparkSession, sf_dir: str) -> np.ndarray:
     if sample_mod > 1:
         sample = emb.filter(f"pmod(hash(vec_id), {sample_mod}) = 0")
     pdf = sample.select("vec_id", "embedding").orderBy("vec_id").toPandas()
-    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    # norm floor matches the query path's guard (score() below): an
-    # all-zero embedding must not poison training with NaN rows
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return X
+    # the norm floor: an all-zero embedding must not poison training
+    # with NaN rows
+    return _unit(np.array(pdf["embedding"].tolist(), dtype=np.float64))
+
+
+def _unit(X: np.ndarray) -> np.ndarray:
+    """The rows of ``X`` scaled to unit L2 norm (norm floored at
+    1e-12)."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _pq_encode(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, M) PQ codes of the unit-scaled rows of ``X`` against ANY
+    (M, K, sub) codebook array: per subspace, the nearest codeword in
+    L2 (matmul form — the broadcast-difference form allocates
+    n*K*sub)."""
+    pq_m, _, pq_sub = books.shape
+    Xs = _unit(X).reshape(len(X), pq_m, pq_sub)
+    codes = np.empty((len(X), pq_m), dtype=np.int64)
+    for m in range(pq_m):
+        Xm = Xs[:, m, :]
+        d2 = (
+            (Xm**2).sum(axis=1, keepdims=True)
+            - 2.0 * (Xm @ books[m].T)
+            + (books[m] ** 2).sum(axis=1)[None, :]
+        )
+        # round before the argmin cut: numpy's BLAS matmul
+        # reassociates the sum, so a near-tie between two codewords
+        # could otherwise resolve differently here than in the
+        # oracle's sequential arithmetic (which rounds identically
+        # before ITS cut); after rounding, exact ties break to the
+        # lowest k on both sides (np.argmin takes the first minimum)
+        codes[:, m] = np.argmin(np.round(d2, _SCORE_CUT_DECIMALS), axis=1)
+    return codes
 
 
 @built_from("embeddings")
@@ -820,18 +809,13 @@ def _pq_adc_topk(
     seeded-literal (similarity_pq_seeded) variants so the latter's
     hash gate covers exactly the pipeline the former runs."""
     pq_m, _, pq_sub = books.shape
-    emb = load_table(spark, sf_dir, "embeddings")
-    qpdf = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    Q = np.array(qpdf["embedding"].tolist(), dtype=np.float64)
-    # same zero-vector floor as score() and training: an all-zero
-    # query would otherwise NaN-poison its entire ADC LUT
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    qids = qpdf["vec_id"].to_numpy()
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    qv = _queries(v)
+    qpdf = qv.select("query_id", "q_emb").orderBy("query_id").toPandas()
+    # unit-scaled like the corpus side, so ADC inner products
+    # approximate cosine
+    Q = _unit(np.array(qpdf["q_emb"].tolist(), dtype=np.float64))
+    qids = qpdf["query_id"].to_numpy()
     # per-query ADC lookup tables: luts[q, m, k] = <q_sub_m, books[m,k]>
     luts = np.einsum(
         "qmd,mkd->qmk", Q.reshape(len(Q), pq_m, pq_sub), books
@@ -848,28 +832,7 @@ def _pq_adc_topk(
         bk, lt, qi = b_books.value, b_luts.value, b_qids.value
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy()
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            n, d = X.shape
-            Xs = X.reshape(n, pq_m, pq_sub)
-            # encode: nearest centroid per subspace (argmin L2, matmul
-            # form — the broadcast-difference form allocates n*K*sub)
-            codes = np.empty((n, pq_m), dtype=np.int64)
-            for m in range(pq_m):
-                Xm = Xs[:, m, :]
-                d2 = (
-                    (Xm**2).sum(axis=1, keepdims=True)
-                    - 2.0 * (Xm @ bk[m].T)
-                    + (bk[m] ** 2).sum(axis=1)[None, :]
-                )
-                # round before the argmin cut: numpy's BLAS matmul
-                # reassociates the sum, so a near-tie between two
-                # codewords could otherwise resolve differently here
-                # than in the oracle's sequential arithmetic (which
-                # rounds identically before ITS cut); after rounding,
-                # exact ties break to the lowest k on both sides
-                # (np.argmin takes the first minimum)
-                codes[:, m] = np.argmin(np.round(d2, _SCORE_CUT_DECIMALS), axis=1)
+            codes = _pq_encode(np.array(pdf["emb"].tolist(), dtype=np.float64), bk)
             out = []
             # ADC: score[q, n] = sum_m luts[q, m, codes[n, m]] —
             # rounded before the top-C cuts (this lexsort AND the
@@ -901,46 +864,18 @@ def _pq_adc_topk(
                 {"query_id": [], "neighbor_id": [], "adc_score": []}
             )
 
-    partial = emb.select("vec_id", "embedding").mapInPandas(
+    partial = v.select("vec_id", "emb").mapInPandas(
         score, "query_id LONG, neighbor_id LONG, adc_score DOUBLE"
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    cands = (
-        partial.withColumn("adc_rank", F.row_number().over(w_adc))
-        .filter(F.col("adc_rank") <= PQ_RERANK_C)
-        .select("query_id", "neighbor_id")
+    cands = _topk(partial, "adc_score", PQ_RERANK_C).select(
+        "query_id", "neighbor_id"
     )
     # exact rerank: candidates (|queries| x C rows) broadcast onto the
     # vector table to fetch neighbor embeddings; query vectors join as
     # a |queries|-row frame. All dot products JVM-side.
-    v = _vectors(emb)
-    qv = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm"
-    )
-    scored = (
-        v.join(
-            F.broadcast(cands), v["vec_id"] == cands["neighbor_id"]
-        )
-        .join(F.broadcast(qv), "query_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cosine",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
+    return _cosine_topk(
+        v.join(F.broadcast(cands), v["vec_id"] == cands["neighbor_id"]).join(
+            F.broadcast(qv), "query_id"
         )
     )
 
@@ -962,21 +897,21 @@ PQF_CODE_IDS = tuple(range(100, 260, 10))  # 16 codewords per subspace
 
 _PQF_IDS_SQL = ", ".join(map(str, PQF_CODE_IDS))
 
-_PQ_FIXED_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
-nv AS (
-  SELECT vec_id, list_transform(e, x -> x / nrm) AS emb
-  FROM v WHERE nrm > 0
-),
+
+def _pq_subs_duck(pq_m: int, sub: int) -> str:
+    """The v CTE, its unit-scaled vectors ``nv`` and their ``pq_m``
+    sub-vectors of ``sub`` dims (``subs``: vec_id, m, s)."""
+    return f"""{_VECTORS_DUCK},
+nv AS (SELECT vec_id, list_transform(emb, x -> x / nrm) AS emb FROM v),
 subs AS (
   SELECT vec_id, m.m AS m,
-         list_slice(emb, m.m * {PQF_SUB} + 1, (m.m + 1) * {PQF_SUB}) AS s
-  FROM nv, (SELECT unnest(range(0, {PQF_M})) AS m) m
-),
+         list_slice(emb, m.m * {sub} + 1, (m.m + 1) * {sub}) AS s
+  FROM nv, (SELECT unnest(range(0, {pq_m})) AS m) m
+)"""
+
+
+_PQ_FIXED_ORACLE = f"""
+WITH {_pq_subs_duck(PQF_M, PQF_SUB)},
 cw AS (
   SELECT m, ROW_NUMBER() OVER (PARTITION BY m ORDER BY vec_id) - 1 AS k,
          s AS c
@@ -1004,15 +939,10 @@ adc AS (
   WHERE codes.vec_id <> q.query_id
   GROUP BY q.query_id, codes.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, adc,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc DESC, neighbor_id) AS rank
-  FROM adc
-)
+{_ranked_duck("ranked", "adc", "adc", TOP_K)}
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
        ROUND(adc, 6) AS adc_score
-FROM ranked WHERE rank <= {TOP_K}
+FROM ranked
 """
 
 
@@ -1032,12 +962,8 @@ def similarity_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC sum partial-aggregates before its (query, neighbor)
     shuffle. Demonstration sizes — the trained PQ path with
     per-partition top-C is the production formulation."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    nv = (
-        emb.selectExpr("vec_id", f"{_EMB_DOUBLE_SPARK} AS e")
-        .selectExpr("vec_id", "e", f"sqrt({_dot_spark('e', 'e')}) AS nrm")
-        .filter(F.col("nrm") > 0)
-        .selectExpr("vec_id", "transform(e, x -> x / nrm) AS emb")
+    nv = _vectors(load_table(spark, sf_dir, "embeddings")).selectExpr(
+        "vec_id", "transform(emb, x -> x / nrm) AS emb"
     )
     # NOT persisted: of the three consumers, two (cw: 16 fixed ids;
     # qlut: the query ids) are tiny filtered re-scans whose vec_id
@@ -1083,9 +1009,9 @@ def similarity_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "m", F.col("best.k").alias("k"))
     )
     qlut = (
-        subs.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(cw), "m")
-        .selectExpr("vec_id AS query_id", "m", "k", f"{_dot_spark('s', 'c')} AS p")
+        _queries(subs)
+        .join(F.broadcast(cw), F.col("q_m") == F.col("m"))
+        .selectExpr("query_id", "m", "k", f"{_dot_spark('q_s', 'c')} AS p")
     )
     adc = (
         codes.join(F.broadcast(qlut), ["m", "k"])
@@ -1093,24 +1019,14 @@ def similarity_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("p").alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("adc", 6).alias("adc_score"),
-        )
+    return _topk(adc, "adc", TOP_K).select(
+        "query_id", "neighbor_id", "rank", F.round("adc", 6).alias("adc_score")
     )
 
 
 # ---------------------------------------------------------------------------
 # 6c. PQ with SEEDED-literal codebooks — the hash gate for the TRAINED
-# mapInPandas pipeline (round 9; see 3c for the IVF counterpart).
+# mapInPandas pipeline (see 3c for the IVF counterpart).
 # ---------------------------------------------------------------------------
 # similarity_pq_fixed (6b) proves the ADC *arithmetic* in relational
 # form; this twin proves the actual PRODUCTION PIPELINE — the
@@ -1152,21 +1068,7 @@ def _pq_cw_sql(books: np.ndarray) -> str:
 def _pq_seed_oracle_sql(books: np.ndarray) -> str:
     return f"""
 WITH cw(m, k, c) AS (VALUES {_pq_cw_sql(books)}),
-v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-nv AS (
-  SELECT vec_id,
-         list_transform(
-           e, x -> x / greatest(sqrt(list_dot_product(e, e)), 1e-12)
-         ) AS emb
-  FROM v
-),
-subs AS (
-  SELECT vec_id, m.m AS m,
-         list_slice(emb, m.m * {PQS_SUB} + 1, (m.m + 1) * {PQS_SUB}) AS s
-  FROM nv, (SELECT unnest(range(0, {PQS_M})) AS m) m
-),
+{_pq_subs_duck(PQS_M, PQS_SUB)},
 codes AS (
   SELECT vec_id, m, k FROM (
     SELECT s.vec_id, s.m, c.k,
@@ -1189,34 +1091,15 @@ adc AS (
   WHERE codes.vec_id <> q.query_id
   GROUP BY q.query_id, codes.vec_id
 ),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY adc DESC, neighbor_id) AS rn
-    FROM adc
-  ) WHERE rn <= {PQ_RERANK_C}
-),
-vv AS (
-  SELECT vec_id, e AS emb, sqrt(list_dot_product(e, e)) AS nrm FROM v
-),
+{_ranked_duck("cand", "adc", "adc", PQ_RERANK_C)},
 scored AS (
   SELECT c.query_id, c.neighbor_id,
-         list_dot_product(q.emb, x.emb) / (q.nrm * x.nrm) AS cosine
+         list_dot_product(q.emb, x.emb) / (q.nrm * x.nrm) AS cos
   FROM cand c
-  JOIN vv x ON x.vec_id = c.neighbor_id
-  JOIN vv q ON q.vec_id = c.query_id
+  JOIN v x ON x.vec_id = c.neighbor_id
+  JOIN v q ON q.vec_id = c.query_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_cosine_topk_duck("scored")}"""
 
 
 _PQ_SEED_ORACLE = _pq_seed_oracle_sql(_PQ_SEED_BOOKS)
@@ -1246,35 +1129,39 @@ def similarity_pq_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (both live on one row), so measuring the trade costs no extra join.
 MRL_DIM = 16
 
+
+def _prefix_vectors(emb: DataFrame) -> DataFrame:
+    """``_vectors`` plus the MRL_DIM-dim prefix ``p`` and its norm
+    ``pn``. A vector whose prefix is all zero is dropped, tested on the
+    raw array as in ``_vectors``."""
+    return (
+        _vectors(emb.filter(f"exists(slice(embedding, 1, {MRL_DIM}), x -> x <> 0)"))
+        .selectExpr("*", f"slice(emb, 1, {MRL_DIM}) AS p")
+        .selectExpr("*", f"sqrt({_dot_spark('p', 'p')}) AS pn")
+    )
+
+
+# DuckDB twin of ``_prefix_vectors``: the v, pre and pv CTEs.
+_PREFIX_DUCK = f"""{_VECTORS_DUCK},
+pre AS (SELECT *, list_slice(emb, 1, {MRL_DIM}) AS p FROM v),
+pv AS (
+  SELECT *, sqrt(list_dot_product(p, p)) AS pn
+  FROM pre WHERE len(list_filter(p, x -> x <> 0)) > 0
+)"""
+
 _MRL_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         list_slice(embedding::DOUBLE[], 1, {MRL_DIM}) AS emb16
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, emb, emb16,
-         sqrt(list_dot_product(emb, emb)) AS nrm,
-         sqrt(list_dot_product(emb16, emb16)) AS nrm16
-  FROM v
-  WHERE list_dot_product(emb16, emb16) > 0
-),
+WITH {_PREFIX_DUCK},
 scored AS (
   SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-         list_dot_product(q.emb16, x.emb16) / (q.nrm16 * x.nrm16) AS cos_mrl,
+         list_dot_product(q.p, x.p) / (q.pn * x.pn) AS cos_mrl,
          list_dot_product(q.emb, x.emb) / (q.nrm * x.nrm) AS cos_full
-  FROM n q JOIN n x ON x.vec_id <> q.vec_id
+  FROM pv q JOIN pv x ON x.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_mrl, cos_full,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_mrl DESC, neighbor_id) AS rank
-  FROM scored
-)
+{_ranked_duck("ranked", "scored", "cos_mrl", TOP_K)}
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
        ROUND(cos_mrl, 6) AS cos_mrl, ROUND(cos_full, 6) AS cos_full
-FROM ranked WHERE rank <= {TOP_K}
+FROM ranked
 """
 
 
@@ -1288,43 +1175,21 @@ def similarity_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the big side) but each comparison touches MRL_DIM/EMBED_DIM of
     the floats — the memory-bandwidth dial of prefix-truncated
     embeddings; compose with IVF/PQ downstream for the full funnel."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.selectExpr(
-        "vec_id",
-        f"{_EMB_DOUBLE_SPARK} AS emb",
-        f"slice({_EMB_DOUBLE_SPARK}, 1, {MRL_DIM}) AS emb16",
-    ).selectExpr(
-        "vec_id",
-        "emb",
-        "emb16",
-        f"sqrt({_dot_spark('emb', 'emb')}) AS nrm",
-        f"sqrt({_dot_spark('emb16', 'emb16')}) AS nrm16",
-    ).filter(F.expr(f"{_dot_spark('emb16', 'emb16')} > 0"))
-    q = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "emb AS q_emb", "emb16 AS q_emb16",
-        "nrm AS q_nrm", "nrm16 AS q_nrm16",
-    )
-    scored = v.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+    pv = _prefix_vectors(load_table(spark, sf_dir, "embeddings"))
+    scored = pv.join(
+        F.broadcast(_queries(pv)), F.col("vec_id") != F.col("query_id")
     ).selectExpr(
         "query_id",
         "vec_id AS neighbor_id",
-        f"{_dot_spark('q_emb16', 'emb16')} / (q_nrm16 * nrm16) AS cos_mrl",
+        f"{_dot_spark('q_p', 'p')} / (q_pn * pn) AS cos_mrl",
         f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos_full",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_mrl").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos_mrl", 6).alias("cos_mrl"),
-            F.round("cos_full", 6).alias("cos_full"),
-        )
+    return _topk(scored, "cos_mrl", TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        F.round("cos_mrl", 6).alias("cos_mrl"),
+        F.round("cos_full", 6).alias("cos_full"),
     )
 
 
@@ -1338,35 +1203,29 @@ def similarity_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the ADC survivors. Each tier multiplies selectivity; the expensive
 # arithmetic runs on a vanishing fraction of the corpus.
 #
-# Round 9 made the funnel DETERMINISTIC and hash-gated: tiers cut at
-# GLOBAL top-C boundaries (ties broken by neighbor_id) and the PQ tier
-# uses the SEEDED-literal codebooks (6c above), so the DuckDB oracle
-# replays all three tiers exactly. (The previous formulation cut
-# top-C1/C2 per PARTITION inside one mapInPandas pass with trained
-# codebooks — a result that depended on data placement and training,
-# so it could only ever be rows-only-checked. That one-pass trained
-# pipeline still exists and is hash-gated via similarity_pq_topk /
-# similarity_pq_seeded; the funnel demonstrates the tier COMPOSITION
-# under the gate.) Tier-1/3 arithmetic stays on the raw-vector + norm
-# shape the brute-force/matryoshka oracles already pin — normalizing
-# the column with a per-element lambda would re-inline the aggregate
-# into every downstream expression (measured ~6x on tier 1); the PQ
-# tier normalizes inside its Arrow batch exactly as
-# similarity_pq_seeded's score() does.
+# The funnel is deterministic and hash-gated: tiers cut at GLOBAL top-C
+# boundaries (ties broken by neighbor_id) and the PQ tier uses the
+# SEEDED-literal codebooks (6c above), so the DuckDB oracle replays all
+# three tiers exactly. Cutting top-C1/C2 per PARTITION with trained
+# codebooks would make the result depend on data placement and
+# training; that one-pass trained pipeline is similarity_pq_topk,
+# hash-gated through similarity_pq_seeded. Tier-1/3 arithmetic stays on
+# the raw-vector + norm shape the brute-force/matryoshka oracles
+# already pin — normalizing the column with a per-element lambda would
+# re-inline the aggregate into every downstream expression (measured
+# ~6x on tier 1); the PQ tier normalizes inside its Arrow batch
+# exactly as similarity_pq_seeded's score() does.
 FUNNEL_C1 = 60  # prefix-screen survivors per query
 FUNNEL_C2 = 25  # ADC survivors per query fed to the exact rerank
 
 
 def _funnel_adc_udf():
     """Vectorized (Arrow-batched) ADC scorer for the funnel's PQ tier:
-    L2-normalize the pair (same 1e-12 floor as _pq_adc_topk), encode
-    the corpus vector against the seeded codebooks (argmin d2 per
-    subspace; np.argmin takes the FIRST minimum = lowest k, matching
-    the oracle's (d2, k) order), and accumulate the per-query LUT
-    value <q_sub, codeword>. Identical arithmetic to
-    similarity_pq_seeded's score() (whose oracle parity is
-    hash-proven), applied to <= |queries| x FUNNEL_C1 rows — a bounded
-    candidate set, not a corpus scan."""
+    encode the corpus vector against the seeded codebooks
+    (``_pq_encode``, as similarity_pq_seeded's score() does) and
+    accumulate the per-query LUT value <q_sub, codeword> of the
+    unit-scaled query, applied to <= |queries| x FUNNEL_C1 rows — a
+    bounded candidate set, not a corpus scan."""
     from pyspark.sql.functions import pandas_udf
 
     books = _PQ_SEED_BOOKS
@@ -1376,24 +1235,14 @@ def _funnel_adc_udf():
         n = len(n_emb)
         if n == 0:
             return pd.Series([], dtype="float64")
-        X = np.array(n_emb.tolist(), dtype=np.float64)
-        Q = np.array(q_emb.tolist(), dtype=np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        Xs = X.reshape(n, PQS_M, PQS_SUB)
+        codes = _pq_encode(np.array(n_emb.tolist(), dtype=np.float64), books)
+        Q = _unit(np.array(q_emb.tolist(), dtype=np.float64))
         Qs = Q.reshape(n, PQS_M, PQS_SUB)
         out = np.zeros(n)
         for m in range(PQS_M):
-            Xm = Xs[:, m, :]
-            d2 = (
-                (Xm**2).sum(axis=1, keepdims=True)
-                - 2.0 * (Xm @ books[m].T)
-                + (books[m] ** 2).sum(axis=1)[None, :]
-            )
-            # same pre-cut rounding as _pq_adc_topk's score() — see
-            # _SCORE_CUT_DECIMALS for why both cuts round
-            codes = np.argmin(np.round(d2, _SCORE_CUT_DECIMALS), axis=1)
-            out += np.einsum("nd,nd->n", Qs[:, m, :], books[m][codes])
+            out += np.einsum("nd,nd->n", Qs[:, m, :], books[m][codes[:, m]])
+        # the same pre-cut rounding as the encode — see
+        # _SCORE_CUT_DECIMALS
         return pd.Series(np.round(out, _SCORE_CUT_DECIMALS))
 
     return adc
@@ -1401,50 +1250,22 @@ def _funnel_adc_udf():
 
 _FUNNEL_ORACLE = f"""
 WITH cw(m, k, c) AS (VALUES {_pq_cw_sql(_PQ_SEED_BOOKS)}),
-v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         list_slice(embedding::DOUBLE[], 1, {MRL_DIM}) AS p
-  FROM embeddings
-),
-pv AS (
-  SELECT vec_id, e, p,
-         sqrt(list_dot_product(e, e)) AS nrm,
-         sqrt(list_dot_product(p, p)) AS pn
-  FROM v WHERE list_dot_product(p, p) > 0
-),
-q AS (
-  SELECT vec_id AS query_id, e AS q_e, p AS q_p,
-         nrm AS q_nrm, pn AS q_pn
-  FROM pv WHERE vec_id < {N_QUERIES}
-),
+{_PREFIX_DUCK},
 scored AS (
-  SELECT q.query_id, x.vec_id AS neighbor_id,
-         x.e AS n_e, x.nrm AS n_nrm, q.q_e, q.q_nrm,
-         list_dot_product(q.q_p, x.p) / (q.q_pn * x.pn) AS cos_mrl
-  FROM pv x JOIN q ON x.vec_id <> q.query_id
+  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
+         x.emb AS n_e, x.nrm AS n_nrm, q.emb AS q_e, q.nrm AS q_nrm,
+         list_dot_product(q.p, x.p) / (q.pn * x.pn) AS cos_mrl
+  FROM pv x JOIN pv q ON x.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}
 ),
-t1 AS (
-  SELECT query_id, neighbor_id, n_e, n_nrm, q_e, q_nrm FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cos_mrl DESC, neighbor_id) AS rn
-    FROM scored
-  ) WHERE rn <= {FUNNEL_C1}
-),
-t1n AS (
-  SELECT query_id, neighbor_id, n_e, n_nrm, q_e, q_nrm,
-         list_transform(
-           n_e, x -> x / greatest(sqrt(list_dot_product(n_e, n_e)), 1e-12)
-         ) AS nx,
-         list_transform(
-           q_e, x -> x / greatest(sqrt(list_dot_product(q_e, q_e)), 1e-12)
-         ) AS qx
-  FROM t1
-),
+{_ranked_duck("t1", "scored", "cos_mrl", FUNNEL_C1)},
 subs AS (
   SELECT query_id, neighbor_id, m.m AS m,
-         list_slice(nx, m.m * {PQS_SUB} + 1, (m.m + 1) * {PQS_SUB}) AS s,
-         list_slice(qx, m.m * {PQS_SUB} + 1, (m.m + 1) * {PQS_SUB}) AS qs
-  FROM t1n, (SELECT unnest(range(0, {PQS_M})) AS m) m
+         list_slice(list_transform(n_e, x -> x / n_nrm),
+                    m.m * {PQS_SUB} + 1, (m.m + 1) * {PQS_SUB}) AS s,
+         list_slice(list_transform(q_e, x -> x / q_nrm),
+                    m.m * {PQS_SUB} + 1, (m.m + 1) * {PQS_SUB}) AS qs
+  FROM t1, (SELECT unnest(range(0, {PQS_M})) AS m) m
 ),
 coded AS (
   SELECT query_id, neighbor_id, m, p FROM (
@@ -1462,36 +1283,20 @@ adc AS (
   SELECT query_id, neighbor_id, ROUND(SUM(p), 9) AS adc
   FROM coded GROUP BY query_id, neighbor_id
 ),
-t2 AS (
+{_ranked_duck("t2", "adc", "adc", FUNNEL_C2)},
+rerank AS (
   SELECT t1.query_id, t1.neighbor_id,
-         list_dot_product(t1.q_e, t1.n_e) / (t1.q_nrm * t1.n_nrm) AS cosine
-  FROM t1
-  JOIN (
-    SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY adc DESC, neighbor_id) AS rn
-      FROM adc
-    ) WHERE rn <= {FUNNEL_C2}
-  ) s USING (query_id, neighbor_id)
+         list_dot_product(t1.q_e, t1.n_e) / (t1.q_nrm * t1.n_nrm) AS cos
+  FROM t1 JOIN t2 USING (query_id, neighbor_id)
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM t2
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(cosine, 6) AS cosine
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_cosine_topk_duck("rerank")}"""
 
 
 @register(
     "similarity_funnel_mrl_pq", oracle=_FUNNEL_ORACLE, tags=("ann", "llm")
 )
 def similarity_funnel_mrl_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-tier retrieval funnel, hash-gated end to end (round 9):
+    """Three-tier retrieval funnel, hash-gated end to end:
 
     1. **MRL prefix screen** — prefix cosine on the first MRL_DIM dims
        (raw vectors + precomputed norms, the brute-force/matryoshka
@@ -1518,73 +1323,22 @@ def similarity_funnel_mrl_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay join-free; at billions of rows you would ship ids + scores
     and broadcast-join vectors back for the rerank, as
     similarity_pq_topk does."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    pv = (
-        emb.selectExpr(
-            "vec_id",
-            f"{_EMB_DOUBLE_SPARK} AS e",
-            f"slice({_EMB_DOUBLE_SPARK}, 1, {MRL_DIM}) AS p",
-        )
-        .filter(F.expr(f"{_dot_spark('p', 'p')} > 0"))
-        .selectExpr(
-            "vec_id",
-            "e",
-            "p",
-            f"sqrt({_dot_spark('e', 'e')}) AS nrm",
-            f"sqrt({_dot_spark('p', 'p')}) AS pn",
-        )
-    )
-    q = pv.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "e AS q_e", "p AS q_p",
-        "nrm AS q_nrm", "pn AS q_pn",
-    )
+    pv = _prefix_vectors(load_table(spark, sf_dir, "embeddings"))
     scored = pv.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+        F.broadcast(_queries(pv)), F.col("vec_id") != F.col("query_id")
     ).selectExpr(
         "query_id",
-        "vec_id AS neighbor_id",
-        "e AS n_e",
-        "nrm AS n_nrm",
-        "q_e",
+        "vec_id",
+        "emb",
+        "nrm",
+        "q_emb",
         "q_nrm",
         f"{_dot_spark('q_p', 'p')} / (q_pn * pn) AS cos_mrl",
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_mrl").desc(), F.col("neighbor_id")
+    t1 = _topk(scored, "cos_mrl", FUNNEL_C1, tie="vec_id").withColumn(
+        "adc", _funnel_adc_udf()(F.col("q_emb"), F.col("emb"))
     )
-    t1 = (
-        scored.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= FUNNEL_C1)
-        .select("query_id", "neighbor_id", "n_e", "n_nrm", "q_e", "q_nrm")
-    )
-    t1 = t1.withColumn(
-        "adc", _funnel_adc_udf()(F.col("q_e"), F.col("n_e"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    t2 = (
-        t1.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= FUNNEL_C2)
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_dot_spark('q_e', 'n_e')} / (q_nrm * n_nrm) AS cosine",
-        )
-    )
-    w3 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        t2.withColumn("rank", F.row_number().over(w3))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _cosine_topk(_topk(t1, "adc", FUNNEL_C2, tie="vec_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -1600,27 +1354,18 @@ HARD_NEG_K = 5
 
 
 _HARD_NEG_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
+WITH {_VECTORS_DUCK},
 scored AS (
-  SELECT q.vec_id AS anchor_id, q.label AS anchor_label,
+  SELECT q.vec_id AS query_id, q.label AS anchor_label,
          v.vec_id AS negative_id, v.label AS negative_label,
          list_dot_product(q.emb, v.emb) / (q.nrm * v.nrm) AS cos
   FROM v q JOIN v ON v.label <> q.label
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT anchor_id, anchor_label, negative_id, negative_label, cos,
-         ROW_NUMBER() OVER (PARTITION BY anchor_id
-                            ORDER BY cos DESC, negative_id) AS rank
-  FROM scored
-)
-SELECT anchor_id, anchor_label, negative_id, negative_label,
+{_ranked_duck("ranked", "scored", "cos", HARD_NEG_K, tie="negative_id")}
+SELECT query_id AS anchor_id, anchor_label, negative_id, negative_label,
        CAST(rank AS BIGINT) AS rank, ROUND(cos, 6) AS cosine
-FROM ranked WHERE rank <= {HARD_NEG_K}
+FROM ranked
 """
 
 
@@ -1638,43 +1383,23 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap the exact scan for the IVF/PQ candidate tiers and keep this
     ranking stage; mining typically runs per training epoch over the
     refreshed embedding table."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    scored = v.join(
+        F.broadcast(_queries(v)), F.col("label") != F.col("q_label")
+    ).selectExpr(
+        "query_id",
+        "q_label",
         "vec_id",
         "label",
-        F.col("embedding").cast("array<double>").alias("emb"),
-    ).select("vec_id", "label", "emb", V.l2_norm("emb").alias("nrm"))
-    q = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS anchor_id",
-        "label AS anchor_label",
-        "emb AS q_emb",
-        "nrm AS q_nrm",
+        f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
     )
-    scored = v.join(
-        F.broadcast(q), F.col("label") != F.col("anchor_label")
-    ).select(
-        "anchor_id",
-        "anchor_label",
+    return _topk(scored, "cos", HARD_NEG_K, tie="vec_id").select(
+        F.col("query_id").alias("anchor_id"),
+        F.col("q_label").alias("anchor_label"),
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("negative_label"),
-        (V.dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cos").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HARD_NEG_K)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
+        "rank",
+        F.round("cos", 6).alias("cosine"),
     )
 
 
@@ -1693,13 +1418,12 @@ MAXSIM_TOKENS = 4
 _MAXSIM_SUBDIM = EMBED_DIM // MAXSIM_TOKENS
 
 _MAXSIM_ORACLE = f"""
-WITH toks AS (
+WITH {_VECTORS_DUCK},
+toks AS (
   SELECT vec_id, t.tok,
-         list_slice(embedding::DOUBLE[],
-                    1 + t.tok * {_MAXSIM_SUBDIM},
+         list_slice(emb, 1 + t.tok * {_MAXSIM_SUBDIM},
                     (t.tok + 1) * {_MAXSIM_SUBDIM}) AS sub
-  FROM embeddings,
-       (SELECT unnest(range({MAXSIM_TOKENS})) AS tok) t
+  FROM v, (SELECT unnest(range({MAXSIM_TOKENS})) AS tok) t
 ),
 normed AS (
   SELECT vec_id, tok, sub,
@@ -1717,15 +1441,10 @@ scored AS (
   SELECT query_id, doc_id, SUM(best) AS maxsim
   FROM pertok GROUP BY query_id, doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, maxsim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY maxsim DESC, doc_id) AS rank
-  FROM scored
-)
+{_ranked_duck("ranked", "scored", "maxsim", TOP_K, tie="doc_id")}
 SELECT query_id, doc_id, CAST(rank AS BIGINT) AS rank,
        ROUND(maxsim, 6) AS maxsim
-FROM ranked WHERE rank <= {TOP_K}
+FROM ranked
 """
 
 
@@ -1743,10 +1462,7 @@ def similarity_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline — the production funnel prefixes it with an ANN
     candidate stage exactly as similarity_funnel_mrl_pq does for
     single-vector scoring."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    toks = emb.selectExpr(
-        "vec_id", f"{_EMB_DOUBLE_SPARK} AS emb"
-    ).selectExpr(
+    toks = _vectors(load_table(spark, sf_dir, "embeddings")).selectExpr(
         "vec_id",
         f"explode(transform(sequence(0, {MAXSIM_TOKENS - 1}), "
         f"t -> struct(t AS tok, slice(emb, 1 + t * {_MAXSIM_SUBDIM}, "
@@ -1758,11 +1474,8 @@ def similarity_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub",
         f"sqrt({_dot_spark('sub', 'sub')}) AS nrm",
     ).filter(F.expr(f"{_dot_spark('sub', 'sub')} > 0"))
-    q = normed.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS query_id", "tok AS q_tok", "sub AS q_sub", "nrm AS q_nrm"
-    )
     pertok = (
-        normed.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        normed.join(F.broadcast(_queries(normed)), F.col("vec_id") != F.col("query_id"))
         .selectExpr(
             "query_id",
             "vec_id AS doc_id",
@@ -1775,16 +1488,6 @@ def similarity_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pertok.groupBy("query_id", "doc_id").agg(
         F.sum("best").alias("maxsim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("maxsim", 6).alias("maxsim"),
-        )
+    return _topk(scored, "maxsim", TOP_K, tie="doc_id").select(
+        "query_id", "doc_id", "rank", F.round("maxsim", 6).alias("maxsim")
     )

@@ -32,18 +32,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from golang_etl_spark.operators.layout import _layout_dir
 from golang_etl_spark.operators.similarity import (
+    _IVF_FIXED_CENT,
     _IVF_ORACLE,
-    IVF_CENTROID_IDS,
-    IVF_NPROBE,
-    N_QUERIES,
-    TOP_K,
-    _dot_spark,
     _ivf_assign,
     _ivf_cells,
+    _ivf_oracle_sql,
+    _ivf_probes,
+    _ivf_search,
 )
 from golang_etl_spark.registry import register
 from golang_etl_spark.sources.catalog import built_from
@@ -77,31 +75,15 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
-_INDEX_BUILD_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-),
-cent AS (
-  SELECT vec_id AS cell_id, emb AS c_emb, nrm AS c_nrm
-  FROM v WHERE vec_id IN ({", ".join(map(str, IVF_CENTROID_IDS))})
-),
-assigned AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT v.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.emb, c.c_emb) / (v.nrm * c.c_nrm)
-                        DESC, c.cell_id) AS rn
-    FROM v CROSS JOIN cent c
-  ) WHERE rn = 1
-)
+_INDEX_BUILD_ORACLE = _ivf_oracle_sql(
+    _IVF_FIXED_CENT,
+    """
 SELECT cell_id, CAST(COUNT(*) AS BIGINT) AS n_vectors,
        CAST(MIN(vec_id) AS BIGINT) AS min_vec_id,
        CAST(MAX(vec_id) AS BIGINT) AS max_vec_id
 FROM assigned GROUP BY cell_id
-"""
+""",
+)
 
 
 @register(
@@ -135,55 +117,14 @@ def search_ivf_index(spark: SparkSession, root: str) -> DataFrame:
     time instead of scanning all 16 lists and filtering rows.
     """
     cent = spark.read.parquet(f"{root}/centroids")
-    queries = (
-        spark.read.parquet(f"{root}/postings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .selectExpr("vec_id AS query_id", "emb AS q_emb", "nrm AS q_nrm")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cell_id")
-    )
-    probes = (
-        queries.join(F.broadcast(cent))
-        .selectExpr(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            "cell_id",
-            f"{_dot_spark('q_emb', 'c_emb')} / (q_nrm * c_nrm) AS ccos",
-        )
-        .withColumn("rn", F.row_number().over(wprobe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "q_emb", "q_nrm", F.col("cell_id").alias("probe_cell"))
-    )
+    postings = spark.read.parquet(f"{root}/postings")
+    scored, _ = _ivf_assign(postings.drop("cell_id"), cent)
+    probes = _ivf_probes(scored).select("query_id", "q_emb", "q_nrm", "q_cell_id")
     probe_rows = probes.collect()  # bounded: N_QUERIES * IVF_NPROBE
-    probe_cells = sorted({r["probe_cell"] for r in probe_rows})
-
-    postings = spark.read.parquet(f"{root}/postings").filter(
-        F.col("cell_id").isin(probe_cells)
-    )
-    probes_df = spark.createDataFrame(probe_rows, schema=probes.schema)
-    cand = postings.join(
-        F.broadcast(probes_df),
-        (F.col("cell_id") == F.col("probe_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).selectExpr(
-        "query_id",
-        "vec_id AS neighbor_id",
-        f"{_dot_spark('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
+    probe_cells = sorted({r["q_cell_id"] for r in probe_rows})
+    return _ivf_search(
+        postings.filter(F.col("cell_id").isin(probe_cells)),
+        spark.createDataFrame(probe_rows, schema=probes.schema),
     )
 
 

@@ -7,6 +7,8 @@ dimension joins broadcast, and no operator degenerates into a
 cartesian / broadcast-nested-loop join.
 """
 
+import re
+
 import pytest
 
 from golang_etl_spark.registry import all_queries
@@ -1025,14 +1027,41 @@ def test_sql_scalar_udf_stays_in_codegen(spark, sf_dir):
     assert "partial_sum" in plan and "l_discount" in plan
 
 
-def test_funnel_tier1_cut_runs_partially_per_partition(spark, sf_dir):
-    """The funnel's scale claim: the per-query top-C1 screen must push
-    a partial WindowGroupLimit below the candidate exchange (so the
-    exchange carries <= C1 x partitions x queries rows, not the whole
-    scored cross product), and the broadcast of the tiny query side
-    must never degenerate into a cartesian product."""
-    plan = _plan(spark, sf_dir, "similarity_funnel_mrl_pq")
-    assert "WindowGroupLimit" in plan
+@pytest.mark.parametrize(
+    "name",
+    [
+        "similarity_topk_bruteforce",
+        "similarity_ann_lsh",
+        "similarity_ivf_topk",
+        "similarity_ivf_kmeans",
+        "similarity_ivf_seeded",
+        "similarity_pq_topk",
+        "similarity_pq_fixed",
+        "similarity_pq_seeded",
+        "similarity_matryoshka_topk",
+        "similarity_funnel_mrl_pq",
+        "similarity_hard_negatives",
+        "similarity_maxsim_topk",
+        "similarity_index_search",
+    ],
+)
+def test_topk_cut_runs_partially_per_partition(spark, sf_dir, name):
+    """Every per-query top-k cut (similarity._topk, a row_number window
+    partitioned by query_id) must plan as a WindowGroupLimit, and at
+    least one cut must run its Partial pass below the candidate
+    exchange, so the exchange carries <= k x partitions x queries rows,
+    not the whole scored cross product. The broadcast of the tiny query
+    side must never degenerate into a cartesian product."""
+    plan = _plan(spark, sf_dir, name)
+    lines = plan.splitlines()
+    cuts = [
+        i for i, line in enumerate(lines)
+        if "Window [row_number() windowspecdefinition(query_id" in line
+    ]
+    assert cuts, plan
+    for i in cuts:
+        assert "WindowGroupLimit" in lines[i + 1], (lines[i], plan)
+    assert re.search(r"WindowGroupLimit .*, Partial", plan), plan
     assert "CartesianProduct" not in plan
 
 

@@ -1,8 +1,10 @@
-"""Unit tests for golang_etl_spark.functions.vector — the JVM-side
-(zip_with/aggregate) vector math used by the similarity operators.
-Each Column helper is checked element-for-element against numpy on
-the same data, including the float32 -> float64 upcast path that the
-``embeddings`` table exercises (array<float> storage)."""
+"""Unit tests for the vector math of the similarity core — the one
+JVM-side (zip_with/aggregate) dot product ``dedup._dot_spark``, the
+norm and cosine the operators build from it, and the one float32 ->
+float64 upcast ``dedup._EMB_DOUBLE_SPARK``. Each expression is checked
+element-for-element against numpy on the same data, including the
+upcast path that the ``embeddings`` table exercises (array<float>
+storage)."""
 
 from __future__ import annotations
 
@@ -10,10 +12,9 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
-from golang_etl_spark.functions import vector as V
+from golang_etl_spark.operators.dedup import _EMB_DOUBLE_SPARK, _dot_spark, _vectors
 
 VECS = [
     ([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
@@ -23,15 +24,28 @@ VECS = [
 ]
 
 
+def _cosine(x: str, y: str) -> str:
+    """The engine's cosine spelling over the one dot product."""
+    return f"{_dot_spark(x, y)} / (sqrt({_dot_spark(x, x)}) * sqrt({_dot_spark(y, y)}))"
+
+
 @pytest.fixture(scope="module")
-def vec_df(spark):
+def raw_df(spark):
     schema = StructType(
         [
-            StructField("a", ArrayType(FloatType())),
+            StructField("embedding", ArrayType(FloatType())),
             StructField("b", ArrayType(FloatType())),
         ]
     )
     return spark.createDataFrame(VECS, schema)
+
+
+@pytest.fixture(scope="module")
+def vec_df(raw_df):
+    # both columns through the one float32 -> float64 upcast
+    return raw_df.selectExpr(f"{_EMB_DOUBLE_SPARK} AS a", "b AS embedding").selectExpr(
+        "a", f"{_EMB_DOUBLE_SPARK} AS b"
+    )
 
 
 def _np_pairs():
@@ -44,29 +58,29 @@ def _np_pairs():
 
 
 def test_dot_matches_numpy(vec_df):
-    got = [r[0] for r in vec_df.select(V.dot("a", "b")).collect()]
+    got = [r[0] for r in vec_df.selectExpr(_dot_spark("a", "b")).collect()]
     want = [float(np.dot(a, b)) for a, b in _np_pairs()]
     assert got == pytest.approx(want, rel=1e-12)
 
 
-def test_l2_norm_matches_numpy(vec_df):
-    got = [r[0] for r in vec_df.select(V.l2_norm("a")).collect()]
+def test_l2_norm_matches_numpy(raw_df):
+    """The loader's ``nrm`` and its upcast ``emb``."""
+    rows = _vectors(raw_df).select("emb", "nrm").collect()
+    assert [r["emb"] for r in rows] == [a.tolist() for a, _ in _np_pairs()]
     want = [float(np.linalg.norm(a)) for a, _ in _np_pairs()]
-    assert got == pytest.approx(want, rel=1e-12)
+    assert [r["nrm"] for r in rows] == pytest.approx(want, rel=1e-12)
 
 
-def test_normalize_is_unit_length(vec_df):
-    rows = vec_df.select(V.normalize("a").alias("u")).collect()
-    for (u,) in rows:
-        assert math.isclose(
-            sum(x * x for x in u), 1.0, rel_tol=1e-12
-        ), "normalized vector must have unit L2 norm"
+def test_vectors_drops_all_zero_vectors(spark):
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.0, -0.0]), (2, [0.0, 1e-30]), (3, None)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+    assert [r["vec_id"] for r in _vectors(df).collect()] == [2]
 
 
 def test_cosine_similarity_matches_numpy(vec_df):
-    got = [
-        r[0] for r in vec_df.select(V.cosine_similarity("a", "b")).collect()
-    ]
+    got = [r[0] for r in vec_df.selectExpr(_cosine("a", "b")).collect()]
     want = [
         float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
         for a, b in _np_pairs()
@@ -75,9 +89,8 @@ def test_cosine_similarity_matches_numpy(vec_df):
 
 
 def test_cosine_bounds_and_self_similarity(vec_df):
-    rows = vec_df.select(
-        V.cosine_similarity("a", "a").alias("self"),
-        V.cosine_similarity("a", "b").alias("cross"),
+    rows = vec_df.selectExpr(
+        f"{_cosine('a', 'a')} AS self", f"{_cosine('a', 'b')} AS cross"
     ).collect()
     for r in rows:
         assert math.isclose(r["self"], 1.0, rel_tol=1e-12)
